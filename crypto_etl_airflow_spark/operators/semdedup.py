@@ -23,10 +23,11 @@ Scale posture at 100 TB:
   clusters for LAION-scale data. A skewed giant cluster is the
   failure mode to watch; the cluster-size histogram is one groupBy
   away and re-seeding with a larger nlist is cheap;
-- pair scoring is the Arrow-batched :func:`_pair_score_kernel`
-  (applyInPandas over the cluster groups) — vectorized over pairs,
-  sequential over dimensions, bit-identical to the JVM fold and the
-  DuckDB oracle; candidate pairs never materialize as shuffled rows.
+- pair scoring is the Arrow :func:`_pair_score_kernel`
+  (``applyInArrow`` over the cluster groups) on the bounded-candidate
+  primitive of :mod:`.vector_kernel` — an fp32 GEMM selects, the exact
+  fold scores, bit-identical to the JVM fold and the DuckDB oracle;
+  candidate pairs never materialize as shuffled rows.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql import functions as F
 from ..functions.vector import dot as _dot, norm as _norm
 from .similarity import _nearest_centroid, ivf_centroids
 
-#: Per-task skew guard (VERDICT r16 item 5): an ``applyInPandas``
+#: Per-task skew guard (VERDICT r16 item 5): an ``applyInArrow``
 #: group is an ATOMIC task AQE cannot split, and within-cluster pair
 #: scoring is quadratic in the group — a cluster past this bound
 #: (~10⁹ candidate cells · dim flops ≈ tens of seconds for ONE task
@@ -92,32 +93,36 @@ def cluster_size_histogram(assigned: DataFrame) -> DataFrame:
     )
 
 
-def _pair_score_kernel(dim: int, threshold: float, cogroup: bool):
-    """Factory for the Arrow-batched within-cluster pair scorer.
+def _pair_score_kernel(dim: int, threshold: float, out_schema, cogroup: bool):
+    """Factory for the Arrow within-cluster pair scorer.
 
     Returns a SELF-CONTAINED closure (cloudpickle ships nested code
-    by value — no module refs on the workers, the same discipline as
-    ``similarity._nearest_centroid``) suitable for
-    ``groupBy("centroid_id").applyInPandas`` (``cogroup=False``: one
+    by value — no module refs on the workers) for
+    ``groupBy("centroid_id").applyInArrow`` (``cogroup=False``: one
     cluster per call, emit upper-triangle ``id_a < id_b`` pairs) or
-    ``cogroup(...).applyInPandas`` (``cogroup=True``: (store, batch)
+    ``cogroup(...).applyInArrow`` (``cogroup=True``: (store, batch)
     sides per cluster — emit every store×batch pair normalized to
     ``least/greatest`` plus the batch×batch upper triangle, exactly
-    the two legs of the join form it replaces).
+    the two legs of the join form it replaces). ``out_schema`` is the
+    declared Spark schema; emitted columns are cast to its Arrow types.
 
-    Why a kernel (ADVICE r15 item 4): the dim-known pair path had
-    been switched to the 64-term ``dot_unrolled`` codegen chain —
-    the SAME design r15's honest re-measurement debunked for the
-    centroid cross-score (the generated method exceeds HotSpot's
+    Why a kernel (ADVICE r15 item 4): the join form's 64-term
+    ``dot_unrolled`` codegen chain exceeds HotSpot's
     DontCompileHugeMethods limit and runs as INTERPRETED bytecode at
-    ~10 µs/dot, slower than the interpreted HOF's ~6 µs) — and the
-    pair volume Σ_c |cluster_c|² EXCEEDS the cross-score volume, so
-    the hazard was being reintroduced on the engine's largest dot
-    workload. The kernel computes each tile's score matrix
-    vectorized over pairs, SEQUENTIAL over dimensions — per pair the
-    same left-to-right IEEE fold ``((0.0 + a₁b₁) + a₂b₂) + …`` as
-    ``dot_unrolled``/``aggregate`` and the DuckDB oracle, so every
-    emitted cosine is bit-identical to the join form it replaces.
+    ~10 µs/dot, and the pair volume Σ_c |cluster_c|² exceeds the
+    centroid cross-score volume.
+
+    Scoring is the bounded-candidate primitive of
+    :mod:`.vector_kernel` (gather, representability gate, error bound
+    that scales with dim, exact fold). When every component of the
+    group passes the fp32 gate, an fp32 GEMM selects the candidates:
+    a pair is dropped only when PROVABLY below ``threshold − 1e-6``
+    (``~(S + eps < loose)``, so NaN/±Inf comparisons keep it), and
+    rows whose stored norm fails the gate (0, NaN, ±Inf,
+    denormal-range) keep all their pairs. A group that fails the gate
+    (or a threshold below −3e38) makes every pair a candidate. The
+    exact left-to-right fp64 fold then scores every candidate, so
+    every emitted cosine is bit-identical to the join form.
 
     Parity contract with the JVM join form (pinned by tests):
 
@@ -126,76 +131,55 @@ def _pair_score_kernel(dim: int, threshold: float, cogroup: bool):
       is Python's ``repr``) then HALF_UP — never numpy's banker's
       round;
     - candidate filter ``sim >= threshold`` keeps NaN (Spark's
-      NaN-largest comparison semantics) and drops NULL: a row whose
-      ``nrm`` is NULL (any NULL vector element — the norm folds over
-      all of them) or whose vector is NULL yields NULL sims in the
-      join form and emits NO pairs here (``__nrm_null`` is computed
-      JVM-side because Arrow surfaces NULL doubles as NaN, which
-      must stay DISTINCT: NaN norms score NaN and are kept); a
-      vector SHORTER than ``dim`` is also excluded — the join form
-      would CRASH there (ANSI ``element_at`` throws past the end),
-      and a single malformed vector must not kill a 100 TB job;
+      NaN-largest comparison semantics; a NaN sim is emitted as NULL)
+      and drops NULL: a row whose ``nrm`` is NULL (any NULL vector
+      element — the norm folds over all of them) or whose vector is
+      NULL yields NULL sims in the join form and emits NO pairs here.
+      Arrow keeps a NULL norm distinct from a NaN one (NaN norms score
+      NaN and are kept). A vector SHORTER than ``dim`` is also
+      excluded — the join form would CRASH there (ANSI ``element_at``
+      throws past the end), and a single malformed vector must not
+      kill a 100 TB job;
     - the rounding/filtering runs vectorized against
       ``threshold − 1e-6`` first, then exact decimal rounding on the
       sliver of candidates, so the per-pair Python cost is paid only
       on (near-)emitted pairs.
 
-    Scale shape: ONE shuffle of the vector table on ``centroid_id``
-    (the join form shuffled it twice), candidate pairs never
-    materialize as rows, and the per-task working set is
-    tile × |cluster| doubles (L2-sized tiles). The cost is that a
-    group cannot be split by AQE skew handling — the nlist ∝ corpus
-    contract (constant cluster size) is what bounds per-task work,
-    same as it bounds the join form's per-key fanout. A group that
-    EXCEEDS ``SKEW_WARN_ROWS`` emits a runtime RuntimeWarning from
-    the task (executor stderr) naming the cluster and the re-seed
-    remedy — the cheap skew guard VERDICT r16 item 5 asked for; it
-    never changes emitted pairs.
+    Scale shape: ONE shuffle of the vector table on ``centroid_id``,
+    candidate pairs never materialize as rows, and the per-task
+    working set is a tile × |cluster| score block. A group cannot be
+    split by AQE skew handling — the nlist ∝ corpus contract
+    (constant cluster size) bounds per-task work. A group that
+    EXCEEDS ``SKEW_WARN_ROWS`` emits a RuntimeWarning from the task
+    naming the cluster and the re-seed remedy; it never changes
+    emitted pairs."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    fp32 candidate pass (r17, guide §4): when every component of the
-    group is provably fp32-representable (|x| ≤ 1e15 — NaN/Inf fail
-    the gate), the full score matrix is computed by an fp32 GEMM and
-    only pairs NOT PROVABLY below ``threshold − 1e-6 − eps`` are
-    re-scored with the exact fp64 left-to-right fold — the same
-    bound-then-exact-rescore design as the assignment's BLAS path, so
-    every EMITTED cosine is still the bit-exact IEEE fold. eps is the
-    Cauchy–Schwarz error bound GAMMA32·‖a‖‖b‖/(na·nb) (+ an absolute
-    floor for fp32 subnormal flushes), with a ~25× margin over the
-    true ~70·2⁻²⁴ fp32 accumulation error; rows whose stored norms
-    fall outside [1e-15, 1e15] (0, NaN, ±Inf, denormal-range) force
-    their pairs into the candidate set outright, and the candidate
-    rule is keep-unless-provably-below (``~(S+eps < loose)``) so every
-    NaN/±Inf comparison keeps the pair for the exact pass.
-    ``SPARK_GRAFT_PAIR_GEMM32=0`` forces the legacy all-pairs fp64
-    fold — an A/B measurement knob, never a semantics switch."""
-    import os as _os
+    from .vector_kernel import vector_kernel
 
-    kdim, thr = int(dim), float(threshold)
+    arrow_schema = to_arrow_schema(out_schema)
+    build = vector_kernel(dim)
+    thr = float(threshold)
     loose = thr - 1e-6
-    # a loose bound below −3e38 is not fp32-representable (a pair
-    # whose fp32 sim saturates to −inf could still exceed it): the
-    # legacy fp64 fold handles such degenerate thresholds
-    allow32 = (
-        _os.environ.get("SPARK_GRAFT_PAIR_GEMM32", "1") != "0"
-        and loose > -3.0e38
-    )
+    skew_bound = SKEW_WARN_ROWS
 
     def _impl():
         import math
         from decimal import ROUND_HALF_UP, Context, Decimal
 
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        # explicit wide-precision context, ONE instance per worker
+        K = build()
+        # explicit wide-precision context, ONE instance per call
         # (round6 runs once per near-threshold candidate — the hot
         # sliver): quantizing a LARGE finite double to 6 dp needs
         # int_digits+6 significant digits (up to ~315 at 1e308) — the
         # default 28-digit context raises InvalidOperation there,
         # where Spark's F.round (BigDecimal.setScale, arbitrary
         # precision) returns the value unchanged; a corrupted norm
-        # sidecar must not kill the task on a parity edge. Context is
-        # read-only in quantize — thread-shared is safe.
+        # sidecar must not kill the task on a parity edge.
         _CTX = Context(prec=340)
         _Q6 = Decimal("0.000001")
 
@@ -208,168 +192,99 @@ def _pair_score_kernel(dim: int, threshold: float, cogroup: bool):
                 )
             )
 
-        def prep(pdf):
-            n = len(pdf)
-            ids = pdf["__id"].to_numpy()
-            nrm = pdf["nrm"].astype("float64").to_numpy()
-            null_nrm = pdf["__nrm_null"].to_numpy(dtype=bool)
-            V = np.zeros((n, kdim), dtype=np.float64)
-            ok = np.zeros(n, dtype=bool)
-            for r, a in enumerate(pdf["v"]):
-                if a is None or null_nrm[r]:
-                    continue
-                v = np.asarray(a, dtype=np.float64)
-                if v.shape[0] < kdim:
-                    continue
-                ok[r] = True
-                V[r] = v[:kdim]
-            return ids, nrm, ok, V
+        def prep(table):
+            V, ok = K.gather(table.column("v"))
+            nrm = table.column("nrm")
+            ok &= ~nrm.is_null().to_numpy()
+            return table.column("__id").to_numpy(), nrm.to_numpy(), ok, V
 
-        F32_MAG = 1.0e15
-        GAMMA32 = 1.0e-4
-        ABS32 = np.float32(1.0e-12)
         # round the loose bound DOWN one fp32 ulp so the downcast can
         # never exclude a pair whose exact sim sits exactly at loose
         loose32 = np.nextafter(np.float32(loose), np.float32(-np.inf))
+        abs32 = np.float32(K.ABS32)
 
-        def _exact_emit(Va, Vb, nrm_a, nrm_b, ids_a, ids_b,
-                        r_idx, c_idx, out_a, out_b, out_s):
-            """Exact fp64 left-to-right fold + engine rounding for the
-            candidate pairs — bit-identical to the all-pairs fold
-            (elementwise ops in the same dimension order)."""
-            if len(r_idx) == 0:
-                return
-            Ac = Va[r_idx]
-            Bc = Vb[c_idx]
-            acc = np.zeros(len(r_idx), dtype=np.float64)
-            prod = np.empty(len(r_idx), dtype=np.float64)
-            for i in range(kdim):
-                np.multiply(Ac[:, i], Bc[:, i], out=prod)
-                np.add(acc, prod, out=acc)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sim = acc / (nrm_a[r_idx] * nrm_b[c_idx])
-            for j in range(len(r_idx)):
-                s = round6(float(sim[j]))
-                # NaN passes (s != s): Spark NaN-largest >=
-                if s != s or s >= thr:
-                    out_a.append(ids_a[r_idx[j]])
-                    out_b.append(ids_b[c_idx[j]])
-                    out_s.append(s)
+        def side32(V, nrm):
+            """fp32 operands of one side: rows whose stored norm fails
+            the gate (0, NaN, ±Inf, denormal-range) keep all their
+            pairs; the others get their bound factor."""
+            good = K.norm_ok(nrm)
+            f = K.eps_factor(V, np.where(good, nrm, 1.0), K.GAMMA32)
+            return (
+                ~good,
+                np.where(good, f, 0.0).astype(np.float32),
+                nrm.astype(np.float32),
+            )
 
-        def pairs32(A, B, upper):
-            """fp32 GEMM candidate pass (see the factory docstring):
-            keep-unless-provably-below selection, exact fp64 rescore
-            of the sliver."""
+        def pairs(A, B, upper):
+            """Emitted ``(row_a, row_b, sim)`` positions for A × B."""
             ids_a, nrm_a, ok_a, Va = A
             ids_b, nrm_b, ok_b, Vb = B
-            out_a, out_b, out_s = [], [], []
+            out_r, out_c, out_s = [], [], []
             na, nb = len(ids_a), len(ids_b)
-            la = np.sqrt((Va * Va).sum(axis=1))
-            lb = np.sqrt((Vb * Vb).sum(axis=1))
-            with np.errstate(invalid="ignore", divide="ignore"):
-                good_a = (
-                    np.isfinite(nrm_a)
-                    & (nrm_a >= 1.0 / F32_MAG)
-                    & (nrm_a <= F32_MAG)
-                )
-                good_b = (
-                    np.isfinite(nrm_b)
-                    & (nrm_b >= 1.0 / F32_MAG)
-                    & (nrm_b <= F32_MAG)
-                )
-                # per-row eps factors: eps[i,j] = GAMMA32·(la·lb)/(na·nb)
-                # — split as sqrt(GAMMA32) per side, downcast inflated
-                g = GAMMA32 ** 0.5 * 1.001
-                fa = np.where(good_a, g * la / np.where(good_a, nrm_a, 1.0), 0.0)
-                fb = np.where(good_b, g * lb / np.where(good_b, nrm_b, 1.0), 0.0)
-            fa32 = fa.astype(np.float32)
-            fb32 = fb.astype(np.float32)
-            bad_a = ~good_a
-            bad_b = ~good_b
-            Va32 = Va.astype(np.float32)
-            Bt32 = np.ascontiguousarray(Vb.T, dtype=np.float32)
-            nrm_a32 = nrm_a.astype(np.float32)
-            nrm_b32 = nrm_b.astype(np.float32)
-            tile = max(8, (1 << 20) // (4 * nb))
+            # a loose bound below −3e38 is not fp32-representable (a
+            # pair whose fp32 sim saturates to −inf could still
+            # exceed it)
+            use32 = loose > -3.0e38 and K.fits32(Va) and K.fits32(Vb)
+            if use32:
+                bad_a, fa32, nrm_a32 = side32(Va, nrm_a)
+                bad_b, fb32, nrm_b32 = side32(Vb, nrm_b)
+                Va32 = Va.astype(np.float32)
+                Bt32 = np.ascontiguousarray(Vb.T, dtype=np.float32)
+            tile = max(8, (1 << 20) // (4 * max(nb, 1)))
             for lo in range(0, na, tile):
                 hi = min(lo + tile, na)
-                S = Va32[lo:hi] @ Bt32
-                with np.errstate(
-                    invalid="ignore", divide="ignore", over="ignore",
-                    under="ignore",
-                ):
-                    np.divide(
-                        S, nrm_a32[lo:hi, None] * nrm_b32[None, :], out=S
-                    )
-                    E = fa32[lo:hi, None] * fb32[None, :]
-                    np.add(E, ABS32, out=E)
-                    np.add(E, S, out=E)  # E := S + eps
-                    # keep unless PROVABLY below loose: NaN/±Inf
-                    # comparisons keep the pair for the exact pass
-                    cand = ~np.less(E, loose32)
-                cand |= bad_a[lo:hi, None] | bad_b[None, :]
+                if use32:
+                    S = Va32[lo:hi] @ Bt32
+                    with np.errstate(
+                        invalid="ignore", divide="ignore", over="ignore",
+                        under="ignore",
+                    ):
+                        np.divide(
+                            S, nrm_a32[lo:hi, None] * nrm_b32[None, :], out=S
+                        )
+                        E = fa32[lo:hi, None] * fb32[None, :]
+                        np.add(E, abs32, out=E)
+                        np.add(E, S, out=E)  # E := S + eps
+                        cand = ~np.less(E, loose32)
+                    cand |= bad_a[lo:hi, None] | bad_b[None, :]
+                else:
+                    cand = np.ones((hi - lo, nb), dtype=bool)
                 cand &= ok_a[lo:hi, None] & ok_b[None, :]
                 if upper:
                     cand &= ids_a[lo:hi, None] < ids_b[None, :]
                 r_idx, c_idx = np.nonzero(cand)
-                _exact_emit(
-                    Va[lo:hi], Vb, nrm_a[lo:hi], nrm_b,
-                    ids_a[lo:hi], ids_b, r_idx, c_idx,
-                    out_a, out_b, out_s,
-                )
-            return out_a, out_b, out_s
-
-        def pairs(A, B, upper):
-            ids_a, nrm_a, ok_a, Va = A
-            ids_b, nrm_b, ok_b, Vb = B
-            out_a, out_b, out_s = [], [], []
-            na, nb = len(ids_a), len(ids_b)
-            if na == 0 or nb == 0:
-                return out_a, out_b, out_s
-            if (
-                allow32
-                and np.all(np.abs(Va) <= F32_MAG)
-                and np.all(np.abs(Vb) <= F32_MAG)
-            ):
-                # NaN/Inf components fail the gate (NaN compares
-                # False) and take the legacy all-pairs fold below
-                return pairs32(A, B, upper)
-            Ct = np.ascontiguousarray(Vb.T)
-            tile = max(8, (1 << 20) // (8 * nb))
-            for lo in range(0, na, tile):
-                hi = min(lo + tile, na)
-                m = hi - lo
-                block = np.zeros((m, nb), dtype=np.float64)
-                tmp = np.empty((m, nb), dtype=np.float64)
-                # sequential fold over dimensions: bit-identical to
-                # ((0.0 + a1*b1) + a2*b2) + ... per pair
-                for i in range(kdim):
-                    np.multiply(
-                        Va[lo:hi, i : i + 1], Ct[i][None, :], out=tmp
-                    )
-                    np.add(block, tmp, out=block)
+                r_idx += lo
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    np.divide(
-                        block,
-                        nrm_a[lo:hi, None] * nrm_b[None, :],
-                        out=block,
+                    sim = K.fold(Va, Vb, r_idx, c_idx) / (
+                        nrm_a[r_idx] * nrm_b[c_idx]
                     )
-                cand = np.isnan(block) | (block >= loose)
-                cand &= ok_a[lo:hi, None] & ok_b[None, :]
-                if upper:
-                    cand &= ids_a[lo:hi, None] < ids_b[None, :]
-                for r, c in zip(*np.nonzero(cand)):
-                    s = round6(float(block[r, c]))
+                for j in np.flatnonzero(np.isnan(sim) | (sim >= loose)):
+                    s = round6(float(sim[j]))
                     # NaN passes (s != s): Spark NaN-largest >=
                     if s != s or s >= thr:
-                        out_a.append(ids_a[lo + r])
-                        out_b.append(ids_b[c])
+                        out_r.append(r_idx[j])
+                        out_c.append(c_idx[j])
                         out_s.append(s)
-            return out_a, out_b, out_s
+            return (
+                np.array(out_r, dtype=np.int64),
+                np.array(out_c, dtype=np.int64),
+                out_s,
+            )
 
-        return pd, prep, pairs
+        def emit(cid, id_a, id_b, sims):
+            """Declared-schema table; a NaN sim surfaces as NULL."""
+            cols = [
+                cid.take(np.zeros(len(sims), dtype=np.int64)),
+                id_a,
+                id_b,
+                pa.array(sims, type=pa.float64(), from_pandas=True),
+            ]
+            return pa.Table.from_arrays(
+                [c.cast(f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
 
-    skew_bound = SKEW_WARN_ROWS
+        return pa, pc, prep, pairs, emit
 
     def _skew_warn(cid, n):
         if n > skew_bound:
@@ -387,59 +302,52 @@ def _pair_score_kernel(dim: int, threshold: float, cogroup: bool):
 
     if not cogroup:
 
-        def kern(pdf):
-            pd, prep, pairs = _impl()
-            cid = pdf["centroid_id"].iloc[0] if len(pdf) else None
-            _skew_warn(cid, len(pdf))
-            P = prep(pdf)
-            a, b, s = pairs(P, P, upper=True)
-            return pd.DataFrame(
-                {
-                    "centroid_id": [cid] * len(a),
-                    "id_a": a,
-                    "id_b": b,
-                    "cosine_sim": s,
-                }
-            )
+        def kern(table):
+            if table.num_rows == 0:
+                return arrow_schema.empty_table()
+            _, _, prep, pairs, emit = _impl()
+            cid = table.column("centroid_id")
+            _skew_warn(cid[0].as_py(), table.num_rows)
+            P = prep(table)
+            r, c, s = pairs(P, P, upper=True)
+            ids = table.column("__id")
+            return emit(cid, ids.take(r), ids.take(c), s)
 
         return kern
 
-    def cokern(store_pdf, batch_pdf):
-        pd, prep, pairs = _impl()
-        cols = {"centroid_id": [], "id_a": [], "id_b": [], "cosine_sim": []}
-        if len(batch_pdf):
-            cid = batch_pdf["centroid_id"].iloc[0]
-            _skew_warn(cid, len(store_pdf) + len(batch_pdf))
-            S, B = prep(store_pdf), prep(batch_pdf)
-            # store×batch (every pair; ids disjoint by contract —
-            # least/greatest normalization exactly as the join form)
-            a, b, s = pairs(S, B, upper=False)
-            for ia, ib, sim in zip(a, b, s):
-                cols["id_a"].append(min(ia, ib))
-                cols["id_b"].append(max(ia, ib))
-                cols["cosine_sim"].append(sim)
-            # batch×batch upper triangle
-            a, b, s = pairs(B, B, upper=True)
-            cols["id_a"].extend(a)
-            cols["id_b"].extend(b)
-            cols["cosine_sim"].extend(s)
-            cols["centroid_id"] = [cid] * len(cols["id_a"])
-        return pd.DataFrame(cols)
+    id_type = arrow_schema.field("id_a").type
+
+    def cokern(store, batch):
+        if batch.num_rows == 0:
+            return arrow_schema.empty_table()
+        pa, pc, prep, pairs, emit = _impl()
+        cid = batch.column("centroid_id")
+        _skew_warn(cid[0].as_py(), store.num_rows + batch.num_rows)
+        S, B = prep(store), prep(batch)
+        s_ids = store.column("__id").cast(id_type)
+        b_ids = batch.column("__id").cast(id_type)
+        # store×batch (every pair; ids disjoint by contract —
+        # least/greatest normalization exactly as the join form)
+        r, c, s = pairs(S, B, upper=False)
+        a, b = s_ids.take(r), b_ids.take(c)
+        sb = emit(cid, pc.min_element_wise(a, b), pc.max_element_wise(a, b), s)
+        # batch×batch upper triangle
+        r, c, s = pairs(B, B, upper=True)
+        bb = emit(cid, b_ids.take(r), b_ids.take(c), s)
+        return pa.concat_tables([sb, bb])
 
     return cokern
 
 
 def _kernel_input(df: DataFrame, id_col: str) -> DataFrame:
-    """Projection feeding the pair kernel: ``__nrm_null`` is computed
-    JVM-side because Arrow's pandas conversion turns NULL doubles
-    into NaN, and the two must stay distinct (NULL norm → no pairs;
-    NaN norm → NaN sims, kept)."""
+    """Projection feeding the pair kernel: only what scoring needs.
+    The NULL-norm mask is read from the Arrow buffers, where NULL
+    stays distinct from NaN."""
     return df.select(
         F.col("centroid_id"),
         F.col(id_col).alias("__id"),
         F.col("v"),
         F.col("nrm"),
-        F.col("nrm").isNull().alias("__nrm_null"),
     )
 
 
@@ -471,11 +379,12 @@ def _pairs_from_assigned(
     length-agnostic and preserves plan-only behavior on degenerate
     tables."""
     if dim is not None:
+        schema = _pair_out_schema(assigned, id_col)
         return _kernel_input(assigned, id_col).groupBy(
             "centroid_id"
-        ).applyInPandas(
-            _pair_score_kernel(dim, threshold, cogroup=False),
-            schema=_pair_out_schema(assigned, id_col),
+        ).applyInArrow(
+            _pair_score_kernel(dim, threshold, schema, cogroup=False),
+            schema=schema,
         )
     a = assigned.select(
         "centroid_id", F.col(id_col).alias("id_a"),
@@ -603,19 +512,19 @@ def incremental_semantic_pairs(
         F.col("neighbor_id").alias("__id"),
         F.col("c_v").alias("v"),
         F.col("c_nrm").alias("nrm"),
-        F.col("c_nrm").isNull().alias("__nrm_null"),
     )
     if sdim is not None:
         # Arrow cogroup kernel: per cluster, store×batch (normalized
         # least/greatest) + batch×batch upper triangle — same two
         # legs as the join form, scored vectorized (see
         # _pair_score_kernel's parity contract)
+        schema = _pair_out_schema(batch, id_col)
         return (
             store.groupBy("centroid_id")
             .cogroup(_kernel_input(batch, id_col).groupBy("centroid_id"))
-            .applyInPandas(
-                _pair_score_kernel(sdim, threshold, cogroup=True),
-                schema=_pair_out_schema(batch, id_col),
+            .applyInArrow(
+                _pair_score_kernel(sdim, threshold, schema, cogroup=True),
+                schema=schema,
             )
         )
     # dimension-less store (pre-sidecar format): interpreted-HOF join

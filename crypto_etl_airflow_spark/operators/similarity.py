@@ -452,10 +452,11 @@ def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
 # Cross-call reuse for kernel-bearing plans (VERDICT r15 item 2).
 #
 # Spark's CacheManager matches persisted plans by CANONICAL PLAN, and a
-# ``mapInPandas`` kernel can never match across builder calls: each call
-# pickles a fresh closure, and PythonUDF equality is function-instance
-# equality. r15 measured the consequence — every same-session re-run of
-# a semdedup/IVF query re-ran the whole assignment and every persisted
+# Python kernel (``mapInArrow``/``applyInArrow``) can never match across
+# builder calls: each call pickles a fresh closure, and PythonUDF
+# equality is function-instance equality. r15 measured the
+# consequence — every same-session re-run of a semdedup/IVF query
+# re-ran the whole assignment and every persisted
 # intermediate DOWNSTREAM of it (steady regime ×3.2→×5.6/decade
 # regressions). The fix is to memoize the assignment OUTPUT at the
 # Python layer: an identical logical request returns the SAME DataFrame
@@ -470,7 +471,7 @@ def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
 # refused (None key → no memoization): two different closures print
 # identically there, so the string under-distinguishes — e.g.
 # assignment over the same corpus against nlist=16 vs nlist=32 seed
-# centroids yields the same MapInPandas canonical text. Memoized
+# centroids yields the same MapInArrow canonical text. Memoized
 # OUTPUTS therefore carry a unique `_graft_plan_key` token that
 # downstream memo keys use INSTEAD of the canonical string, which is
 # what lets ivf_centroids → _nearest_centroid chains (whose cents plan
@@ -499,6 +500,8 @@ _PY_PLAN_NODES = (
     "MapInArrow",
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
     "PythonUDF",
     "ArrowEval",
     "BatchEval",
@@ -703,16 +706,17 @@ def _nearest_centroid(
     bit-identical to the Column form and to the DuckDB oracle's fold,
     and the argmax/tie decisions cannot diverge.
 
-    On clean data (finite components, finite positive norms) a BLAS
-    fast path runs FIRST (r16): a GEMM — a different summation order,
-    so never trusted for values — SELECTS argmax candidates under a
-    rigorous error bound, and the exact fold above re-scores only
-    those candidates to make the decision; the chosen centroid is
-    bit-identical to the all-sequential form (see ``assign`` inline
-    comments and the tie/NaN stress test). This is the ×1000 decade
+    On clean data (finite components, finite positive norms) a GEMM
+    — fp32 when the data pass the representability gate, fp64
+    otherwise — runs FIRST (r16/r17): it sums in a different order, so
+    it is never trusted for values; it SELECTS argmax candidates under
+    the error bound of :mod:`.vector_kernel` (which also owns the
+    gather, the gate and the exact fold), and the exact fold above
+    re-scores only those candidates to make the decision; the chosen
+    centroid is bit-identical to the all-sequential form (pinned by
+    the tie/NaN/dim-1536 stress tests). This is the ×1000 decade
     lever: assignment is O(n·nlist·dim) with nlist ∝ corpus — the
-    engine's one super-linear term — and the GEMM runs it at
-    compute-bound instead of memory-bound speed.
+    engine's one super-linear term.
 
     WHY a Python kernel, when the repo's discipline is JVM-first
     (this is the one measured exception): the r14 answer — unroll the
@@ -810,331 +814,182 @@ def _nearest_centroid(
     # against an int32 field fails executor-side with getInt errors)
     from pyspark.sql.pandas.types import to_arrow_type
 
-    _id_arrow_type = to_arrow_type(cents.schema["centroid_id"].dataType)
-    kernel_dim = dim
-    vec_name = vec_col
-    # measurement-hygiene toggle (captured BY VALUE here so the
-    # closure stays self-contained): SPARK_GRAFT_ASSIGN_BLAS=0 forces
-    # the all-sequential path — the A/B knob behind the r16 decade
-    # numbers, never a semantics switch (the decision is bit-identical
-    # either way)
-    import os as _os
+    from .vector_kernel import vector_kernel
 
-    allow_fast = _os.environ.get("SPARK_GRAFT_ASSIGN_BLAS", "1") != "0"
-    # r17: the candidate GEMM runs in FLOAT32 when provably safe —
-    # the pass is memory-bandwidth-bound (r16 measured ~2×, not the
-    # 10× of a compute-bound GEMM), so halving the bytes is the one
-    # lever left; measured 21.2 → 12.0 s per ×1000-shaped task
-    # (62.5k × 16000 × 64). Candidates still re-score through the
-    # exact fp64 sequential fold, so the DECISION stays bit-identical;
-    # the fp32 error bound below only widens the candidate sliver
-    # (~+0.7% measured). SPARK_GRAFT_ASSIGN_GEMM32=0 forces the fp64
-    # GEMM — an A/B knob, never a semantics switch.
-    allow_32 = _os.environ.get("SPARK_GRAFT_ASSIGN_GEMM32", "1") != "0"
+    _id_arrow_type = to_arrow_type(cents.schema["centroid_id"].dataType)
+    vec_name = vec_col
+    build = vector_kernel(dim)
 
     # NOTE: ships to Python workers via cloudpickle — self-contained
     # closure over numpy arrays (pickled by value), no module refs
     def assign(batches):
         import numpy as np
+        import pyarrow as pa
 
-        # one BLAS thread per worker: 32 concurrent Python workers ×
-        # OpenBLAS's default thread-per-core GEMM would oversubscribe
-        # the machine 32×; parallelism comes from Spark tasks here.
-        # Runtime clamp via the loaded library handle (env vars are
-        # too late on a REUSED worker where numpy is already loaded);
-        # best-effort — a failure only costs scheduling noise.
-        try:
-            import ctypes
-            import glob
-            import os as _os
-
-            for _p in glob.glob(
-                _os.path.join(
-                    _os.path.dirname(np.__file__), "..", "numpy.libs",
-                    "libopenblas*",
-                )
-            ):
-                _lib = ctypes.CDLL(_p)
-                for _fn in (
-                    "openblas_set_num_threads64_",
-                    "openblas_set_num_threads",
-                ):
-                    _f = getattr(_lib, _fn, None)
-                    if _f is not None:
-                        _f(1)
-                        break
-        except Exception:
-            pass
-
+        K = build()
         neg_inf = float("-inf")
-        # packed driver-side (see above): dead rows are zeroed and
-        # score -inf against everything (engine: NULL term -> NULL
-        # sim -> -inf)
         C = C_arr
         c_dead = c_dead_arr
         norms = norms_arr
-        ids = ids_arr
-        nlist = len(ids)
-        # centroid components TRANSPOSED to (dim, nlist): the fold
-        # reads one full dimension of every centroid per iteration,
-        # and the row-major C[:, i] form gathers nlist cache lines at
-        # a 8·dim-byte stride — measured at the ×1000 decade as the
-        # difference between L2-speed and DRAM-speed inner loops
-        Ct = np.ascontiguousarray(C.T)
-        # row tile sized so block+tmp stay ~L2-resident (~1 MB each):
-        # the fold updates every (row, centroid) cell dim times, and
-        # 32 CONCURRENT workers share the L3, so per-worker tiles
-        # must be small (the first 16 MB tiling thrashed shared L3
-        # and ran ~10× slower at nlist=16k)
-        tile = max(8, (1 << 20) // (8 * nlist))
+        nlist = len(ids_arr)
+        # row tile for the all-centroid case: ~1M (row, centroid)
+        # candidate pairs per tile
+        tile = max(1, (1 << 20) // nlist)
 
-        def seq_assign(V, rows, choice):
-            """The canonical sequential fold over a row subset —
-            handles every value class (NaN/Inf/dead) and defines the
-            semantics the fast path must reproduce bit-exactly."""
+        def first_argmax(r_idx, c_idx, sim, choice):
+            """Segmented FIRST argmax over candidate scores grouped by
+            row with ascending centroid indexes — ties resolve to the
+            lowest centroid id, exactly as np.argmax over a full row."""
+            seg = np.flatnonzero(np.r_[True, r_idx[1:] != r_idx[:-1]])
+            seg_max = np.maximum.reduceat(sim, seg)
+            lens = np.diff(np.r_[seg, len(r_idx)])
+            pos = np.where(
+                sim == np.repeat(seg_max, lens),
+                np.arange(len(r_idx)),
+                len(r_idx),
+            )
+            first = np.minimum.reduceat(pos, seg)
+            choice[r_idx[seg]] = c_idx[first]
+
+        def all_cols(V, rows, choice):
+            """The semantics the fast path reproduces: every centroid
+            is a candidate, NaN sims and dead centroids score −inf
+            (engine: NULL term → NULL sim → −inf); handles every value
+            class."""
             for lo in range(0, len(rows), tile):
                 sub = rows[lo : lo + tile]
-                m = len(sub)
-                block = np.zeros((m, nlist), dtype=np.float64)
-                tmp = np.empty((m, nlist), dtype=np.float64)
-                # sequential fold over dimensions: bit-identical to
-                # ((0.0 + v1*c1) + v2*c2) + ... per cell
-                for i in range(kernel_dim):
-                    np.multiply(
-                        V[sub, i : i + 1], Ct[i][None, :], out=tmp
-                    )
-                    np.add(block, tmp, out=block)
-                np.divide(block, norms[None, :], out=block)
-                block[np.isnan(block)] = neg_inf
-                block[:, c_dead] = neg_inf
-                # first max along ascending centroid ids == lowest id
-                choice[sub] = np.argmax(block, axis=1)
+                r_idx = np.repeat(sub, nlist)
+                c_idx = np.tile(np.arange(nlist), len(sub))
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    sim = K.fold(V, C, r_idx, c_idx) / norms[c_idx]
+                sim[np.isnan(sim) | c_dead[c_idx]] = neg_inf
+                first_argmax(r_idx, c_idx, sim, choice)
 
-        # BLAS fast path (r16, the ×1000 third-decade lever): the
-        # assignment is O(n·nlist·dim) with nlist ∝ corpus — the
-        # engine's one super-linear term. A GEMM computes the same
-        # score matrix ~30× faster but in a different summation order
-        # (blocked/SIMD/FMA), so it is used ONLY to SELECT argmax
-        # candidates under a rigorous error bound, and the exact
-        # sequential fold re-scores the few candidates per row to
-        # make the DECISION — the chosen centroid is bit-identical to
-        # seq_assign's. Bound: |gemm − seq| ≤ 2·γ_dim·Σ|vᵢcᵢ| with
-        # γ_dim = dim·2⁻⁵³ (standard fp summation error, FMA only
-        # tightens it); GAMMA below carries a ~100× safety margin,
-        # which costs only a sliver of extra candidates. Fast path
-        # requires clean data — finite vector/centroid components,
-        # finite positive norms (then no NaN/Inf sim can arise);
-        # everything else routes to seq_assign.
+        # GEMM candidate selection (r16 fp64, r17 fp32): assignment is
+        # O(n·nlist·dim) with nlist ∝ corpus — the engine's one
+        # super-linear term. The GEMM only SELECTS, per row, the
+        # centroids within 2·eps of the row's best lower bound; the
+        # exact fold re-scores those to make the DECISION. Requires
+        # clean centroids (finite components, finite positive norms —
+        # then no NaN/Inf sim can arise from clean rows); everything
+        # else routes to all_cols.
         col_regular = (
             ~c_dead
             & np.isfinite(C).all(axis=1)
             & np.isfinite(norms)
             & (norms > 0)
         )
-        fast_ok = (
-            allow_fast
-            and bool((col_regular | c_dead).all())
-            and bool(col_regular.any())
+        fast_ok = bool((col_regular | c_dead).all()) and bool(
+            col_regular.any()
         )
-        GAMMA = 2.0e-12
-        # fp32 candidate-GEMM bound: cast(v) + cast(c) + product +
-        # 63-term sum + divide-by-norm each contribute ≤ ~2⁻²⁴
-        # relative per term, so |S₃₂ − seq| ≤ ~70·2⁻²⁴·Σ|vᵢcᵢ| ≈
-        # 4.2e-6·‖v‖‖c‖ — GAMMA32 carries a ~25× margin. ABS32 covers
-        # the subnormal-underflow floor of fp32 products (≤ 64·1.4e-45
-        # absolute, ≤ ~9e-29 after the ÷norm with norms ≥ F32_MAG⁻¹);
-        # both only ever WIDEN the candidate set the exact fp64 fold
-        # re-scores. F32_MAG gates representability: components and
-        # norms must sit in [1e-15, 1e15] so no product can overflow
-        # fp32 (64·1e30 ≪ 3.4e38) and no norm division can amplify the
-        # underflow floor past ABS32; anything outside routes to the
-        # fp64 GEMM tile or (non-finite) the sequential fold.
-        GAMMA32 = 1.0e-4
-        ABS32 = 1.0e-25
-        F32_MAG = 1.0e15
         if fast_ok:
             reg_idx = np.flatnonzero(col_regular)
             Creg = np.ascontiguousarray(C[col_regular])
             CregT = np.ascontiguousarray(Creg.T)
             nrm_reg = norms[col_regular]
-            # per-col error scale via Cauchy-Schwarz: Σ|vᵢcᵢ| ≤
-            # ‖v‖₂·‖c‖₂, so eps = GAMMA·‖v‖·(‖c‖/c_norm) needs only an
-            # OUTER PRODUCT of norms — not a second |V|@|C|ᵀ GEMM
+            # per-col bound factor (Cauchy–Schwarz): an OUTER PRODUCT
+            # with the row norms — not a second |V|@|C|ᵀ GEMM
             # (measured: the abs-GEMM doubled the fast path's cost)
-            cl2 = np.sqrt((Creg * Creg).sum(axis=1))
-            ceps = GAMMA * cl2 / nrm_reg
-            nreg = len(reg_idx)
-            use32 = (
-                allow_32
-                and float(np.abs(Creg).max(initial=0.0)) <= F32_MAG
-                and float(nrm_reg.min(initial=np.inf)) >= 1.0 / F32_MAG
-                and float(nrm_reg.max(initial=0.0)) <= F32_MAG
-            )
+            cf64 = K.eps_factor(Creg, nrm_reg, K.GAMMA)
+            cabs64 = np.maximum(K.ABS64 / nrm_reg, 1e-300)
+            # fp32 GEMM when the centroids pass the gate: the pass is
+            # memory-bandwidth-bound, so halving the bytes is the lever
+            # (r17: 21.2 → 12.0 s per ×1000-shaped task); rows are
+            # gated per tile below
+            use32 = K.fits32(Creg) and bool(K.norm_ok(nrm_reg).all())
             if use32:
                 Creg32T = np.ascontiguousarray(CregT, dtype=np.float32)
                 nrm_reg32 = nrm_reg.astype(np.float32)
-                ceps32 = GAMMA32 * cl2 / nrm_reg
+                cf32 = K.eps_factor(Creg, nrm_reg, K.GAMMA32).astype(
+                    np.float32
+                )
             # dead cols are -inf and can never beat a finite regular
             # sim, so the argmax is decided among regular cols only;
             # the fp32 tile budget doubles the rows per tile for the
             # same ~32 MB score block
-            _bpc = 4 if use32 else 8
-            rtile = min(65536, max(16, (32 << 20) // (_bpc * nreg)))
+            rtile = min(
+                65536,
+                max(16, (32 << 20) // ((4 if use32 else 8) * len(reg_idx))),
+            )
 
         def fast_assign(V, rows, choice):
             for lo in range(0, len(rows), rtile):
                 sub = rows[lo : lo + rtile]
                 Vb = V[sub]
-                vnorm = np.sqrt((Vb * Vb).sum(axis=1))
-                if use32 and float(np.abs(Vb).max(initial=0.0)) <= F32_MAG:
-                    # fp32 GEMM: half the memory traffic of the fp64
-                    # pass; eps uses the fp32 bound above and is
-                    # downcast CONSERVATIVELY (1.001 inflation covers
-                    # the downcast rounding) so the compares stay in
-                    # fp32 — broadcasting an fp64 eps would silently
-                    # upcast the whole score block back to fp64
+                if use32 and K.fits32(Vb):
+                    # compares stay in fp32: an fp64 eps would upcast
+                    # the whole score block back to fp64
                     S = Vb.astype(np.float32) @ Creg32T
                     np.divide(S, nrm_reg32[None, :], out=S)
-                    eps = (
-                        (vnorm[:, None] * ceps32[None, :] + ABS32) * 1.001
-                    ).astype(np.float32)
+                    ra = K.eps_factor(Vb, 1.0, K.GAMMA32)
+                    eps = ra.astype(np.float32)[:, None] * cf32[None, :]
+                    eps += np.float32(K.ABS32)
                 else:
                     S = Vb @ CregT
                     np.divide(S, nrm_reg[None, :], out=S)
-                    eps = None  # fp64 eps built below
+                    ra = K.eps_factor(Vb, 1.0, K.GAMMA)
+                    eps = ra[:, None] * cf64[None, :] + cabs64[None, :]
                 # finite inputs do not guarantee finite INTERMEDIATES:
                 # ~1e200-magnitude components overflow the GEMM (or
-                # vnorm) to inf, S−eps goes NaN, and the candidate
-                # mask comes back EMPTY for the row — reduceat on an
-                # empty segment would kill the task, and a silent
-                # position-0 default would break the bit-identical-
-                # decision contract (seq picks the +inf-scoring
-                # column). Route overflowed rows to the exact fold,
-                # whose semantics ARE the contract.
-                row_ok = np.isfinite(vnorm) & np.isfinite(S).all(axis=1)
+                # the row norm) to inf, S−eps goes NaN and the row's
+                # candidate mask comes back EMPTY. Route overflowed rows
+                # to the exact fold, whose semantics ARE the contract.
+                row_ok = np.isfinite(ra) & np.isfinite(S).all(axis=1)
                 if not row_ok.all():
-                    seq_assign(V, sub[~row_ok], choice)
-                    if not row_ok.any():
+                    all_cols(V, sub[~row_ok], choice)
+                    sub, S, eps = sub[row_ok], S[row_ok], eps[row_ok]
+                    if not len(sub):
                         continue
-                    sub = sub[row_ok]
-                    Vb = Vb[row_ok]
-                    S = S[row_ok]
-                    vnorm = vnorm[row_ok]
-                    if eps is not None:
-                        eps = eps[row_ok]
-                if eps is None:
-                    eps = vnorm[:, None] * ceps[None, :] + 1e-300
                 m_star = (S - eps).max(axis=1)
                 r_idx, c_idx = np.nonzero(S + eps >= m_star[:, None])
                 if len(r_idx) > 32 * len(sub):
                     # degenerate near-tie blowup (e.g. zero vectors:
-                    # every col ties at 0) — the exact pass would
-                    # gather candidate × dim copies; score these rows
-                    # sequentially instead
-                    seq_assign(V, sub, choice)
+                    # every col ties at 0) — score these rows over
+                    # every centroid instead
+                    all_cols(V, sub, choice)
                     continue
-                # exact sequential fold over the candidates only
-                Vc = Vb[r_idx]
-                Cc = Creg[c_idx]
-                acc = np.zeros(len(r_idx), dtype=np.float64)
-                prod = np.empty(len(r_idx), dtype=np.float64)
-                for i in range(kernel_dim):
-                    np.multiply(Vc[:, i], Cc[:, i], out=prod)
-                    np.add(acc, prod, out=acc)
-                sim = acc / nrm_reg[c_idx]
-                # the sequential fold sums in a DIFFERENT order than
-                # the GEMM (strict left-to-right vs blocked/FMA), so
-                # a row whose S was finite can still overflow HERE
-                # (partial sums that cancelled in the GEMM's order
-                # hit ±inf→NaN sequentially). A NaN sim would poison
-                # the segmented argmax below (no position matches its
-                # segment max → out-of-bounds first index); ±inf
-                # would silently break decision parity. Same remedy
-                # as row_ok: those rows belong to the exact fold.
+                r_idx = sub[r_idx]
+                c_idx = reg_idx[c_idx]
+                sim = K.fold(V, C, r_idx, c_idx) / norms[c_idx]
+                # the exact fold sums in a DIFFERENT order than the
+                # GEMM, so a row whose S was finite can still overflow
+                # HERE; ±inf/NaN would break decision parity (and NaN
+                # the segmented argmax) — those rows belong to all_cols
                 bad = ~np.isfinite(sim)
                 if bad.any():
-                    badrow = np.zeros(len(sub), dtype=bool)
-                    badrow[r_idx[bad]] = True
-                    seq_assign(V, sub[badrow], choice)
-                    keep = ~badrow[r_idx]
-                    if not keep.any():
+                    badrow = np.isin(r_idx, r_idx[bad])
+                    all_cols(V, np.unique(r_idx[badrow]), choice)
+                    keep = ~badrow
+                    r_idx, c_idx, sim = r_idx[keep], c_idx[keep], sim[keep]
+                    if not len(r_idx):
                         continue
-                    r_idx = r_idx[keep]
-                    c_idx = c_idx[keep]
-                    sim = sim[keep]
-                # segmented FIRST-argmax (cols ascend within a row ⇒
-                # ties resolve to the lowest centroid id, as argmax)
-                seg = np.flatnonzero(
-                    np.r_[True, r_idx[1:] != r_idx[:-1]]
-                )
-                seg_max = np.maximum.reduceat(sim, seg)
-                lens = np.diff(np.r_[seg, len(r_idx)])
-                pos = np.where(
-                    sim == np.repeat(seg_max, lens),
-                    np.arange(len(r_idx)),
-                    len(r_idx),
-                )
-                first = np.minimum.reduceat(pos, seg)
-                choice[sub[r_idx[seg]]] = reg_idx[c_idx[first]]
-
-        import pyarrow as pa
+                first_argmax(r_idx, c_idx, sim, choice)
 
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
-            col = batch.column(batch.schema.get_field_index(vec_name))
-            # vectorized extraction straight from the Arrow buffers
-            # (r17, guide §4.2): the r16 mapInPandas form paid a
-            # PYTHON loop over every row (2M tiny numpy objects per
-            # ×1000 task — measured as the dominant term once the
-            # GEMM was fast) plus a whole-frame pandas copy on emit.
-            # A list<double> column is one contiguous values buffer
-            # plus offsets, so the (row, dim) matrix is a single
-            # vectorized gather — zero Python per row — and rows
-            # shorter than dim / NULL vectors drop out via masks with
-            # the exact semantics of the old loop (NULL element →
-            # NaN via Arrow → routed to the sequential fold, same
-            # verdict as before).
-            offs = col.offsets.to_numpy().astype(np.int64)
-            lens = np.diff(offs)
-            valid = lens >= kernel_dim
-            if col.null_count:
-                valid &= ~col.is_null().to_numpy(zero_copy_only=False)
-            # element nulls surface as NaN (float64 conversion);
-            # zero-copy when the values carry no nulls
-            flat = col.values.to_numpy(zero_copy_only=False)
-            safe = np.where(valid, offs[:-1], 0)
-            if len(flat) == 0:
-                V = np.zeros((n, kernel_dim), dtype=np.float64)
-            else:
-                V = flat[
-                    np.minimum(
-                        safe[:, None] + np.arange(kernel_dim)[None, :],
-                        len(flat) - 1,
-                    )
-                ]
-                V[~valid] = 0.0
+            V, valid = K.gather(
+                batch.column(batch.schema.get_field_index(vec_name))
+            )
             # invalid rows default to position 0 = the lowest centroid
             # id (their sims are all -inf), as in the sequential form
             choice = np.zeros(n, dtype=np.int64)
             if fast_ok:
                 clean = valid & np.isfinite(V).all(axis=1)
-                hard = np.flatnonzero(valid & ~clean)
                 fast = np.flatnonzero(clean)
+                hard = np.flatnonzero(valid & ~clean)
                 if len(fast):
                     fast_assign(V, fast, choice)
-                if len(hard):
-                    seq_assign(V, hard, choice)
             else:
-                rows = np.flatnonzero(valid)
-                if len(rows):
-                    seq_assign(V, rows, choice)
+                hard = np.flatnonzero(valid)
+            if len(hard):
+                all_cols(V, hard, choice)
             # passthrough emit: input buffers move unchanged (no
             # pandas frame copy), one appended id column
             yield pa.RecordBatch.from_arrays(
                 [batch.column(j) for j in range(batch.num_columns)]
-                + [pa.array(ids[choice], type=_id_arrow_type)],
+                + [pa.array(ids_arr[choice], type=_id_arrow_type)],
                 names=list(batch.schema.names) + ["centroid_id"],
             )
 

@@ -34,7 +34,13 @@ _JOINS = (
     "BroadcastNestedLoopJoin",
     "CartesianProduct",
 )
-_PY_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas")
+_PY_MARKERS = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
+)
 
 
 def summarize_plan(df: DataFrame, execute: bool = False) -> PlanSummary:

@@ -526,7 +526,32 @@ def _stages(
     (:func:`_barrier_fn`). ``semdedup_nlist`` is SemDeDup's cluster
     count — 16 fits the certification fixture; the scale contract is
     nlist ∝ corpus size so clusters stay constant-sized (the decade
-    harness re-dials it per scale, tools/pipeline_scale_bench.py)."""
+    harness re-dials it per scale, tools/pipeline_scale_bench.py).
+
+    The SemDeDup branch is built on a one-thread pool owned here: on
+    success its result has been joined; if the text chain raises, the
+    pool is shut down with pending work cancelled, and the in-flight
+    fit (bounded driver jobs) finishes and its thread exits."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    pool = ThreadPoolExecutor(max_workers=1)
+    try:
+        return _build_stages(
+            spark, sf_dir, barrier, checkpoint_dir, semdedup_nlist, pool
+        )
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
+
+
+def _build_stages(
+    spark: SparkSession,
+    sf_dir: str,
+    barrier: str,
+    checkpoint_dir: str | None,
+    semdedup_nlist: int,
+    pool,
+) -> dict[str, DataFrame]:
+    """:func:`_stages` body; ``pool`` runs the SemDeDup branch."""
     from ..operators.parallel import widen_small_input
     from ..session import SMALL_INPUT_BYTES, input_dir_bytes
 
@@ -559,13 +584,9 @@ def _stages(
     # input. A single driver thread submits the branch up front and
     # the barrier jobs' straggler tails back-fill with embedding-side
     # work. Results are identical — the same DataFrame comes back,
-    # and the similarity/dedup memo layers are lock-guarded.
-    # ``SPARK_GRAFT_PIPELINE_OVERLAP=0`` forces the old inline build
-    # (an A/B measurement knob, never a semantics switch). NOTE: if
-    # the text chain raises mid-build the submitted thread finishes
-    # its bounded fit jobs and exits — nothing is left running.
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor
+    # and the similarity/dedup memo layers are lock-guarded. r17
+    # measured this overlap 0.5 s faster than the inline build in two
+    # interleaved A/Bs, so it is the only path.
 
     def _semdedup_verdicts() -> DataFrame:
         return semdedup_keep(
@@ -576,20 +597,17 @@ def _stages(
             threshold=0.4,
         )
 
-    _fut = _pool = None
-    if _os.environ.get("SPARK_GRAFT_PIPELINE_OVERLAP", "1") != "0":
-        try:
-            # documented way to run driver threads so JVM thread-local
-            # properties (job group/description/tags) are inherited
-            # and cleaned up under pinned-thread mode; Spark 4 wants
-            # the session for tag inheritance
-            from pyspark import inheritable_thread_target
+    try:
+        # documented way to run driver threads so JVM thread-local
+        # properties (job group/description/tags) are inherited
+        # and cleaned up under pinned-thread mode; Spark 4 wants
+        # the session for tag inheritance
+        from pyspark import inheritable_thread_target
 
-            _target = inheritable_thread_target(spark)(_semdedup_verdicts)
-        except Exception:
-            _target = _semdedup_verdicts
-        _pool = ThreadPoolExecutor(max_workers=1)
-        _fut = _pool.submit(_target)
+        _target = inheritable_thread_target(spark)(_semdedup_verdicts)
+    except Exception:
+        _target = _semdedup_verdicts
+    _fut = pool.submit(_target)
 
     # widen BEFORE the transform: the documents table arrives in a
     # handful of file partitions, and the regexp redaction chain is
@@ -916,13 +934,7 @@ def _stages(
     # built concurrently with the barrier chain above (see the
     # submit at the top of this function); join the thread here, at
     # the branch's dataflow position
-    if _fut is not None:
-        try:
-            verd = _fut.result()
-        finally:
-            _pool.shutdown(wait=False)
-    else:
-        verd = _semdedup_verdicts()
+    verd = _fut.result()
     verd_ids = verd.filter(F.col("is_duplicate")).select(
         F.col("vec_id").alias("doc_id")
     )

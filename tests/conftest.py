@@ -30,8 +30,9 @@ _SLOW_IDS = frozenset(
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        # node id relative to tests/: "<file>.py::<test>[param]"
-        nid = item.nodeid.split("/")[-1]
+        # node id relative to tests/: "<file>.py::<test>[param]" — strip
+        # only the leading directory, so path-valued params stay intact
+        nid = item.nodeid.removeprefix("tests/")
         if nid in _SLOW_IDS:
             item.add_marker(pytest.mark.slow)
 

@@ -1,7 +1,7 @@
 """Cross-call reuse memo for kernel-bearing plans
 (operators/similarity.py::_plan_key/_memo_*, VERDICT r15 item 2):
 same-object reuse restores canonical-plan cache matching that the
-mapInPandas closure breaks, WITHOUT ever serving a wrong or stale
+Python-kernel closure breaks, WITHOUT ever serving a wrong or stale
 DataFrame."""
 
 import shutil
@@ -50,6 +50,30 @@ def test_plan_key_refuses_in_memory_relations(spark):
     # different in-memory tables would collide (the r16 test bite)
     df = spark.createDataFrame([(1, [1.0])], "vec_id long, v array<double>")
     assert _plan_key(df) is None
+
+
+def test_plan_key_refuses_arrow_group_kernels(spark):
+    # applyInArrow group/cogroup nodes print FlatMapGroupsInArrow /
+    # FlatMapCoGroupsInArrow — no "MapInArrow" substring — and two
+    # closures print identically there, so a plan holding one (e.g.
+    # pair searches at different thresholds) must never key the memo
+    emb = _emb(spark)
+
+    def first(table):
+        return table
+
+    def left(lt, rt):
+        return lt
+
+    grouped = emb.groupBy("vec_id").applyInArrow(first, schema=emb.schema)
+    cogrouped = (
+        emb.groupBy("vec_id")
+        .cogroup(emb.groupBy("vec_id"))
+        .applyInArrow(left, schema=emb.schema)
+    )
+    assert _plan_key(emb) is not None
+    assert _plan_key(grouped) is None
+    assert _plan_key(cogrouped) is None
 
 
 def test_plan_key_distinguishes_paths_and_rewrites(spark, tmp_path):
@@ -152,15 +176,16 @@ def test_fast_assignment_bit_identical_to_column_form(spark):
     assert len(got) == len(rows)
 
 
-def test_fp32_candidate_gemm_decision_parity(spark, monkeypatch):
+def test_fp32_candidate_gemm_decision_parity(spark):
     """r17: the candidate GEMM runs in fp32 when provably safe. The
     DECISION must stay bit-identical to the Column argmax on data
     built to stress the fp32 bound: components at the subnormal
     underflow scale (fp32 products flush to 0 — covered by the ABS32
-    floor), rows past the F32_MAG representability gate (tile falls
-    back to the fp64 GEMM), exact-duplicate and 1-ulp near-tie
-    centroids, and a run with SPARK_GRAFT_ASSIGN_GEMM32=0 pinning
-    that the knob is physical-only."""
+    floor), rows with norms near 1e-15, rows past the F32_MAG
+    representability gate (tile falls back to the fp64 GEMM), and
+    exact-duplicate and 1-ulp near-tie centroids (rows equal to them
+    tie) — at dim 16 and at the real embedding widths 768 and 1536,
+    where the bound scales with dim."""
     import math
     import random
 
@@ -169,48 +194,65 @@ def test_fp32_candidate_gemm_decision_parity(spark, monkeypatch):
         _nearest_centroid_expr,
     )
 
-    random.seed(17)
-    dim = 16
+    for dim in (16, 768, 1536):
+        random.seed(17)
 
-    def vec(seed, scale=1.0):
-        rng = random.Random(seed)
-        return [rng.uniform(-1, 1) * scale for _ in range(dim)]
+        def vec(seed, scale=1.0):
+            rng = random.Random(seed)
+            return [rng.uniform(-1, 1) * scale for _ in range(dim)]
 
-    rows = [(i, vec(i)) for i in range(64)]
-    # fp32-underflow scale: products ~1e-60 flush to 0 in fp32
-    rows += [(200 + i, vec(1000 + i, scale=1e-30)) for i in range(8)]
-    # past F32_MAG (1e15): the whole tile must take the fp64 GEMM
-    rows += [(300 + i, vec(2000 + i, scale=1e16)) for i in range(8)]
-    # near-tie stress: exact duplicate of row 0's vector
-    rows += [(400, list(vec(0)))]
-    corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
+        rows = [(i, vec(i)) for i in range(64)]
+        # fp32-underflow scale: products ~1e-30 and below
+        rows += [(200 + i, vec(1000 + i, scale=1e-30)) for i in range(8)]
+        # norms near 1e-15, then the same with every component but
+        # the first at fp32-subnormal scale (products flush in fp32)
+        tiny = 1e-15 / math.sqrt(dim / 3)
+        rows += [(250 + i, vec(1500 + i, scale=tiny)) for i in range(8)]
+        rows += [
+            (260 + i, [1e-15 * v[0]] + [1e-40 * x for x in v[1:]])
+            for i, v in enumerate(vec(1700 + i) for i in range(8))
+        ]
+        # past F32_MAG (1e15): the whole tile must take the fp64 GEMM
+        rows += [(300 + i, vec(2000 + i, scale=1e16)) for i in range(8)]
+        # near-tie stress: exact duplicate of row 0's vector
+        rows += [(400, list(vec(0)))]
+        corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
 
-    cvecs = [vec(50_000 + i) for i in range(12)]
-    cvecs.append(list(cvecs[0]))  # exact duplicate → tie to lowest id
-    near = list(cvecs[1])
-    near[0] = math.nextafter(near[0], 2.0)  # 1-ulp near-tie
-    cvecs.append(near)
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cvecs)],
-        "centroid_id long, c_vec array<double>",
-    ).withColumn("c_norm", _norm(F.col("c_vec")))
+        cvecs = [vec(50_000 + i) for i in range(12)]
+        cvecs.append(list(cvecs[0]))  # exact duplicate → tie to lowest id
+        near = list(cvecs[1])
+        near[0] = math.nextafter(near[0], 2.0)  # 1-ulp near-tie
+        cvecs.append(near)
+        # rows ON the tied centroids: the best score ties exactly
+        # (0 vs 12) or within an ulp (1 vs 13)
+        corpus = corpus.unionByName(
+            spark.createDataFrame(
+                [(401, list(cvecs[0])), (402, list(cvecs[1]))],
+                "vec_id long, v array<double>",
+            )
+        )
+        cents = spark.createDataFrame(
+            [(i, c) for i, c in enumerate(cvecs)],
+            "centroid_id long, c_vec array<double>",
+        ).withColumn("c_norm", _norm(F.col("c_vec")))
 
-    want = {
-        r.vec_id: r.centroid_id
-        for r in _nearest_centroid_expr(corpus, cents, "vec_id", "v").collect()
-    }
-    for knob in ("1", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_ASSIGN_GEMM32", knob)
+        want = {
+            r.vec_id: r.centroid_id
+            for r in _nearest_centroid_expr(
+                corpus, cents, "vec_id", "v"
+            ).collect()
+        }
         got = {
             r.vec_id: r.centroid_id
             for r in _nearest_centroid(
                 corpus, cents, "vec_id", "v", dim=dim
             ).collect()
         }
-        assert got == want, f"GEMM32={knob}"
+        assert got == want, f"dim={dim}"
+        assert got[401] == 0, f"dim={dim}"
 
 
-def test_fp32_disabled_for_out_of_range_centroids(spark, monkeypatch):
+def test_fp32_disabled_for_out_of_range_centroids(spark):
     """A centroid set outside the fp32 representable gate (tiny
     norms) must disable the fp32 path entirely — decisions still
     match the Column form through the fp64 GEMM / sequential fold."""
@@ -235,7 +277,6 @@ def test_fp32_disabled_for_out_of_range_centroids(spark, monkeypatch):
         [(i, c) for i, c in enumerate(cvecs)],
         "centroid_id long, c_vec array<double>",
     ).withColumn("c_norm", _norm(F.col("c_vec")))
-    monkeypatch.setenv("SPARK_GRAFT_ASSIGN_GEMM32", "1")
     got = {
         r.vec_id: r.centroid_id
         for r in _nearest_centroid(corpus, cents, "vec_id", "v", dim=dim)

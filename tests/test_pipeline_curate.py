@@ -118,3 +118,42 @@ def test_trained_gate_drops_every_planted_junk_doc(spark):
         .count()
     )
     assert dropped_clean <= 0.05 * g1.filter(~junk).count()
+
+
+def test_text_chain_error_leaves_no_running_fit_thread(spark, monkeypatch):
+    """A raise in the text chain propagates, and the SemDeDup branch's
+    pool thread exits once its in-flight fit returns (the pool is shut
+    down with pending work cancelled — no thread left running)."""
+    import threading
+
+    import pytest
+
+    from crypto_etl_airflow_spark.operators import parallel
+    from crypto_etl_airflow_spark.plans import pipeline_curate
+
+    started, release = threading.Event(), threading.Event()
+    fit_thread = {}
+
+    def slow_fit(*args, **kwargs):
+        fit_thread["t"] = threading.current_thread()
+        started.set()
+        release.wait(60)
+
+    def failing_widen(df):
+        # raise only once the fit is in flight, so the shutdown
+        # cannot simply cancel it before it starts
+        assert started.wait(60)
+        raise RuntimeError("text chain failed")
+
+    monkeypatch.setattr(pipeline_curate, "semdedup_keep", slow_fit)
+    monkeypatch.setattr(parallel, "widen_small_input", failing_widen)
+    # the caller keeps the traceback (and with it the failed frame)
+    # alive, so only an explicit shutdown can let the thread exit
+    with pytest.raises(RuntimeError, match="text chain failed") as err:
+        pipeline_curate._stages(spark, SF)
+    t = fit_thread["t"]
+    assert t.is_alive()  # the in-flight fit is not interrupted
+    release.set()
+    t.join(60)
+    assert not t.is_alive()
+    assert err.traceback

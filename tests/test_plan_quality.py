@@ -16,16 +16,25 @@ from crypto_etl_airflow_spark.plans.registry import all_specs
 
 from .conftest import SF_SMOKE
 
-_PYTHON_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "PythonUDF", "FlatMapGroupsInPandas")
+_PYTHON_MARKERS = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "PythonUDF",
+    "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
+)
+_GROUP_KERNELS = ("FlatMapGroupsInArrow", "FlatMapCoGroupsInArrow")
 
 _EXCLUDED_TAGS = {"streaming", "ingest"}
 # Arrow-batched kernels sanctioned BY DESIGN, each with a docstring-
 # pinned bit-parity contract and an oracle-certified registered query:
 # the multimodal decode (mapInPandas) and the semdedup pair scorer
-# (applyInPandas → FlatMapGroupsInPandas/FlatMapCoGroupsInPandas —
+# (applyInArrow → FlatMapGroupsInArrow/FlatMapCoGroupsInArrow —
 # ADVICE r15: the dim-known pair path must never run as a codegen'd
 # 64-term dot chain, which HotSpot refuses to JIT). Row-at-a-time
-# markers (BatchEvalPython/PythonUDF) stay banned everywhere.
+# markers (BatchEvalPython/PythonUDF) and pandas group kernels stay
+# banned everywhere.
 _PYTHON_BY_DESIGN = {
     "multimodal_features",
     "embedding_semdedup_pairs",
@@ -34,6 +43,14 @@ _PYTHON_BY_DESIGN = {
     "pipeline_curate_corpus",
     "pipeline_curate_funnel",
     "pipeline_curate_dsir_sample",
+}
+
+# queries whose registered plan holds the SemDeDup pair search
+# (dedup_incremental_semantic collects its cogroup result — its kernel
+# plan is pinned in test_semdedup_incremental.py)
+_SEMDEDUP_PAIR_PLANS = _PYTHON_BY_DESIGN - {
+    "multimodal_features",
+    "dedup_incremental_semantic",
 }
 
 SPECS = [
@@ -49,10 +66,10 @@ def test_plan_has_no_python_eval(spark, spec):
     plan = df._jdf.queryExecution().executedPlan().toString()
     markers = _PYTHON_MARKERS
     if spec.name in _PYTHON_BY_DESIGN:
-        # group kernels allowed; row-at-a-time still banned
-        markers = tuple(
-            m for m in _PYTHON_MARKERS if m != "FlatMapGroupsInPandas"
-        )
+        # Arrow group kernels allowed; row-at-a-time still banned
+        markers = tuple(m for m in _PYTHON_MARKERS if m not in _GROUP_KERNELS)
+    if spec.name in _SEMDEDUP_PAIR_PLANS:
+        assert "FlatMapGroupsInArrow" in plan, f"{spec.name}: {plan[:2000]}"
     hits = [m for m in markers if m in plan]
     assert not hits, f"{spec.name}: Python evaluation in plan: {hits}"
 

@@ -107,3 +107,47 @@ def test_empty_batch_yields_no_pairs(spark, tmp_path):
     empty = corpus.filter(F.col("vec_id") < 0)
     out = incremental_semantic_pairs(empty, path, threshold=THRESHOLD)
     assert out.count() == 0
+
+
+def test_cogroup_kernel_bit_identical_to_join_form(spark, tmp_path):
+    """The cogroup Arrow kernel (store×batch normalized to
+    least/greatest, plus the batch×batch upper triangle) must emit
+    exactly the join form's pairs, cosines compared as raw double
+    bits. Reference: the legacy unrolled join over store ∪ batch
+    under the index's frozen quantizer, restricted to batch-involving
+    pairs — both legs of the incremental search."""
+    import math
+
+    from .test_semdedup import _legacy_pairs
+
+    path = str(tmp_path / "idx")
+    corpus = _vecs(spark, n=24)
+    store = corpus.filter(F.col("vec_id") % 3 != 0)
+    batch = corpus.filter(F.col("vec_id") % 3 == 0)
+    ann_index.build_ivf_index(store, path, nlist=NLIST)
+
+    out = incremental_semantic_pairs(batch, path, threshold=THRESHOLD)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in plan, plan[:2000]
+    got = sorted(map(tuple, out.collect()))
+    cents = ann_index.read_ivf_centroids(spark, path)
+    assigned = _nearest_centroid(
+        corpus.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ),
+        cents,
+        "vec_id",
+        "v",
+        dim=8,
+    ).withColumn("nrm", _norm(F.col("v")))
+    batch_ids = {r.vec_id for r in batch.select("vec_id").collect()}
+    want = sorted(
+        tuple(r)
+        for r in _legacy_pairs(assigned, "vec_id", THRESHOLD, 8).collect()
+        if r.id_a in batch_ids or r.id_b in batch_ids
+    )
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    # store×batch pairs present, not just the batch×batch triangle
+    assert any((r[1] in batch_ids) != (r[2] in batch_ids) for r in got)
+    for g, w in zip(got, want):
+        assert not math.isnan(g[3]) and g[3].hex() == w[3].hex()

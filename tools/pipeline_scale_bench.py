@@ -159,8 +159,8 @@ def main() -> None:
     # funnel stage counts are posture-independent.
     # SPARK_GRAFT_REUSE_LEVEL forces one _reuse StorageLevel on BOTH
     # sides — the A/B measurement knob behind the r16 reuse-posture
-    # numbers (same discipline as SPARK_GRAFT_ASSIGN_BLAS: a
-    # measurement override, never an engine semantics switch).
+    # numbers (a measurement override, never an engine semantics
+    # switch).
     # Validated HERE: _reuse falls back to the default on unknown
     # names, which would record one level in the posture JSON while
     # silently measuring the other — the exact corruption an A/B

@@ -44,6 +44,8 @@ _ARROW_KERNELS = (
     "MapInArrow",
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
 )
 
 
