@@ -224,7 +224,7 @@ def add_to_ivf_index(
     store anti-join discipline). The quantizer never retrains on add —
     identical to FAISS ``add`` semantics; rebuild when drift warrants.
     Returns vectors appended."""
-    from .upsert import _lineage_barrier
+    from .upsert import _counted_barrier
 
     spark = new_vecs.sparkSession
     _check_dim(path, new_vecs, vec_col, "add")
@@ -243,8 +243,7 @@ def add_to_ivf_index(
         "c_v",
         dim=_stored_dim(path),
     ).withColumn("c_nrm", _norm(F.col("c_v")))
-    assigned = _lineage_barrier(spark, assigned, None)
-    n = assigned.count()
+    assigned, n = _counted_barrier(spark, assigned, None)
     if n:
         assigned.write.mode("append").partitionBy("centroid_id").parquet(
             f"{path}/lists"

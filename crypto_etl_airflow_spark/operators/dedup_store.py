@@ -552,7 +552,7 @@ def write_shingle_store(
     append are healed (removed) before any write or store read."""
     import os
 
-    from .upsert import _lineage_barrier
+    from .upsert import _counted_barrier
 
     spark = docs.sparkSession
     params = {"n": n}
@@ -571,8 +571,7 @@ def write_shingle_store(
     # materialize the delta once: it feeds the row append, the new
     # membership, and the count merge, and must not lazily re-read
     # the rows table it is being appended to
-    fresh = _lineage_barrier(spark, fresh, None)
-    written = fresh.count()
+    fresh, written = _counted_barrier(spark, fresh, None)
     if written:
         fresh.write.mode("append").parquet(_rows_path(path))
     _ensure_store_exists(sh, _rows_path(path))

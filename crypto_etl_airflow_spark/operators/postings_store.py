@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _reuse
 from .dedup_store import _ensure_store_exists
-from .upsert import _lineage_barrier
+from .upsert import _counted_barrier, _lineage_barrier
 
 _PARAMS = {"tokenizer": "ws_lower", "version": 2}
 _SIDECAR = "_postings_store_params.json"
@@ -244,8 +244,7 @@ def write_postings_store(
     # stats base must be read against the PRE-mutation fingerprint
     base_stats = _valid_stats(spark, path)
     epoch = _max_epoch(spark, path) + 1
-    fresh = _lineage_barrier(spark, fresh, None)
-    n = fresh.count()
+    fresh, n = _counted_barrier(spark, fresh, None)
     if n:
         tok = _reuse(_tokens(fresh, id_col, text_col))
         postings = tok.groupBy(id_col, "term").agg(

@@ -421,7 +421,7 @@ def add_to_ivfpq_index(
     codebook and append to its lists, idempotently per id — identical
     contract to ``add_to_ivf_index`` (retrain = rebuild). Returns
     vectors appended."""
-    from .upsert import _lineage_barrier
+    from .upsert import _counted_barrier
 
     spark = new_vecs.sparkSession
     _check_dim(path, new_vecs, vec_col, "add")
@@ -445,8 +445,7 @@ def add_to_ivfpq_index(
     ).join(
         encoded.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
     ).select("neighbor_id", "codes", "v_nrm", "centroid_id")
-    lists = _lineage_barrier(spark, lists, None)
-    n = lists.count()
+    lists, n = _counted_barrier(spark, lists, None)
     if n:
         lists.write.mode("append").partitionBy("centroid_id").parquet(
             f"{path}/codes"
@@ -534,7 +533,7 @@ def rebalance_ivfpq_index(
     import os
 
     from .compact import recover_tree, swap_directory
-    from .upsert import _lineage_barrier
+    from .upsert import _counted_barrier, _lineage_barrier
 
     codes_path = f"{path.rstrip('/')}/codes"
     recover_tree(codes_path)
@@ -563,8 +562,8 @@ def rebalance_ivfpq_index(
         part = spark.read.parquet(part_dir)
         n_part = size_by_cid[cid]
         joined = part.select("neighbor_id", "v_nrm").join(raw, "neighbor_id")
-        joined = _lineage_barrier(spark, joined, None)
-        if joined.count() != n_part:
+        joined, n_joined = _counted_barrier(spark, joined, None)
+        if n_joined != n_part:
             raise ValueError(
                 f"rebalance of pq index {path}: corpus is missing raw "
                 f"vectors for list centroid_id={cid}; residual codes "

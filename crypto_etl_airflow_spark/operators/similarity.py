@@ -40,6 +40,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine, dot as _dot, norm as _norm  # noqa: F401 — cosine re-exported for callers
+from ..sources.local import local_frame
 from .parallel import widen_small_input as _widen
 
 
@@ -237,10 +238,12 @@ def rhp_bucket_rows(
     (t, bucket), one output row per (input row, table), from ONE scan.
 
     The hyperplanes travel as a broadcast DATA table (one row per
-    hash table, holding its planes as ``array<array<double>>``) —
-    inlining tables×planes×dim literals into the expression tree
-    (a since-removed per-table variant did this) makes analysis/
-    codegen the dominant cost long before the data is large. The
+    hash table, holding its planes as ``array<array<double>>``; a
+    driver-local relation, so no action over it starts Python
+    workers) — inlining tables×planes×dim literals into the
+    expression tree (a since-removed per-table variant did this)
+    makes analysis/codegen the dominant cost long before the data is
+    large. The
     DuckDB oracles re-derive the same planes in SQL. Values are identical:
     the same exact dyadic-rational components, the same sequential
     dot-product fold, ``bucket = Σ (1<<i)·[v·plane_i ≥ 0]``. No
@@ -251,7 +254,7 @@ def rhp_bucket_rows(
         (t, [hyperplane_components(t, i, dim) for i in range(num_planes)])
         for t in range(num_tables)
     ]
-    planes = spark.createDataFrame(rows, "t INT, pws ARRAY<ARRAY<DOUBLE>>")
+    planes = local_frame(spark, rows, "t INT, pws ARRAY<ARRAY<DOUBLE>>")
     weights = F.array(*[F.lit(1 << i).cast("long") for i in range(num_planes)])
     sign_bits = F.zip_with(
         F.col("pws"),

@@ -9,8 +9,12 @@ Spark realization:
 
 1. within-batch dedup: ``dropDuplicates(keys)``;
 2. against-table dedup: **left-anti join** of the new batch against
-   the existing table's key projection;
-3. append write.
+   the existing table's key projection, read with the batch's own key
+   schema (no footer-inference job);
+3. read-before-write barrier: ONE checkpoint job materializes the
+   fresh rows, and an ``Observation`` on top of its plan counts them
+   — that observed count is the written count, no second ``count()``;
+4. append write.
 
 Scale posture: the anti-join reads ONLY the key columns of the
 existing table (column pruning reaches the parquet scan), and when
@@ -32,7 +36,7 @@ import functools
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -62,6 +66,15 @@ def upsert_append(
     ``prune_filter`` optionally restricts the existing-table read
     (e.g. a date-range predicate over the partition column) so the
     anti-join scans only the partitions the batch can collide with.
+    The existing keys are read with the key schema the batch already
+    carries, so no footer-inference job runs; a warehouse whose key
+    columns cannot be read as the batch's types fails the read.
+
+    The write costs one barrier job plus the append (see
+    :func:`_counted_barrier`): the barrier's observed row count IS the
+    written count, and the batch is probed for emptiness only when
+    that count is 0 — an empty batch raises :class:`EmptyBatchError`
+    unless ``allow_empty``.
 
     ``checkpoint_dir`` switches the read-before-write barrier to a
     RELIABLE checkpoint beneath that directory: ``localCheckpoint``
@@ -70,11 +83,6 @@ def upsert_append(
     fragile); a reliable checkpoint survives it. Default keeps the
     single-node zero-IO path.
     """
-    if batch.isEmpty():
-        if allow_empty:
-            return 0
-        raise EmptyBatchError("No data to load: empty batch")
-
     fresh = batch.dropDuplicates(keys)
 
     # heal any crashed swap (table-level or leaf-partition aside dirs)
@@ -87,20 +95,23 @@ def upsert_append(
     recover_tree(path)
 
     if table_exists(spark, path):
-        existing_keys = spark.read.parquet(path).select(*keys)
+        existing_keys = (
+            spark.read.schema(batch.select(*keys).schema).parquet(path).select(*keys)
+        )
         if prune_filter is not None:
             existing_keys = existing_keys.filter(prune_filter)
         fresh = fresh.join(existing_keys, on=keys, how="left_anti")
 
-    # checkpoint truncates lineage: the append must not lazily
+    # the barrier truncates lineage: the append must not lazily
     # re-read the very path it is writing into (read-before-write)
-    fresh = _lineage_barrier(spark, fresh, checkpoint_dir)
-    n = fresh.count()
+    fresh, n = _counted_barrier(spark, fresh, checkpoint_dir)
     if n:
         writer = fresh.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
+    elif not allow_empty and batch.isEmpty():
+        raise EmptyBatchError("No data to load: empty batch")
     return n
 
 
@@ -115,6 +126,21 @@ def _lineage_barrier(
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def _counted_barrier(
+    spark: SparkSession, df: DataFrame, checkpoint_dir: str | None
+) -> tuple[DataFrame, int]:
+    """:func:`_lineage_barrier`, plus ``df``'s row count from the same
+    job: an :class:`Observation` on the top of the checkpointed plan,
+    collected by the checkpoint's own job instead of a second
+    ``count()``. On top, it counts exactly the rows the checkpoint
+    holds, after every join or filter in ``df``."""
+    obs = Observation()
+    out = _lineage_barrier(
+        spark, df.observe(obs, F.count(F.lit(1)).alias("n")), checkpoint_dir
+    )
+    return out, obs.get["n"]
 
 
 def _swap_partition_dirs(staging: str, path: str, depth: int) -> None:
@@ -177,10 +203,11 @@ def merge_replace_keys(
     # clobber the crashed partition's rows.
     recover_tree(path)
 
-    if batch.isEmpty():
+    fresh, n_fresh = _counted_barrier(
+        spark, batch.dropDuplicates(keys), checkpoint_dir
+    )
+    if not n_fresh:
         return (0, 0)
-    fresh = _lineage_barrier(spark, batch.dropDuplicates(keys), checkpoint_dir)
-    n_fresh = fresh.count()
 
     staging = path.rstrip("/") + ".__merge_tmp"
 
@@ -302,19 +329,17 @@ def upsert_append_sink(
     (within-batch dropDuplicates → anti-join vs the sink's existing
     keys → append) against a relational sink — the engine's parity
     path for the reference's transactional Postgres load. Returns
-    rows written."""
+    rows written. An empty batch is refused before the database is
+    touched (its table may not exist yet)."""
     if batch.isEmpty():
         if allow_empty:
             return 0
         raise EmptyBatchError("No data to load: empty batch")
-
     fresh = batch.dropDuplicates(keys)
     existing_keys = sink.read_keys(spark, keys)
     if existing_keys is not None:
         fresh = fresh.join(existing_keys.select(*keys), on=keys, how="left_anti")
-
-    fresh = fresh.localCheckpoint(eager=True)
-    n = fresh.count()
+    fresh, n = _counted_barrier(spark, fresh, None)
     if n:
         sink.append(fresh)
     return n

@@ -11,6 +11,15 @@ is :func:`json_payload_to_df`, load is the idempotent
 raises on violation. Stages hand each other a lazy DataFrame — XCom,
 Celery and the metadata DB have no equivalent because nothing is
 serialized between stages.
+
+A tick stays inside the JVM and runs few Spark jobs: the payload is a
+driver-local relation (no Python workers), the load is one barrier
+job whose observed count is the rows written, plus the append, and
+the gate reads the warehouse with the schema the batch carries, so
+neither read runs a footer-inference job. Under the posture
+``session.tune_execution`` picks for a tick's few-KB input (AQE off),
+a steady tick runs 4 jobs (the anti-join's broadcast, barrier,
+append, gate) and the first runs 3.
 """
 
 from __future__ import annotations
@@ -113,7 +122,7 @@ def run_ingest_pipeline(
 
     # quality gate over the whole warehouse (reference :109-130 +
     # include/soda/checks.yml)
-    table = spark.read.parquet(warehouse_path)
+    table = spark.read.schema(batch.schema).parquet(warehouse_path)
     scan = run_scan(
         table,
         [

@@ -12,6 +12,13 @@ JVM-side expressions inside whole-stage codegen. The same plan works
 unchanged when the input is millions of payload documents read from a
 landing zone instead of one driver-fetched string.
 
+The driver-fetched string enters as a driver-local relation
+(:func:`.local.local_frame`, plan ``LocalTableScan``), not as
+``createDataFrame([(payload,)])``: a Python list becomes a PythonRDD,
+and every action over the batch — the load's barrier and, when it
+counts 0 rows, its emptiness probe — would start Python workers to
+replay one pickled string.
+
 Reference semantics preserved:
 - empty payload raises (reference :45-46 raises ValueError);
 - ``extracted_at`` is constant per batch (reference :56 assigns one
@@ -29,6 +36,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .local import local_frame
 
 PRICE_SCHEMA_COLUMNS = ("crypto_id", "price_usd", "extracted_at")
 
@@ -56,7 +65,7 @@ def json_payload_to_df(
     if not payload_json or payload_json.strip() in ("", "{}", "null"):
         raise ValueError("No data to transform: empty payload")
 
-    raw = spark.createDataFrame([(payload_json,)], "payload string")
+    raw = local_frame(spark, [(payload_json,)], "payload string")
     ts_col = (
         F.lit(extracted_at).cast("timestamp")
         if extracted_at is not None

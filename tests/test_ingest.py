@@ -56,3 +56,14 @@ def test_distributed_payloads_variant(spark):
     out = payloads_to_df(src).collect()
     assert len(out) == 5
     assert {r.batch for r in out} == {"batch1", "batch2"}
+
+
+def test_payload_is_a_local_relation(spark):
+    """The driver-fetched payload enters as a LocalRelation, not a
+    PythonRDD (``Scan ExistingRDD``), so actions over the batch start
+    no Python workers."""
+    df = json_payload_to_df(spark, PAYLOAD, extracted_at=TS)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert df.count() == 4

@@ -111,3 +111,42 @@ def test_pipeline_retries_transient_extract_failure(spark, tmp_path):
     )
     assert written == 4 and not scan.failed
     assert fails["n"] == 3 and slept == [120.0, 120.0]
+
+
+@pytest.fixture
+def tiny_posture(spark):
+    """The size-aware posture ``session.tune_execution`` picks for an
+    hourly tick's few-KB input (AQE off, one shuffle partition),
+    restored afterwards."""
+    confs = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "1"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def test_tick_job_budget(spark, tmp_path, tiny_posture):
+    """A tick is a handful of Spark jobs: the first (no table yet) runs
+    the barrier, the append and the gate; a steady one adds the anti-
+    join's broadcast. No second count and no footer-inference read;
+    only a re-sent hour, which writes nothing, trades the append for
+    the emptiness probe."""
+    wh = str(tmp_path / "crypto_prices")
+    sc = spark.sparkContext
+    jobs = []
+    for i, (minutes, expected) in enumerate(((90, 4), (60, 4), (30, 4), (30, 0))):
+        group = f"tick-budget-{i}"
+        sc.setJobGroup(group, "hourly tick")
+        try:
+            written, scan = run_ingest_pipeline(
+                spark, wh, fetch=fake_fetch,
+                extracted_at=NOW - dt.timedelta(minutes=minutes), now=NOW,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert written == expected and not scan.failed
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] <= 3, jobs
+    assert max(jobs[1:]) <= 4, jobs

@@ -2,6 +2,7 @@
 contract (reference dags/crypto-etl-pipeline-psql.py:85-89)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,6 +75,99 @@ def test_empty_batch_raises(spark, tmp_path):
     with pytest.raises(EmptyBatchError):
         upsert_append(spark, _batch(spark, []), path, KEYS)
     assert upsert_append(spark, _batch(spark, []), path, KEYS, allow_empty=True) == 0
+
+
+def _parquet_files(path):
+    return sorted(
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+@pytest.fixture(params=["true", "false"], ids=["aqe_on", "aqe_off"])
+def aqe(spark, request):
+    saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", request.param)
+    yield
+    spark.conf.set("spark.sql.adaptive.enabled", saved)
+
+
+def test_resend_and_empty_batch_leave_table_untouched(spark, tmp_path, aqe):
+    """The written count is observed on top of the barrier's plan; with
+    AQE on and off a re-sent batch (every row anti-joined away) counts
+    0 and an empty batch still raises, and neither adds a file."""
+    path = str(tmp_path / "t")
+    batch = _batch(spark, [("btc", 1.0, T0), ("eth", 2.0, T0)])
+    assert upsert_append(spark, batch, path, KEYS) == 2
+    files = _parquet_files(path)
+    assert upsert_append(spark, batch, path, KEYS) == 0
+    assert _parquet_files(path) == files
+    for empty in (_batch(spark, []), batch.filter(F.lit(False))):
+        with pytest.raises(EmptyBatchError):
+            upsert_append(spark, empty, path, KEYS)
+        assert upsert_append(spark, empty, path, KEYS, allow_empty=True) == 0
+    assert _parquet_files(path) == files
+
+
+def test_reliable_checkpoint_counts_match_default_barrier(spark, tmp_path):
+    batches = [
+        _batch(spark, [("btc", 1.0, T0), ("eth", 2.0, T0)]),
+        _batch(spark, [("btc", 1.0, T0)]),
+        _batch(spark, [("btc", 1.0, T0), ("sol", 3.0, T1), ("sol", 3.0, T1)]),
+    ]
+    local = [upsert_append(spark, b, str(tmp_path / "a"), KEYS) for b in batches]
+    reliable = [
+        upsert_append(
+            spark, b, str(tmp_path / "b"), KEYS, checkpoint_dir=str(tmp_path / "ck")
+        )
+        for b in batches
+    ]
+    assert local == reliable == [2, 0, 1]
+    assert spark.read.parquet(str(tmp_path / "b")).count() == 3
+
+
+def test_partitioned_prune_filter_counts(spark, tmp_path):
+    """The batch-schema read of a partitioned table still discovers the
+    partition column, so ``prune_filter`` on it resolves and the
+    anti-join sees the keys of the partitions it keeps."""
+    path = str(tmp_path / "t")
+    T2 = dt.datetime(2024, 1, 2, 0, 0)
+
+    def dated(rows):
+        return _batch(spark, rows).withColumn("dt", F.to_date("extracted_at"))
+
+    first = dated([("btc", 1.0, T0), ("eth", 2.0, T0), ("btc", 1.5, T2)])
+    assert upsert_append(spark, first, path, KEYS, partition_by=["dt"]) == 3
+    later = F.col("dt") >= F.lit("2024-01-02").cast("date")
+    again = dated([("btc", 9.0, T2), ("eth", 2.5, T2)])
+    assert upsert_append(
+        spark, again, path, KEYS, partition_by=["dt"], prune_filter=later
+    ) == 1
+    assert upsert_append(
+        spark, again, path, KEYS, partition_by=["dt"], prune_filter=later
+    ) == 0
+    got = sorted((r.crypto_id, str(r.dt)) for r in spark.read.parquet(path).collect())
+    assert got == [
+        ("btc", "2024-01-01"), ("btc", "2024-01-02"),
+        ("eth", "2024-01-01"), ("eth", "2024-01-02"),
+    ]
+
+
+def test_key_type_mismatch_raises(spark, tmp_path):
+    """The warehouse's keys are read as the batch's key types; a table
+    whose key column has another type fails that read instead of
+    counting 0 (or appending a second schema) silently."""
+    path = str(tmp_path / "t")
+    longs = spark.createDataFrame(
+        [(1, 1.0, T0)], "crypto_id long, price_usd double, extracted_at timestamp"
+    )
+    assert upsert_append(spark, longs, path, KEYS) == 1
+    files = _parquet_files(path)
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        upsert_append(spark, _batch(spark, [("1", 1.0, T0)]), path, KEYS)
+    assert _parquet_files(path) == files
 
 
 def test_partitioned_write(spark, tmp_path):
