@@ -55,7 +55,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from crypto_etl_airflow_spark.plans import registry
     from crypto_etl_airflow_spark.plans.registry import all_specs
     from crypto_etl_airflow_spark.session import tune_execution
 
@@ -82,24 +81,11 @@ def main() -> None:
     # parquet footer reads are one-time costs a long-lived cluster
     # amortizes away, so the timed pass measures steady-state
     # execution (the 100 TB-relevant number).
-    # per-query posture override, applied by the ENGINE
-    # (registry.apply_posture → session.apply_query_posture): a
-    # "classic" query keeps AQE + core-floored partitions even when
-    # the input is tiny; "auto" restores the tune_execution baseline.
-    # bench.py no longer owns this logic (VERDICT r16 item 4) — it
-    # applies the same configuration every entry point applies.
-    def _apply_posture(spec) -> None:
-        registry.apply_posture(spark, spec)
-
     sc = spark.sparkContext
     for spec in specs.values():
         # label jobs (guide §1): the Spark UI / event log attributes
         # every stage to the query that issued it
         sc.setJobDescription(f"bench-warmup:{spec.name}")
-        # warm under the SAME posture the query is timed under
-        # (ADVICE r16 item 4: a classic query warmed under the tiny
-        # posture pays un-warmed codegen on its first timed run)
-        _apply_posture(spec)
         _materialize(spec.builder(spark, sf_dir))
         release_reuse_caches()
     sc.setJobDescription(None)
@@ -125,7 +111,6 @@ def main() -> None:
     extra_runs: dict[str, int] = {}
 
     def one_run(spec) -> float:
-        _apply_posture(spec)
         sc.setJobDescription(f"bench:{spec.name}")
         t0 = time.perf_counter()
         _materialize(spec.builder(spark, sf_dir))
@@ -166,7 +151,6 @@ def main() -> None:
     steady: dict[str, float] = {}
     _flag = "pipeline_curate_corpus"
     if _flag in specs:
-        _apply_posture(specs[_flag])
         sc.setJobDescription(f"bench-steady:{_flag}")
         release_reuse_caches()
         _materialize(specs[_flag].builder(spark, sf_dir))  # fresh first pass

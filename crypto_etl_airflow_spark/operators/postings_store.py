@@ -59,6 +59,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .dedup import _reuse
 from .dedup_store import _ensure_store_exists
 from .upsert import _counted_barrier, _lineage_barrier
@@ -105,7 +106,7 @@ def _check_sidecar(path: str) -> None:
 def read_tombstones(spark: SparkSession, path: str) -> DataFrame:
     tomb_path = f"{path}/tombstones"
     if not os.path.isdir(tomb_path):
-        return spark.createDataFrame([], _TOMB_SCHEMA)
+        return local_frame(spark, [], _TOMB_SCHEMA)
     # a hammered retry appends duplicate tombstone rows — harmless to
     # liveness, collapsed here so the anti-join stays minimal
     return spark.read.parquet(tomb_path).dropDuplicates(["doc_id", "upto"])
@@ -135,24 +136,29 @@ def read_live_doc_lengths(
 def _data_file_counts(path: str) -> tuple[int, int]:
     """Filesystem fingerprints of lengths/ and tombstones/ for the
     stats sidecar — a 63-bit digest of the sorted (relative name,
-    size) listing of each tree, NOT a bare file count (ADVICE r12):
-    counts alone don't identify filesystem state — a crashed append
-    (+1 file, no stats row) followed by a crashed compact can land
-    back on the fingerprinted COUNT while holding different data,
-    validating a stale (N, Σdl). Name+size digests change whenever
-    any file is added, removed, renamed, or rewritten, so any
-    divergent history invalidates the row. Pure directory metadata,
-    no scan; kept as two longs so the sidecar schema is unchanged
-    and pre-upgrade count-format rows simply fail validation (reader
+    size, mtime_ns) listing of each tree, NOT a bare file count
+    (ADVICE r12): counts alone don't identify filesystem state — a
+    crashed append (+1 file, no stats row) followed by a crashed
+    compact can land back on the fingerprinted COUNT while holding
+    different data, validating a stale (N, Σdl). Name+size alone
+    misses a same-size rewrite under the same name; the modification
+    time catches it, so any file added, removed, renamed, or
+    rewritten invalidates the row. Pure directory metadata, no scan;
+    kept as two longs so the sidecar schema is unchanged and rows
+    written under an older digest simply fail validation (reader
     falls back to the lengths scan until the next mutation heals)."""
     import hashlib
+
+    def _entry(root: str, fn: str, d: str) -> str:
+        full = os.path.join(root, fn)
+        st = os.stat(full)
+        return f"{os.path.relpath(full, d)}:{st.st_size}:{st.st_mtime_ns}"
 
     def _digest(d: str) -> int:
         if not os.path.isdir(d):
             return 0
         entries = sorted(
-            f"{os.path.relpath(os.path.join(root, fn), d)}:"
-            f"{os.path.getsize(os.path.join(root, fn))}"
+            _entry(root, fn, d)
             for root, _dirs, files in os.walk(d)
             for fn in files
             if fn.endswith(".parquet")

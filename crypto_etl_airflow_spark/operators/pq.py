@@ -60,6 +60,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot as _dot, norm as _norm
+from ..sources.local import local_frame
 from .similarity import (
     BROADCAST_PROBE_LIMIT,
     _nearest_centroid,
@@ -407,7 +408,7 @@ def read_ivfpq_codes(spark: SparkSession, path: str) -> DataFrame:
         )
     except AnalysisException:
         if os.path.isdir(codes_path):
-            return spark.createDataFrame([], _CODES_SCHEMA)
+            return local_frame(spark, [], _CODES_SCHEMA)
         raise
 
 

@@ -783,7 +783,7 @@ def _nearest_centroid(
     if not crows:
         # empty quantizer (empty-corpus build): assignment is empty,
         # exactly as the old inner join against an empty best table
-        empty = vecs.sparkSession.createDataFrame([], out_schema)
+        empty = local_frame(sess, [], out_schema)
         return (
             _memo_put(memo_key, sess, empty) if memo_key else empty
         )

@@ -36,6 +36,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot as _dot, norm as _norm
+from ..sources.local import local_frame
 from .quantize import LEVELS, _range_scale
 from .similarity import (
     BROADCAST_PROBE_LIMIT,
@@ -202,7 +203,7 @@ def read_ivfsq_lists(spark: SparkSession, path: str) -> DataFrame:
         )
     except AnalysisException:
         if os.path.isdir(lists_path):
-            return spark.createDataFrame([], _LISTS_SCHEMA)
+            return local_frame(spark, [], _LISTS_SCHEMA)
         raise
 
 

@@ -39,15 +39,6 @@ class QuerySpec:
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
-    #: execution posture for harnesses that apply the engine's
-    #: size-aware tuning (bench.py): "auto" = whatever
-    #: session.tune_execution picked for the input; "classic" = force
-    #: AQE on + core-floored partitions for THIS query — for plans
-    #: whose runtime join flips (SMJ→BHJ) outweigh AQE's re-planning
-    #: latency even on tiny inputs (measured r16: hybrid RRF 2.05 s
-    #: under the tiny posture vs 1.25 s classic — its BM25 legs carry
-    #: ~16 static SMJs that AQE converts at runtime)
-    posture: str = "auto"
 
 
 def register(
@@ -56,7 +47,6 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    posture: str = "auto",
 ) -> Callable[[Builder], Builder]:
     """Decorator: register a builder under ``name``."""
 
@@ -65,7 +55,7 @@ def register(
             raise ValueError(f"duplicate query name: {name}")
         _REGISTRY[name] = QuerySpec(
             name=name, builder=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""),
-            tags=tags, bench=bench, posture=posture,
+            tags=tags, bench=bench,
         )
         return fn
 
@@ -199,40 +189,12 @@ def get(name: str) -> QuerySpec:
     return _REGISTRY[name]
 
 
-def apply_posture(spark: SparkSession, spec: QuerySpec) -> None:
-    """Apply ``spec``'s execution posture to the session — delegates
-    to the engine's :func:`session.apply_query_posture` so the
-    classic/auto override lives in ONE place and every entry point
-    (driver contract, bench.py, dump_plans) applies the same
-    configuration. Physical strategy only; results are identical."""
-    from ..session import apply_query_posture
-
-    apply_query_posture(spark, getattr(spec, "posture", "auto"))
-
-
-def _posture_bound(spec: QuerySpec) -> Builder:
-    """The spec's builder with its execution posture applied first —
-    what :func:`query_map` hands the external driver, so a
-    posture-tagged query runs its measured configuration under ANY
-    caller, not just bench.py (VERDICT r16 item 4). EVERY builder is
-    wrapped (not just the classic-tagged ones): a posture override
-    must stay in force while its query EXECUTES (the AQE flag is read
-    at action time, after the builder returns), so the restore to the
-    session baseline happens when the NEXT query applies "auto" — an
-    unwrapped auto builder would silently inherit the previous
-    query's classic posture."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        apply_posture(spark, spec)
-        return spec.builder(spark, sf_dir)
-
-    run.__name__ = spec.builder.__name__
-    run.__doc__ = spec.builder.__doc__
-    return run
-
-
 def query_map() -> dict[str, Builder]:
-    return {name: _posture_bound(spec) for name, spec in all_specs().items()}
+    """name → builder for every registered query. The builders are
+    the registered functions themselves: building a query never
+    writes session conf, so any subset can run in any order (or from
+    concurrent threads) under the caller's own session settings."""
+    return {name: spec.builder for name, spec in all_specs().items()}
 
 
 def oracle_map() -> dict[str, str]:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.substrings import remove_repeated_spans, repeated_window_spans
+from ..sources.local import local_frame
 from ..sources.tables import load_table
 from .registry import register
 
@@ -222,7 +223,7 @@ def similarity_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, BM25_QUERY_TERMS, k=BM25_TOPK, k1=BM25_K1, b=BM25_B
         )
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 # the store after delete(doc_id % 20 = 0) + upsert(doc_id % 7 = 0 with
@@ -308,7 +309,7 @@ def similarity_bm25_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, path, BM25_QUERY_TERMS, k=BM25_TOPK, k1=BM25_K1, b=BM25_B
         )
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -393,12 +394,6 @@ _BM25_CTE = f"""
     tags=("similarity", "text", "retrieval", "extension"),
     bench=True,  # joined the headline set in r9 once the bruteforce
     # broadcast fix made its plan decade-stable (SCALE.md third decade)
-    # r16: the one bench query that LOSES under the tiny-input posture
-    # (measured: 2.05 s at parts=4/AQE-off vs 1.25 s classic) — its
-    # BM25 legs plan ~16 static SortMergeJoins that AQE flips to
-    # broadcast at runtime, worth far more than AQE's re-planning
-    # latency here (the pipeline's trade goes the other way)
-    posture="classic",
 )
 def similarity_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+dense retrieval fused by Reciprocal Rank Fusion
@@ -414,7 +409,8 @@ def similarity_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: both input rankings end in ORDER BY + LIMIT
     (TakeOrderedAndProject — per-partition heaps, no global sort);
     the global ``row_number`` then runs on {HYBRID_N} rows, not the
-    corpus; the fusion join is {HYBRID_N}×{HYBRID_N} rows. Rank ties
+    corpus; the fusion is a per-document aggregate over the union of
+    the two rankings (≤ 2·{HYBRID_N} rows), so no join. Rank ties
     break on doc_id in both engines, and ranks are computed on
     ROUNDED scores, so the certified-equal BM25/cosine values yield
     identical ranks."""
@@ -447,7 +443,20 @@ def similarity_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rank").cast("int").alias("dense_rank"),
     )
 
-    fused = lex.join(dense, "doc_id", "full_outer")
+    # RRF is a per-document sum over the rankings, so fuse by a
+    # group-by over the union of the two legs, not a join. This equals
+    # a full-outer join on doc_id because each leg holds unique
+    # non-NULL doc_ids: the lex leg's inner joins drop NULL ids, and
+    # the dense leg's probe_id != neighbor_id predicate implies
+    # isnotnull.
+    fused = (
+        lex.unionByName(dense, allowMissingColumns=True)
+        .groupBy("doc_id")
+        .agg(
+            F.max("lex_rank").alias("lex_rank"),
+            F.max("dense_rank").alias("dense_rank"),
+        )
+    )
     rrf = F.round(
         F.coalesce(
             F.lit(1.0) / (F.lit(RRF_K) + F.col("lex_rank")), F.lit(0.0)

@@ -12,6 +12,11 @@ One place to set the execution posture for the whole engine:
 - **Arrow enabled** for any pandas interchange (Pandas UDFs, toPandas).
 - **shuffle.partitions** sized from the env; at cluster scale this is a
   deploy-time config (partitions ≈ 2-3× total cores), never code.
+
+:func:`tune_execution` is the one size-aware adjustment on top: the
+caller applies it once per input, and no query overrides it — a
+builder never writes session conf, so what a plan runs under is what
+the caller set.
 """
 
 from __future__ import annotations
@@ -75,15 +80,6 @@ REUSE_LEVEL_CONF = "spark.crypto_etl.reuse.storageLevel"
 #: where spill-read is cheap and cache-assist dominates
 #: repeated-analytics latency.
 REUSE_SPILL_INPUT_BYTES = SMALL_INPUT_BYTES
-
-#: Session confs recording the size-aware BASELINE posture
-#: :func:`tune_execution` chose, so :func:`apply_query_posture` can
-#: restore it after a per-query override ("classic") without the
-#: caller having to thread the baseline around. Engine conf keys —
-#: Spark carries arbitrary session confs.
-POSTURE_BASE_PARTS_CONF = "spark.crypto_etl.posture.base.shufflePartitions"
-POSTURE_BASE_AQE_CONF = "spark.crypto_etl.posture.base.adaptive"
-
 
 def reuse_level_for_bytes(n_bytes: int) -> str:
     """The ``_reuse`` StorageLevel name for an input size — ONE
@@ -189,68 +185,12 @@ def tune_execution(spark: SparkSession, *paths: str) -> dict:
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
     spark.conf.set(REUSE_LEVEL_CONF, reuse_level)
-    # record the chosen baseline so apply_query_posture can restore it
-    # after a per-query "classic" override
-    spark.conf.set(POSTURE_BASE_PARTS_CONF, str(n))
-    spark.conf.set(POSTURE_BASE_AQE_CONF, str(adaptive).lower())
     return {
         "input_bytes": n_bytes,
         "shuffle_partitions": n,
         "adaptive": adaptive,
         "reuse_level": reuse_level,
     }
-
-
-def _session_cores(spark: SparkSession) -> int:
-    """Scheduler core count for the core-floor — guarded so a Spark
-    Connect session (no ``sparkContext``) degrades to the env-derived
-    default instead of failing."""
-    try:
-        return int(spark.sparkContext.defaultParallelism)
-    except Exception:
-        return DEFAULT_SHUFFLE_PARTITIONS
-
-
-def apply_query_posture(spark: SparkSession, posture: str = "auto") -> None:
-    """Apply a per-query execution-posture override (the registry's
-    ``QuerySpec.posture`` field) ON TOP of the session's size-aware
-    baseline — in the ENGINE, so every entry point (driver contract,
-    bench, production callers) gets the measured configuration, not
-    just the measurement harness (VERDICT r16 item 4: the hybrid-RRF
-    "classic" win was wired only into bench.py).
-
-    - ``"auto"``: restore the :func:`tune_execution` baseline (the
-      recorded ``POSTURE_BASE_*`` confs). On a session that never ran
-      ``tune_execution`` (e.g. the external driver's vanilla session)
-      the baseline is whatever the session started with — recorded on
-      the first override so a classic query never leaks its posture
-      into the next query.
-    - ``"classic"``: AQE on + core-floored shuffle partitions even on
-      a tiny input — for plans whose runtime SMJ→BHJ flips outweigh
-      AQE's re-planning latency (measured r16: hybrid RRF 2.05 s tiny
-      vs 1.25 s classic; its BM25 legs carry ~16 static SMJs AQE
-      converts at runtime). The floor only ever RAISES the partition
-      count: at real scale the baseline is already ≥ the core count
-      and AQE is already on, so classic ≡ auto there.
-
-    Physical strategy only — results are identical under either
-    posture (AQE and the partition count never change values)."""
-    base_p = spark.conf.get(POSTURE_BASE_PARTS_CONF, None)
-    base_a = spark.conf.get(POSTURE_BASE_AQE_CONF, None)
-    if base_p is None or base_a is None:
-        # no tune_execution baseline: snapshot the session's current
-        # posture ONCE, before the first override mutates it
-        base_p = spark.conf.get("spark.sql.shuffle.partitions")
-        base_a = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set(POSTURE_BASE_PARTS_CONF, base_p)
-        spark.conf.set(POSTURE_BASE_AQE_CONF, base_a)
-    if posture == "classic":
-        parts = max(_session_cores(spark), int(base_p))
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    else:
-        spark.conf.set("spark.sql.shuffle.partitions", str(base_p))
-        spark.conf.set("spark.sql.adaptive.enabled", base_a)
 
 
 def get_spark(

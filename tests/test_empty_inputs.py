@@ -37,7 +37,7 @@ RISKY = [
     "funnel_view_click_purchase",  # sequential conversion ratios
     # round-8 additions
     "text_repetition_signals",  # left join of two per-doc aggregates
-    "similarity_hybrid_rrf_topk",  # full-outer fusion of two empty top-Ns
+    "similarity_hybrid_rrf_topk",  # union-aggregate fusion of two empty top-Ns
     "dedup_substring_spans",    # island merge over empty window table
     "curation_pipeline_summary",  # chained ops + window over empty corpus
     # round-9 additions: the store roundtrips pin the empty-first-write

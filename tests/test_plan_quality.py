@@ -289,3 +289,25 @@ def test_no_hof_dot_inside_bnlj_condition_outside_baselines(spark):
             ):
                 offenders[name] = line.strip()[:200]
     assert not offenders, offenders
+
+
+def test_hybrid_rrf_fuses_without_sort_merge_join(spark):
+    """Hybrid RRF fuses its two top-N rankings as a per-document
+    aggregate over their union, not a full-outer join. Under the tiny
+    posture (AQE off, 4 partitions) its plan has no SortMergeJoin, so
+    it needs no runtime re-planning to be fast."""
+    from crypto_etl_airflow_spark.plans.retrieval import (
+        similarity_hybrid_rrf_topk,
+    )
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        df = similarity_hybrid_rrf_topk(spark, SF_SMOKE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert "SortMergeJoin" not in plan, plan[:3000]

@@ -1,7 +1,8 @@
 """Size-aware execution posture (session.py): proportional partitions
 + AQE off only for PROVABLY tiny inputs; unknown scale (stat = 0 —
 remote FS URIs, unreadable paths) must get the classic 100 TB-safe
-posture (ADVICE r16)."""
+posture (ADVICE r16). No query overrides it: building a query writes
+no session conf."""
 
 from crypto_etl_airflow_spark.session import (
     PARTITION_INPUT_BYTES,
@@ -9,6 +10,8 @@ from crypto_etl_airflow_spark.session import (
     shuffle_partitions_for_bytes,
     tune_execution,
 )
+
+from .conftest import SF_SMOKE
 
 
 def test_tiny_input_proportional():
@@ -64,94 +67,27 @@ def test_reuse_level_is_part_of_the_posture(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "32")
 
 
-def test_apply_query_posture_classic_and_restore(spark):
-    """The per-query posture override lives in the ENGINE (VERDICT
-    r16 item 4): classic floors partitions at the core count with AQE
-    on; auto restores the tune_execution baseline."""
-    from crypto_etl_airflow_spark.session import apply_query_posture
+def test_query_map_writes_no_session_conf(spark):
+    """Building a query through the driver contract's query_map writes
+    no session conf: the caller's AQE flag and partition count stay as
+    set, and no engine posture key appears. So a build cannot change
+    the conf another query (or thread) executes under."""
+    from crypto_etl_airflow_spark.plans.registry import query_map
 
-    try:
-        # tiny baseline: proportional partitions, AQE off
-        p = tune_execution(spark, "/root/testdata/sf0.001")
-        assert p["adaptive"] is False
-        cores = spark.sparkContext.defaultParallelism
-        apply_query_posture(spark, "classic")
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= cores
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        # auto restores the recorded baseline, not the classic leak
-        apply_query_posture(spark, "auto")
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
-            p["shuffle_partitions"]
-        )
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-
-
-def test_apply_query_posture_snapshots_vanilla_session(spark):
-    """On a session that never ran tune_execution (the external
-    driver's), the first override snapshots the session's own posture
-    so a classic query cannot leak into the next auto query."""
-    from crypto_etl_airflow_spark.session import (
-        POSTURE_BASE_AQE_CONF,
-        POSTURE_BASE_PARTS_CONF,
-        apply_query_posture,
-    )
-
-    try:
-        spark.conf.unset(POSTURE_BASE_PARTS_CONF)
-        spark.conf.unset(POSTURE_BASE_AQE_CONF)
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        apply_query_posture(spark, "classic")
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= (
-            spark.sparkContext.defaultParallelism
-        )
-        apply_query_posture(spark, "auto")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    finally:
-        spark.conf.unset(POSTURE_BASE_PARTS_CONF)
-        spark.conf.unset(POSTURE_BASE_AQE_CONF)
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-
-
-def test_query_map_applies_spec_posture(spark):
-    """The driver contract's query_map must apply the spec posture —
-    the hybrid-RRF classic win is engine behavior, not a bench.py
-    side effect (VERDICT r16 item 4)."""
-    from crypto_etl_airflow_spark.plans.registry import (
-        all_specs,
-        query_map,
-    )
-    from crypto_etl_airflow_spark.session import (
-        POSTURE_BASE_AQE_CONF,
-        POSTURE_BASE_PARTS_CONF,
-    )
-
-    specs = all_specs()
-    classic = [n for n, s in specs.items() if s.posture == "classic"]
-    assert "similarity_hybrid_rrf_topk" in classic
     qm = query_map()
     try:
-        spark.conf.unset(POSTURE_BASE_PARTS_CONF)
-        spark.conf.unset(POSTURE_BASE_AQE_CONF)
         spark.conf.set("spark.sql.shuffle.partitions", "3")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        qm["similarity_hybrid_rrf_topk"](spark, "/root/testdata/sf0.001")
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= (
-            spark.sparkContext.defaultParallelism
-        )
-        # the next auto query restores the snapshot
-        qm["hourly_variation"](spark, "/root/testdata/sf0.001")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        for name in ("similarity_hybrid_rrf_topk", "hourly_variation"):
+            qm[name](spark, SF_SMOKE)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert not [
+            k
+            for k in spark.conf.getAll
+            if k.startswith("spark.crypto_etl.posture.")
+        ]
     finally:
-        spark.conf.unset(POSTURE_BASE_PARTS_CONF)
-        spark.conf.unset(POSTURE_BASE_AQE_CONF)
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.shuffle.partitions", "32")
 

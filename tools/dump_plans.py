@@ -27,40 +27,34 @@ def main() -> None:
     outdir.mkdir(parents=True, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-    from pyspark.sql import SparkSession
+    from crypto_etl_airflow_spark.operators.dedup import release_reuse_caches
+    from crypto_etl_airflow_spark.plans.registry import all_specs
+    from crypto_etl_airflow_spark.session import get_spark, tune_execution
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    # a 1g driver heap (Spark's default) keeps the memory page size,
+    # and so the broadcast stages' reported sizes, as PLANS.md records
+    spark = get_spark(
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "1g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from crypto_etl_airflow_spark.operators.dedup import release_reuse_caches
-    from crypto_etl_airflow_spark.plans import registry
-    from crypto_etl_airflow_spark.plans.registry import all_specs
-    from crypto_etl_airflow_spark.session import tune_execution
 
     # the committed plan evidence must be reproducible from the
     # committed tool (ADVICE r16 item 2): dump under the SAME
     # execution posture the engine/bench applies — the size-aware
-    # tune_execution baseline plus each spec's per-query override —
-    # and say so in a header so a reader can tell which posture a
-    # dump was taken under.
+    # tune_execution choice — and say so in a header so a reader can
+    # tell which posture a dump was taken under.
     tune_execution(spark, sf_dir)
+    header = (
+        f"// posture: shuffle.partitions="
+        f"{spark.conf.get('spark.sql.shuffle.partitions')}, "
+        f"adaptive={spark.conf.get('spark.sql.adaptive.enabled')}\n"
+    )
 
     specs = all_specs()
     for name in names:
         spec = specs[name]
-        registry.apply_posture(spark, spec)
-        header = (
-            f"// posture: shuffle.partitions="
-            f"{spark.conf.get('spark.sql.shuffle.partitions')}, "
-            f"adaptive={spark.conf.get('spark.sql.adaptive.enabled')}"
-            f" (spec.posture={spec.posture})\n"
-        )
         df = spec.builder(spark, sf_dir)
         df.collect()  # execute so AQE finalizes join picks / codegen ids
         qe = df._jdf.queryExecution()

@@ -82,19 +82,18 @@ _EXTRA_AUDIT = (
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from crypto_etl_airflow_spark.operators.dedup import release_reuse_caches
     from crypto_etl_airflow_spark.plans.registry import all_specs
+    from crypto_etl_airflow_spark.session import get_spark
+
+    # a 1g driver heap (Spark's default) keeps the memory page size,
+    # and so the broadcast stages' reported sizes, as PLANS.md records
+    spark = get_spark(
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "1g"},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
     # name-sorted: all_specs() order follows the certification
     # rotation, which changes every round and would churn PLANS.md
