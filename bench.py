@@ -40,23 +40,20 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
 
-    from pyspark.sql import SparkSession
+    from crypto_etl_airflow_spark.session import (
+        codegen_stats,
+        get_spark,
+        tune_execution,
+    )
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crypto-etl-spark-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
+    spark = get_spark(
+        "crypto-etl-spark-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
     )
     spark.sparkContext.setLogLevel("ERROR")
 
     from crypto_etl_airflow_spark.plans.registry import all_specs
-    from crypto_etl_airflow_spark.session import tune_execution
 
     # the engine's size-aware execution posture (session.py): shuffle
     # partitions proportional to input size, AQE off below the
@@ -82,12 +79,24 @@ def main() -> None:
     # amortizes away, so the timed pass measures steady-state
     # execution (the 100 TB-relevant number).
     sc = spark.sparkContext
+
+    # generated-code compiles per query, [classes, ms]: the warm-up
+    # pass compiles each query's classes, and a timed run that still
+    # compiles means the session's codegen cache evicted them
+    codegen: dict[str, dict[str, list]] = {}
+
+    def _codegen_since(before: tuple[int, float]) -> list:
+        n, ms = codegen_stats(spark)
+        return [n - before[0], round(ms - before[1], 1)]
+
     for spec in specs.values():
         # label jobs (guide §1): the Spark UI / event log attributes
         # every stage to the query that issued it
         sc.setJobDescription(f"bench-warmup:{spec.name}")
+        before = codegen_stats(spark)
         _materialize(spec.builder(spark, sf_dir))
         release_reuse_caches()
+        codegen[spec.name] = {"warmup": _codegen_since(before)}
     sc.setJobDescription(None)
 
     # Best-of-5 (was 3): the round-6 record showed ~40% apparent
@@ -122,6 +131,7 @@ def main() -> None:
         return dt
 
     for name, spec in specs.items():
+        before = codegen_stats(spark)
         runs = [one_run(spec) for _ in range(n_runs)]
         while (
             len(runs) < n_runs + max_extra
@@ -140,6 +150,7 @@ def main() -> None:
             round(runs[1] - runs[0], 4) if len(runs) > 1 else 0.0
         )
         extra_runs[name] = len(runs) - n_runs
+        codegen[name]["timed"] = _codegen_since(before)
 
     # Regime split for the flagship composed pipeline (VERDICT r16
     # stretch): every timed run above clears the reuse caches, so the
@@ -201,8 +212,8 @@ def main() -> None:
     }
     print(json.dumps(payload))
     # Everything else (stability fields, regime split, posture,
-    # fingerprint) lives in the full file record the next round's
-    # review diffs query-by-query.
+    # codegen compiles, fingerprint) lives in the full file record the
+    # next round's review diffs query-by-query.
     full = dict(payload)
     full.update(
         {
@@ -213,6 +224,7 @@ def main() -> None:
             "runs_per_query": n_runs,
             "steady": steady,
             "posture": posture,
+            "codegen": codegen,
             "testdata_fingerprint": fingerprint,
         }
     )

@@ -468,8 +468,8 @@ def rebalance_ivf_index(
         return 0
     # (2) commit point: swap the centroids table
     kept_cents = cents.filter(~F.col("centroid_id").isin(split_cids))
-    added = spark.createDataFrame(
-        new_rows, "centroid_id long, c_vec array<double>, c_norm double"
+    added = local_frame(
+        spark, new_rows, "centroid_id long, c_vec array<double>, c_norm double"
     )
     staging = f"{path}/centroids.__rebal_tmp"
     kept_cents.unionByName(added).coalesce(1).write.mode("overwrite").parquet(

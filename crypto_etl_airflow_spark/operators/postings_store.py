@@ -213,8 +213,8 @@ def _commit_stats(spark: SparkSession, path: str, n: int, sum_dl: int) -> None:
     prev = read_store_stats(spark, path)
     sver = (int(prev.sver) + 1) if prev is not None else 1
     lf, tf = _data_file_counts(path)
-    spark.createDataFrame(
-        [(sver, int(n), int(sum_dl), lf, tf)], _STATS_SCHEMA
+    local_frame(
+        spark, [(sver, int(n), int(sum_dl), lf, tf)], _STATS_SCHEMA
     ).coalesce(1).write.mode("append").parquet(f"{path}/stats")
 
 

@@ -386,8 +386,8 @@ def rebalance_ivfsq_lists(
             ).parquet(f"{lists_path}/centroid_id={ids[h]}")
         split_cids.append(cid)
     kept_cents = cents.filter(~F.col("centroid_id").isin(split_cids))
-    added = spark.createDataFrame(
-        new_rows, "centroid_id long, c_vec array<double>, c_norm double"
+    added = local_frame(
+        spark, new_rows, "centroid_id long, c_vec array<double>, c_norm double"
     )
     staging = f"{path}/centroids.__rebal_tmp"
     kept_cents.unionByName(added).coalesce(1).write.mode("overwrite").parquet(

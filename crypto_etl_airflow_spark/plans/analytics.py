@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from ..sources.tables import load_table
 from .registry import register
 
@@ -283,7 +284,7 @@ def rollup_incremental_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("max_value", 6).alias("max_value"),
         )
         rows = out.collect()
-    return spark.createDataFrame(rows, schema=out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @register(

@@ -32,6 +32,7 @@ from ..functions.text import STOPWORDS, mean_token_length, quality_score, tokens
 from ..operators import dedup as dedup_ops
 from ..operators.lines import line_dedup_global, line_dedup_intradoc
 from ..operators.repetition import repetition_signals
+from ..sources.local import local_frame
 from ..sources.tables import load_table
 from .extensions import _STOPS as _EXT_STOPS
 from .extensions import _TOKS as _EXT_TOKS
@@ -1053,7 +1054,7 @@ def export_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bad = quarantine.count()
     if n_bad:
         raise ValueError(f"jsonl roundtrip quarantined {n_bad} rows")
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @register(
@@ -2208,7 +2209,7 @@ def dedup_incremental_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_index.build_ivf_index(store_vecs, path, nlist=16)
         out = incremental_semantic_pairs(batch, path, threshold=0.4)
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @register(

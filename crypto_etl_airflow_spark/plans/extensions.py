@@ -26,6 +26,7 @@ from ..functions.text import (
     whitespace_token_count,
 )
 from ..operators import dedup, multimodal, similarity
+from ..sources.local import local_frame
 from ..sources.tables import load_table
 from .registry import register
 
@@ -584,7 +585,7 @@ def dedup_incremental_containment(spark: SparkSession, sf_dir: str) -> DataFrame
             df_counts=dedup_store.read_shingle_df(spark, path),
         )
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @register(
@@ -637,7 +638,7 @@ def dedup_incremental_containment_maintained(
             df_counts=dedup_store.read_shingle_df(spark, path),
         )
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def _minhash_oracle(
@@ -957,7 +958,7 @@ def dedup_incremental_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame
         store = dedup_store.read_fingerprint_store(spark, path)
         out = dedup_store.incremental_fingerprint_matches(batch, store)
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 
@@ -1025,7 +1026,7 @@ def dedup_incremental_fingerprint_maintained(
         store = dedup_store.read_fingerprint_store(spark, path)
         out = dedup_store.incremental_fingerprint_matches(batch, store)
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def _simhash_oracle(
@@ -1140,7 +1141,7 @@ def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch, store, max_hamming=1, bits=32
         )
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @register(
@@ -2394,7 +2395,7 @@ def similarity_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ann_index.add_to_ivf_index(batch, path)
         out = ann_index.query_ivf_index(probes, path, k=5, nprobe=4)
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 @register(
@@ -2489,7 +2490,7 @@ def similarity_topk_ivf_maintained(
         ann_index.delete_from_ivf_index(spark, path, doomed)
         out = ann_index.query_ivf_index(probes, path, k=5, nprobe=4)
         rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    return local_frame(spark, rows, out.schema)
 
 
 def _ivfpq_oracle(

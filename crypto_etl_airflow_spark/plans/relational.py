@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
+from ..sources.local import local_frame
 from ..sources.tables import load_table
 from .registry import register
 
@@ -330,7 +331,8 @@ def join_range_size_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast nested-loop, the right physical choice when one side is
     rows-small."""
     (part,) = _t(spark, sf_dir, "part")
-    buckets = spark.createDataFrame(
+    buckets = local_frame(
+        spark,
         [("small", 1, 15), ("medium", 16, 35), ("large", 36, 50)],
         "bucket string, lo int, hi int",
     )

@@ -12,6 +12,9 @@ One place to set the execution posture for the whole engine:
 - **Arrow enabled** for any pandas interchange (Pandas UDFs, toPandas).
 - **shuffle.partitions** sized from the env; at cluster scale this is a
   deploy-time config (partitions ≈ 2-3× total cores), never code.
+- **Generated-class cache** sized to the engine's working set
+  (:data:`CODEGEN_CACHE_ENTRIES`), so a repeated query reuses its
+  compiled whole-stage code instead of recompiling it.
 
 :func:`tune_execution` is the one size-aware adjustment on top: the
 caller applies it once per input, and no query overrides it — a
@@ -80,6 +83,34 @@ REUSE_LEVEL_CONF = "spark.crypto_etl.reuse.storageLevel"
 #: where spill-read is cheap and cache-assist dominates
 #: repeated-analytics latency.
 REUSE_SPILL_INPUT_BYTES = SMALL_INPUT_BYTES
+
+#: Entries in Spark's LRU cache of compiled generated classes
+#: (``spark.sql.codegen.cache.maxEntries``, default 100). Sized to the
+#: engine's working sets, counted with :func:`codegen_stats` on 4
+#: cores: one ``pipeline_curate_corpus`` run over the sf0.001 fixture
+#: needs 332 distinct classes under :func:`tune_execution`'s posture;
+#: the 17 bench queries in one session at sf0.01 need 810 (a
+#: second pass then compiles 12); an ``hourly_ingest`` tick needs at
+#: most 17, and none once warm. At the default size every warm
+#: flagship run evicted its own classes and recompiled ~342 of them
+#: (10–20 ms of Janino each), and each run got fresh classes the JIT
+#: had never compiled.
+CODEGEN_CACHE_ENTRIES = 2048
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float] | None:
+    """``(compilations, compile_ms)`` of generated code in this JVM so
+    far: Spark's ``CodegenMetrics`` compilation count and
+    ``CodeGenerator.compileTime``. Both are process-wide and only
+    grow, so callers difference two readings. ``None`` when the
+    session has no ``_jvm`` (Spark Connect)."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6
+
 
 def reuse_level_for_bytes(n_bytes: int) -> str:
     """The ``_reuse`` StorageLevel name for an input size — ONE
@@ -204,6 +235,11 @@ def get_spark(
     Local runs default to ``local[$SPARK_GRAFT_CPUS]``; on a real
     cluster the master comes from spark-submit and this factory only
     contributes the SQL posture.
+
+    ``spark.sql.codegen.cache.maxEntries`` is set to
+    :data:`CODEGEN_CACHE_ENTRIES`. It is a static conf: only a session
+    that starts a new JVM takes it, and a session this call merely
+    reuses keeps the size its JVM started with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -219,6 +255,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

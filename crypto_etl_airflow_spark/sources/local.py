@@ -13,6 +13,7 @@ can fold projections and filters straight into it.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from datetime import timezone
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +30,16 @@ def local_frame(
     struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
     arrow = to_arrow_schema(struct)
     columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)],
-        schema=arrow,
-    )
-    return spark.createDataFrame(table, struct)
+    arrays = []
+    for col, field in zip(columns, arrow):
+        if pa.types.is_timestamp(field.type) and field.type.tz is not None:
+            # a collected TimestampType value is a naive datetime in the
+            # host's local time (what createDataFrame(list) assumes);
+            # Arrow reads a naive value as UTC wall clock
+            col = [
+                None if v is None
+                else v.astimezone(timezone.utc).replace(tzinfo=None)
+                for v in col
+            ]
+        arrays.append(pa.array(col, type=field.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)

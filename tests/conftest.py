@@ -1,3 +1,4 @@
+import os
 import sys
 import tempfile
 from pathlib import Path
@@ -44,10 +45,12 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
+    # the host's cores, as the tier-1 command exports them
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     s = get_spark(
         app_name="crypto_etl_airflow_spark_tests",
-        master="local[8]",
-        shuffle_partitions=8,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={
             "spark.driver.memory": "4g",
             # catalog tables (bucketing tests) land in a tempdir, not the repo

@@ -108,27 +108,23 @@ def main() -> None:
     )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from crypto_etl_airflow_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crypto-etl-spark-pipeline-scale-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        # zstd for shuffle/spill instead of default lz4: the decade
-        # corpora are text-heavy and a single node carries the WHOLE
-        # shuffle footprint (a cluster spreads it) — zstd roughly
-        # halves on-disk shuffle bytes, the knob a shuffle-heavy text
-        # pipeline sets in production too (r14 ×1000 disk lesson)
-        .config("spark.io.compression.codec", "zstd")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
+    spark = get_spark(
+        "crypto-etl-spark-pipeline-scale-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            # zstd for shuffle/spill instead of default lz4: the decade
+            # corpora are text-heavy and a single node carries the WHOLE
+            # shuffle footprint (a cluster spreads it) — zstd roughly
+            # halves on-disk shuffle bytes, the knob a shuffle-heavy text
+            # pipeline sets in production too (r14 ×1000 disk lesson)
+            "spark.io.compression.codec": "zstd",
+            "spark.driver.memory": os.environ.get(
+                "SPARK_GRAFT_DRIVER_MEM", "16g"
+            ),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
