@@ -225,7 +225,7 @@ def add_to_ivf_index(
     store anti-join discipline). The quantizer never retrains on add —
     identical to FAISS ``add`` semantics; rebuild when drift warrants.
     Returns vectors appended."""
-    from .upsert import _counted_barrier
+    from .barrier import counted_barrier
 
     spark = new_vecs.sparkSession
     _check_dim(path, new_vecs, vec_col, "add")
@@ -244,7 +244,7 @@ def add_to_ivf_index(
         "c_v",
         dim=_stored_dim(path),
     ).withColumn("c_nrm", _norm(F.col("c_v")))
-    assigned, n = _counted_barrier(spark, assigned, None)
+    assigned, n = counted_barrier(assigned)
     if n:
         assigned.write.mode("append").partitionBy("centroid_id").parquet(
             f"{path}/lists"
@@ -395,8 +395,8 @@ def rebalance_ivf_index(
     Returns lists split."""
     import json
 
+    from .barrier import barrier
     from .compact import recover_tree, swap_directory
-    from .upsert import _lineage_barrier
 
     lists_path = f"{path.rstrip('/')}/lists"
     recover_tree(lists_path)
@@ -428,15 +428,13 @@ def rebalance_ivf_index(
         sim1 = _dot(F.col("c_v"), sv1)
         mid = (size_by_cid[cid] + 1) // 2
         wr = W.orderBy(F.desc("__s1"), F.asc("neighbor_id"))
-        half = _lineage_barrier(
-            spark,
+        half = barrier(
             part.withColumn("__s1", sim1)
             .withColumn("__rn", F.row_number().over(wr))
             .withColumn(
                 "__h", F.when(F.col("__rn") <= mid, F.lit(0)).otherwise(F.lit(1))
             )
             .drop("__s1", "__rn"),
-            None,
         )
         # new centroids: per-half component means, ivf_centroids style
         comp = (

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .barrier import barrier
 from .dedup import _reuse
 
 
@@ -205,9 +206,9 @@ def learn_bpe_rules_scalable(
     non-overlapping fold — but with CONSTANT per-round cost at any
     ``n_merges``:
 
-    - each round's vocabulary is materialized with
-      ``localCheckpoint(eager=True)``, which TRUNCATES lineage: round
-      r+1's plan reads a checkpointed table instead of nesting rounds
+    - each round's vocabulary is materialized with a local
+      :func:`.barrier.barrier`, which TRUNCATES lineage: round r+1's
+      plan reads a checkpointed table instead of nesting rounds
       0..r, so Catalyst analysis cost stays flat where the chained
       dataflow learner's plan depth (and analysis time) grows per
       round — the documented ≲16-merge bound of
@@ -236,9 +237,11 @@ def learn_bpe_rules_scalable(
 
     from pyspark.sql import Row
 
-    cur = word_vocab(df, text_col).select(
-        "word", "freq", F.split("word", "").alias("syms")
-    ).localCheckpoint(eager=True)
+    cur = barrier(
+        word_vocab(df, text_col).select(
+            "word", "freq", F.split("word", "").alias("syms")
+        )
+    )
     rules: list = []
     for rank in range(n_merges):
         t0 = time.perf_counter()
@@ -262,13 +265,15 @@ def learn_bpe_rules_scalable(
             )
         )
         if rank < n_merges - 1:
-            nxt = cur.select(
-                "word",
-                "freq",
-                _apply_merge(
-                    F.col("syms"), F.lit(best.l), F.lit(best.r)
-                ).alias("syms"),
-            ).localCheckpoint(eager=True)
+            nxt = barrier(
+                cur.select(
+                    "word",
+                    "freq",
+                    _apply_merge(
+                        F.col("syms"), F.lit(best.l), F.lit(best.r)
+                    ).alias("syms"),
+                )
+            )
             cur.unpersist()  # safe: `best` is already on the driver
             cur = nxt
         if timings_out is not None:

@@ -552,7 +552,7 @@ def write_shingle_store(
     append are healed (removed) before any write or store read."""
     import os
 
-    from .upsert import _counted_barrier
+    from .barrier import counted_barrier
 
     spark = docs.sparkSession
     params = {"n": n}
@@ -571,7 +571,7 @@ def write_shingle_store(
     # materialize the delta once: it feeds the row append, the new
     # membership, and the count merge, and must not lazily re-read
     # the rows table it is being appended to
-    fresh, written = _counted_barrier(spark, fresh, None)
+    fresh, written = counted_barrier(fresh)
     if written:
         fresh.write.mode("append").parquet(_rows_path(path))
     _ensure_store_exists(sh, _rows_path(path))
@@ -607,32 +607,28 @@ def delete_from_shingle_store(
     rows that the next heal removes. Idempotent — a retried delete
     intersects the membership to nothing. Returns documents
     removed."""
+    from .barrier import barrier
     from .compact import swap_directory
-    from .upsert import _lineage_barrier
 
     _heal_shingle_store(spark, path)
     meta = _read_meta(spark, path)
     if meta is None:
         return 0
     ids0, df0, n_rows0 = meta
-    victims = _lineage_barrier(
-        spark,
+    victims = barrier(
         ids.select(id_col).distinct().join(
             ids0.select(id_col), id_col, "left_semi"
         ),
-        None,
     )
     n_victims = victims.count()
     if not n_victims:
         return 0
     rows_path = _rows_path(path)
-    dec = _lineage_barrier(
-        spark,
+    dec = barrier(
         spark.read.parquet(rows_path)
         .join(victims, id_col, "left_semi")
         .groupBy("sh")
         .agg(F.count("*").cast("long").alias("ddf")),
-        None,
     )
     removed_rows = dec.agg(F.sum("ddf")).first()[0] or 0
     new_ids = ids0.select(id_col).join(victims, id_col, "left_anti")

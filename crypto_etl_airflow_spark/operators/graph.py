@@ -13,7 +13,7 @@ not long chains).
 
 Scale posture: each round is one join edges⋈labels + one min-agg —
 all shuffles on the vertex id, so rounds reuse the same partitioning.
-Lineage is truncated every round (``localCheckpoint``) or the plan
+Lineage is truncated every round (:func:`.barrier.barrier`) or the plan
 would double each iteration; the driver only ever sees the
 changed-label COUNT (a scalar), never the data. The classic
 large-star/small-star optimization (fewer rounds on high-diameter
@@ -22,10 +22,13 @@ graphs) can replace the inner step without changing the contract.
 
 from __future__ import annotations
 
+import functools
 import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .barrier import barrier
 
 
 def connected_components(
@@ -46,15 +49,7 @@ def connected_components(
     unrecoverable — fine single-node, wrong on a 1000-executor run.
     Default stays the zero-IO local fast path.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
+    ckpt = functools.partial(barrier, checkpoint_dir=checkpoint_dir)
 
     und = ckpt(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -92,25 +87,6 @@ def connected_components(
     return labels
 
 
-def _ckpt_fn(df_session, checkpoint_dir: str | None):
-    """Per-round lineage truncation strategy (see
-    :func:`connected_components`): reliable checkpoints under
-    ``checkpoint_dir`` for cluster runs, zero-IO localCheckpoint for
-    single-node."""
-    if checkpoint_dir is not None:
-        df_session.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-
-    else:
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    return ckpt
-
-
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
@@ -145,7 +121,7 @@ def connected_components_star(
     under-propagates labels). ``checkpoint_dir`` selects reliable
     checkpoints exactly as in :func:`connected_components`.
     """
-    ckpt = _ckpt_fn(edges.sparkSession, checkpoint_dir)
+    ckpt = functools.partial(barrier, checkpoint_dir=checkpoint_dir)
 
     e = ckpt(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))

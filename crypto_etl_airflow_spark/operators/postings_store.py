@@ -60,9 +60,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.local import local_frame
+from .barrier import barrier, counted_barrier
 from .dedup import _reuse
 from .dedup_store import _ensure_store_exists
-from .upsert import _counted_barrier, _lineage_barrier
 
 _PARAMS = {"tokenizer": "ws_lower", "version": 2}
 _SIDECAR = "_postings_store_params.json"
@@ -250,7 +250,7 @@ def write_postings_store(
     # stats base must be read against the PRE-mutation fingerprint
     base_stats = _valid_stats(spark, path)
     epoch = _max_epoch(spark, path) + 1
-    fresh, n = _counted_barrier(spark, fresh, None)
+    fresh, n = counted_barrier(fresh)
     if n:
         tok = _reuse(_tokens(fresh, id_col, text_col))
         postings = tok.groupBy(id_col, "term").agg(
@@ -270,7 +270,7 @@ def write_postings_store(
                 F.lit(epoch).cast("long").alias("epoch"),
             )
         )
-        lengths = _lineage_barrier(spark, lengths, None)
+        lengths = barrier(lengths)
         lengths.write.mode("append").parquet(lengths_path)  # the commit
         drow = (
             lengths.filter(F.col("dl") > 0)
@@ -333,7 +333,7 @@ def delete_from_postings_store(
         .distinct()
         .join(live, "doc_id")  # inner: keeps each victim's dl
     )
-    victims = _lineage_barrier(spark, victims, None)
+    victims = barrier(victims)
     n = victims.select("doc_id").distinct().count()
     if n:
         upto = _max_epoch(spark, path)
@@ -398,10 +398,8 @@ def compact_postings_store(
 
     _check_sidecar(path)
     recover_tree(path)
-    live = _lineage_barrier(
-        spark,
+    live = barrier(
         read_live_doc_lengths(spark, path, id_col).select(id_col, "epoch"),
-        None,
     )
     for table in ("postings", "lengths"):
         tpath = f"{path}/{table}"

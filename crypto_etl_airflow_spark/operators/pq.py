@@ -422,7 +422,7 @@ def add_to_ivfpq_index(
     codebook and append to its lists, idempotently per id — identical
     contract to ``add_to_ivf_index`` (retrain = rebuild). Returns
     vectors appended."""
-    from .upsert import _counted_barrier
+    from .barrier import counted_barrier
 
     spark = new_vecs.sparkSession
     _check_dim(path, new_vecs, vec_col, "add")
@@ -446,7 +446,7 @@ def add_to_ivfpq_index(
     ).join(
         encoded.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
     ).select("neighbor_id", "codes", "v_nrm", "centroid_id")
-    lists, n = _counted_barrier(spark, lists, None)
+    lists, n = counted_barrier(lists)
     if n:
         lists.write.mode("append").partitionBy("centroid_id").parquet(
             f"{path}/codes"
@@ -533,8 +533,8 @@ def rebalance_ivfpq_index(
     import json
     import os
 
+    from .barrier import barrier, counted_barrier
     from .compact import recover_tree, swap_directory
-    from .upsert import _counted_barrier, _lineage_barrier
 
     codes_path = f"{path.rstrip('/')}/codes"
     recover_tree(codes_path)
@@ -563,7 +563,7 @@ def rebalance_ivfpq_index(
         part = spark.read.parquet(part_dir)
         n_part = size_by_cid[cid]
         joined = part.select("neighbor_id", "v_nrm").join(raw, "neighbor_id")
-        joined, n_joined = _counted_barrier(spark, joined, None)
+        joined, n_joined = counted_barrier(joined)
         if n_joined != n_part:
             raise ValueError(
                 f"rebalance of pq index {path}: corpus is missing raw "
@@ -575,8 +575,7 @@ def rebalance_ivfpq_index(
         sim1 = _dot(F.col("__v"), sv)
         mid = (n_part + 1) // 2
         wr = W.orderBy(F.desc("__s1"), F.asc("neighbor_id"))
-        half = _lineage_barrier(
-            spark,
+        half = barrier(
             joined.withColumn("__s1", sim1)
             .withColumn("__rn", F.row_number().over(wr))
             .withColumn(
@@ -584,7 +583,6 @@ def rebalance_ivfpq_index(
                 F.when(F.col("__rn") <= mid, F.lit(0)).otherwise(F.lit(1)),
             )
             .drop("__s1", "__rn"),
-            None,
         )
         comp = (
             half.select("__h", F.posexplode("__v").alias("pos", "x"))

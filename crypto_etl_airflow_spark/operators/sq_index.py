@@ -215,7 +215,7 @@ def add_to_ivfsq_index(
 ) -> int:
     """Frozen-quantizer idempotent add (the ann_index.py contract),
     appending int8-coded rows. Returns vectors appended."""
-    from .upsert import _lineage_barrier
+    from .barrier import barrier
 
     spark = new_vecs.sparkSession
     _check_dim(path, new_vecs, vec_col, "add")
@@ -234,7 +234,7 @@ def add_to_ivfsq_index(
         "c_v",
         dim=_stored_dim(path),
     )
-    rows = _lineage_barrier(spark, _encode_rows(assigned), None)
+    rows = barrier(_encode_rows(assigned))
     n = rows.count()
     if n:
         rows.write.mode("append").partitionBy("centroid_id").parquet(
@@ -316,8 +316,8 @@ def rebalance_ivfsq_lists(
     on the stored rows, which never change). Returns lists split."""
     import json
 
+    from .barrier import barrier
     from .compact import recover_tree, swap_directory
-    from .upsert import _lineage_barrier
 
     lists_path = f"{path.rstrip('/')}/lists"
     recover_tree(lists_path)
@@ -351,8 +351,7 @@ def rebalance_ivfsq_lists(
         sim1 = _dot(recon, sv)
         mid = (size_by_cid[cid] + 1) // 2
         wr = W.orderBy(F.desc("__s1"), F.asc("neighbor_id"))
-        half = _lineage_barrier(
-            spark,
+        half = barrier(
             part.withColumn("__s1", sim1)
             .withColumn("__rn", F.row_number().over(wr))
             .withColumn(
@@ -360,7 +359,6 @@ def rebalance_ivfsq_lists(
                 F.when(F.col("__rn") <= mid, F.lit(0)).otherwise(F.lit(1)),
             )
             .drop("__s1", "__rn"),
-            None,
         )
         comp = (
             half.select("__h", F.posexplode(recon).alias("pos", "x"))

@@ -36,8 +36,10 @@ import functools
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .barrier import counted_barrier
 
 
 class EmptyBatchError(ValueError):
@@ -71,10 +73,10 @@ def upsert_append(
     columns cannot be read as the batch's types fails the read.
 
     The write costs one barrier job plus the append (see
-    :func:`_counted_barrier`): the barrier's observed row count IS the
-    written count, and the batch is probed for emptiness only when
-    that count is 0 — an empty batch raises :class:`EmptyBatchError`
-    unless ``allow_empty``.
+    :func:`.barrier.counted_barrier`): the barrier's observed row
+    count IS the written count, and the batch is probed for emptiness
+    only when that count is 0 — an empty batch raises
+    :class:`EmptyBatchError` unless ``allow_empty``.
 
     ``checkpoint_dir`` switches the read-before-write barrier to a
     RELIABLE checkpoint beneath that directory: ``localCheckpoint``
@@ -104,7 +106,7 @@ def upsert_append(
 
     # the barrier truncates lineage: the append must not lazily
     # re-read the very path it is writing into (read-before-write)
-    fresh, n = _counted_barrier(spark, fresh, checkpoint_dir)
+    fresh, n = counted_barrier(fresh, checkpoint_dir)
     if n:
         writer = fresh.write.mode("append")
         if partition_by:
@@ -113,34 +115,6 @@ def upsert_append(
     elif not allow_empty and batch.isEmpty():
         raise EmptyBatchError("No data to load: empty batch")
     return n
-
-
-def _lineage_barrier(
-    spark: SparkSession, df: DataFrame, checkpoint_dir: str | None
-) -> DataFrame:
-    """Materialize ``df`` so later actions can't lazily re-read a path
-    the caller is about to rewrite. ``checkpoint_dir`` selects a
-    RELIABLE checkpoint (survives executor loss at cluster scale);
-    default is the single-node zero-IO ``localCheckpoint``."""
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _counted_barrier(
-    spark: SparkSession, df: DataFrame, checkpoint_dir: str | None
-) -> tuple[DataFrame, int]:
-    """:func:`_lineage_barrier`, plus ``df``'s row count from the same
-    job: an :class:`Observation` on the top of the checkpointed plan,
-    collected by the checkpoint's own job instead of a second
-    ``count()``. On top, it counts exactly the rows the checkpoint
-    holds, after every join or filter in ``df``."""
-    obs = Observation()
-    out = _lineage_barrier(
-        spark, df.observe(obs, F.count(F.lit(1)).alias("n")), checkpoint_dir
-    )
-    return out, obs.get["n"]
 
 
 def _swap_partition_dirs(staging: str, path: str, depth: int) -> None:
@@ -203,9 +177,7 @@ def merge_replace_keys(
     # clobber the crashed partition's rows.
     recover_tree(path)
 
-    fresh, n_fresh = _counted_barrier(
-        spark, batch.dropDuplicates(keys), checkpoint_dir
-    )
+    fresh, n_fresh = counted_barrier(batch.dropDuplicates(keys), checkpoint_dir)
     if not n_fresh:
         return (0, 0)
 
@@ -339,7 +311,7 @@ def upsert_append_sink(
     existing_keys = sink.read_keys(spark, keys)
     if existing_keys is not None:
         fresh = fresh.join(existing_keys.select(*keys), on=keys, how="left_anti")
-    fresh, n = _counted_barrier(spark, fresh, None)
+    fresh, n = counted_barrier(fresh)
     if n:
         sink.append(fresh)
     return n

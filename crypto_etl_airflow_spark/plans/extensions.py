@@ -641,14 +641,17 @@ def dedup_incremental_containment_maintained(
     return local_frame(spark, rows, out.schema)
 
 
-def _minhash_oracle(
-    n: int = 3, threshold: float = 0.8, num_hashes: int = 32, bands: int = 8
-) -> str:
-    """DuckDB mirror of the FULL portable MinHash-LSH pipeline
-    (operators/dedup.py::minhash_lsh_pairs(portable=True)): md5-48
-    shingle hashes, the same Python-literal (a_i, b_i) constants,
-    banded candidates, exact-Jaccard verification. Value-for-value —
-    the approximation itself is certified, not just its recall."""
+def _minhash_band_ctes(
+    shingles: str, num_hashes: int = 32, bands: int = 8
+) -> tuple[str, str]:
+    """The portable MinHash signatures and LSH band rows over the
+    relation ``shingles`` (doc_id, sh), as DuckDB CTEs — the
+    construction of operators/dedup.py::minhash_lsh_pairs(portable=True):
+    md5-48 shingle hashes and the same Python-literal (a_i, b_i)
+    constants. Emits ``mh_hashed``, ``mh_sig`` (doc_id, mh_0..) and
+    ``mh_bands`` (doc_id, band, k_0..), and returns them with the
+    band-key equality between the aliases ``l`` and ``rr``. Each
+    oracle adds its own candidate rule and scoring on top."""
     p = dedup.MERSENNE_P
     r = num_hashes // bands
     sig = ",\n               ".join(
@@ -658,28 +661,41 @@ def _minhash_oracle(
     band_rows = "\n        UNION ALL ".join(
         f"SELECT doc_id, {bi} AS band, "
         + ", ".join(f"mh_{bi * r + j} AS k_{j}" for j in range(r))
-        + " FROM sig"
+        + " FROM mh_sig"
         for bi in range(bands)
     )
     key_eq = " AND ".join(f"l.k_{j} = rr.k_{j}" for j in range(r))
-    return f"""
-    WITH {_SHINGLE_CTES},
-    hashed AS (
+    ctes = f"""
+    mh_hashed AS (
         SELECT doc_id,
                CAST(CONCAT('0x', substr(md5(sh), 1, 12)) AS BIGINT) % {p} AS h
-        FROM shingles
+        FROM {shingles}
     ),
-    sig AS (
+    mh_sig AS MATERIALIZED (
         SELECT doc_id,
                {sig}
-        FROM hashed GROUP BY doc_id
+        FROM mh_hashed GROUP BY doc_id
     ),
-    bands AS (
+    mh_bands AS MATERIALIZED (
         {band_rows}
-    ),
+    )"""
+    return ctes, key_eq
+
+
+def _minhash_oracle(
+    n: int = 3, threshold: float = 0.8, num_hashes: int = 32, bands: int = 8
+) -> str:
+    """DuckDB mirror of the FULL portable MinHash-LSH pipeline
+    (operators/dedup.py::minhash_lsh_pairs(portable=True)): md5-48
+    shingle hashes, the same Python-literal (a_i, b_i) constants,
+    banded candidates, exact-Jaccard verification. Value-for-value —
+    the approximation itself is certified, not just its recall."""
+    band_ctes, key_eq = _minhash_band_ctes("shingles", num_hashes, bands)
+    return f"""
+    WITH {_SHINGLE_CTES},{band_ctes},
     cand AS (
         SELECT DISTINCT l.doc_id AS id_a, rr.doc_id AS id_b
-        FROM bands l JOIN bands rr ON l.band = rr.band AND {key_eq}
+        FROM mh_bands l JOIN mh_bands rr ON l.band = rr.band AND {key_eq}
         WHERE l.doc_id < rr.doc_id
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
@@ -769,49 +785,24 @@ def _incremental_minhash_oracle(
     on the certified path. ``corpus_where`` restricts which documents
     exist at all — the store-delete contract (removed store members
     stop producing pairs)."""
-    p = dedup.MERSENNE_P
-    r = num_hashes // bands
-    sig = ",\n               ".join(
-        f"min(({a} * h + {b}) % {p}) AS mh_{i}"
-        for i, (a, b) in enumerate(dedup.minhash_constants(num_hashes))
-    )
-    band_rows = "\n        UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, "
-        + ", ".join(f"mh_{bi * r + j} AS k_{j}" for j in range(r))
-        + " FROM sig"
-        for bi in range(bands)
-    )
-    key_eq = " AND ".join(f"l.k_{j} = rr.k_{j}" for j in range(r))
+    band_ctes, key_eq = _minhash_band_ctes("shingles", num_hashes, bands)
     agree = " + ".join(
         f"CASE WHEN sa.mh_{i} = sb.mh_{i} THEN 1 ELSE 0 END"
         for i in range(num_hashes)
     )
     return f"""
-    WITH {_shingle_ctes(corpus_where)},
-    hashed AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', substr(md5(sh), 1, 12)) AS BIGINT) % {p} AS h
-        FROM shingles
-    ),
-    sig AS (
-        SELECT doc_id,
-               {sig}
-        FROM hashed GROUP BY doc_id
-    ),
-    bands AS (
-        {band_rows}
-    ),
+    WITH {_shingle_ctes(corpus_where)},{band_ctes},
     cand AS (
         SELECT DISTINCT least(l.doc_id, rr.doc_id) AS id_a,
                         greatest(l.doc_id, rr.doc_id) AS id_b
-        FROM bands l JOIN bands rr ON l.band = rr.band AND {key_eq}
+        FROM mh_bands l JOIN mh_bands rr ON l.band = rr.band AND {key_eq}
         WHERE l.doc_id <> rr.doc_id AND rr.doc_id % {batch_mod} = 0
     )
     SELECT c.id_a, c.id_b,
            round(({agree}) / {num_hashes}.0, 6) AS score
     FROM cand c
-    JOIN sig sa ON sa.doc_id = c.id_a
-    JOIN sig sb ON sb.doc_id = c.id_b
+    JOIN mh_sig sa ON sa.doc_id = c.id_a
+    JOIN mh_sig sb ON sb.doc_id = c.id_b
     WHERE ({agree}) / {num_hashes}.0 >= {threshold}
     """
 

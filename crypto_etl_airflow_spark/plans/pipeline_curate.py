@@ -73,8 +73,8 @@ from ..functions.text import (
     tokens,
 )
 from ..operators import dedup as dedup_ops
+from ..operators.barrier import barrier
 from ..operators.classify import feature_bucket
-from ..operators.dedup import MERSENNE_P, minhash_constants
 from ..operators.semdedup import semdedup_keep
 from ..sources.tables import load_table
 from .curation import (
@@ -86,6 +86,7 @@ from .curation import (
     _admission_hash,
     _augment_pii,
 )
+from .extensions import _minhash_band_ctes
 from .registry import register
 
 _BANNER = "Électricité générale déjà vu: ÀÇÑß æŒ naïveté — "
@@ -126,23 +127,12 @@ def _redact_sql(col: str = "text") -> str:
 def _minhash_pairs_sql(src: str, threshold: float = 0.8,
                        num_hashes: int = 32, bands: int = 8) -> str:
     """Portable MinHash-LSH verified near-dup pairs over ``src``
-    (must expose doc_id, text) — the `_minhash_oracle` construction
-    from plans/extensions.py, parametrized on its source relation.
-    Final CTE ``mh_pairs`` holds (id_a, id_b) at exact Jaccard ≥
+    (must expose doc_id, text): this pipeline's tokenization feeding
+    the shared signature/band CTEs (``_minhash_band_ctes``), then the
+    `_minhash_oracle` candidate rule and exact-Jaccard check. Final
+    CTE ``mh_pairs`` holds (id_a, id_b) at exact Jaccard ≥
     threshold."""
-    p = MERSENNE_P
-    r = num_hashes // bands
-    sig = ",\n               ".join(
-        f"min(({a} * mh_h + {b}) % {p}) AS mh_{i}"
-        for i, (a, b) in enumerate(minhash_constants(num_hashes))
-    )
-    band_rows = "\n        UNION ALL ".join(
-        f"SELECT doc_id, {bi} AS band, "
-        + ", ".join(f"mh_{bi * r + j} AS k_{j}" for j in range(r))
-        + " FROM mh_sig"
-        for bi in range(bands)
-    )
-    key_eq = " AND ".join(f"l.k_{j} = rr.k_{j}" for j in range(r))
+    band_ctes, key_eq = _minhash_band_ctes("msh", num_hashes, bands)
     return f"""
     mtoks AS (SELECT doc_id, {_TOKS} AS t FROM {src}),
     msh AS MATERIALIZED (
@@ -150,21 +140,7 @@ def _minhash_pairs_sql(src: str, threshold: float = 0.8,
                array_to_string(list_slice(t, i, i + 2), ' ') AS sh
         FROM mtoks,
              unnest(generate_series(1, greatest(len(t) - 2, 0))) AS u(i)
-    ),
-    mh_hashed AS (
-        SELECT doc_id,
-               CAST(CONCAT('0x', substr(md5(sh), 1, 12)) AS BIGINT) % {p}
-                   AS mh_h
-        FROM msh
-    ),
-    mh_sig AS MATERIALIZED (
-        SELECT doc_id,
-               {sig}
-        FROM mh_hashed GROUP BY doc_id
-    ),
-    mh_bands AS MATERIALIZED (
-        {band_rows}
-    ),
+    ),{band_ctes},
     mh_cand AS (
         SELECT DISTINCT l.doc_id AS id_a, rr.doc_id AS id_b
         FROM mh_bands l JOIN mh_bands rr ON l.band = rr.band AND {key_eq}
@@ -436,97 +412,47 @@ def _plant(docs: DataFrame) -> DataFrame:
     return base.unionByName(clones).unionByName(near)
 
 
-def _barrier_fn(
-    spark: SparkSession,
-    barrier: str = "local",
-    checkpoint_dir: str | None = None,
-    reclaim_disk: bool = True,
-):
-    """The pipeline's phase-barrier strategy (VERDICT r12: pluggable,
-    mirroring operators/graph.py's ``checkpoint_dir=``), as a
-    ``(df, stage_name) -> df`` materializer:
+def _reclaim_shuffle_disk(spark: SparkSession) -> None:
+    """Trigger a driver GC after an eager barrier so Spark can delete
+    the shuffle files the barrier just made dead.
 
-    - ``'local'`` (default) — ``localCheckpoint(eager=True)``: zero
-      extra IO, right for single-node/bench runs, but blocks are
-      node-local and do NOT survive executor loss;
-    - ``'parquet'`` — write the stage to
-      ``{checkpoint_dir}/{stage_name}`` and read it back: the classic
-      inter-stage materialization a cluster pipeline uses (replayable
-      from storage after executor loss, inspectable, resumable);
-    - ``'checkpoint'`` — reliable ``df.checkpoint(eager=True)``
-      beneath ``checkpoint_dir``: survives executor loss with less
-      ceremony than named parquet stages.
-
-    All three cut Catalyst's projection-collapse re-inlining equally
-    (the r12 driver-heap lesson); they differ only in fault posture
-    and IO cost.
-
-    When ``reclaim_disk`` is set, every mode triggers a driver GC
-    after the eager materialization: a barrier truncates lineage, so
-    the pre-barrier job's shuffle files are dead the moment it
-    returns — but Spark's ContextCleaner only reclaims them when the
-    JVM garbage-collects the dropped shuffle dependencies. Across the
-    pipeline's chain of barrier jobs the dead files otherwise
-    ACCUMULATE; measured at the ×1000 decade (r14): 39 GB of
-    superseded shuffle data from the token-table chains filled the
-    node's spill disk. The GC bounds peak disk at max-single-job
-    instead of sum-of-jobs, at ~0.1-0.3 s per barrier — which is why
-    it is GATED on input size (:func:`_stages` passes
-    ``reclaim_disk=False`` below ``session.SMALL_INPUT_BYTES``, where
-    the dead shuffle files are MBs and the GC pause is pure
-    overhead). The JVM handle is classic-Spark-only (ADVICE r14):
-    under Spark Connect there is no ``_jvm``, so the nudge degrades
-    to a no-op instead of failing the pipeline.
-    """
-
-    def _reclaim(df: DataFrame) -> DataFrame:
-        if reclaim_disk:
-            # the sparkContext PROPERTY itself raises under Spark
-            # Connect (ADVICE r15) — guard the whole access chain,
-            # not just the _jvm attribute, so the nudge really does
-            # degrade to a no-op on a Connect session
-            try:
-                jvm = getattr(spark.sparkContext, "_jvm", None)
-            except Exception:
-                jvm = None
-            if jvm is not None:
-                jvm.System.gc()
-        return df
-
-    if barrier == "local":
-        return lambda df, _name: _reclaim(df.localCheckpoint(eager=True))
-    if checkpoint_dir is None:
-        raise ValueError(f"barrier={barrier!r} requires checkpoint_dir")
-    if barrier == "checkpoint":
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        return lambda df, _name: _reclaim(df.checkpoint(eager=True))
-    if barrier == "parquet":
-        import os
-
-        def _parquet_barrier(df: DataFrame, name: str) -> DataFrame:
-            p = os.path.join(checkpoint_dir, name)
-            df.write.mode("overwrite").parquet(p)
-            return _reclaim(spark.read.parquet(p))
-
-        return _parquet_barrier
-    raise ValueError(
-        f"unknown barrier {barrier!r}: expected local|parquet|checkpoint"
-    )
+    A barrier truncates lineage, so the pre-barrier job's shuffle
+    files are dead the moment it returns — but Spark's ContextCleaner
+    only reclaims them when the JVM garbage-collects the dropped
+    shuffle dependencies. Across the pipeline's chain of barrier jobs
+    the dead files otherwise ACCUMULATE; measured at the ×1000 decade
+    (r14): 39 GB of superseded shuffle data from the token-table
+    chains filled the node's spill disk. The GC bounds peak disk at
+    max-single-job instead of sum-of-jobs, at ~0.1-0.3 s per barrier
+    — which is why :func:`_build_stages` gates it on input size. The
+    JVM handle is classic-Spark-only (ADVICE r14): the sparkContext
+    PROPERTY itself raises under Spark Connect (ADVICE r15), so the
+    whole access chain is guarded and the nudge degrades to a no-op
+    instead of failing the pipeline."""
+    try:
+        jvm = getattr(spark.sparkContext, "_jvm", None)
+    except Exception:
+        jvm = None
+    if jvm is not None:
+        jvm.System.gc()
 
 
 def _stages(
     spark: SparkSession,
     sf_dir: str,
-    barrier: str = "local",
     checkpoint_dir: str | None = None,
     semdedup_nlist: int = 16,
 ) -> dict[str, DataFrame]:
-    """Build every pipeline stage; keys match the oracle CTE names.
-    ``barrier``/``checkpoint_dir`` select the phase-barrier strategy
-    (:func:`_barrier_fn`). ``semdedup_nlist`` is SemDeDup's cluster
-    count — 16 fits the certification fixture; the scale contract is
-    nlist ∝ corpus size so clusters stay constant-sized (the decade
-    harness re-dials it per scale, tools/pipeline_scale_bench.py).
+    """Build every pipeline stage. The narrow (text-free) stage frames
+    are keyed by their oracle CTE names (``feat``, ``g1``..``g6``,
+    ``adm``); ``g1_text`` and ``g6_text`` carry the Gopher and
+    semantic-dedup survivors with their text, and ``packed`` is the
+    manifest input. ``checkpoint_dir`` selects reliable phase
+    barriers (:func:`barrier`; default local). ``semdedup_nlist`` is
+    SemDeDup's cluster count — 16 fits the certification fixture; the
+    scale contract is nlist ∝ corpus size so clusters stay
+    constant-sized (the decade harness re-dials it per scale,
+    tools/pipeline_scale_bench.py).
 
     The SemDeDup branch is built on a one-thread pool owned here: on
     success its result has been joined; if the text chain raises, the
@@ -536,9 +462,7 @@ def _stages(
 
     pool = ThreadPoolExecutor(max_workers=1)
     try:
-        return _build_stages(
-            spark, sf_dir, barrier, checkpoint_dir, semdedup_nlist, pool
-        )
+        return _build_stages(spark, sf_dir, checkpoint_dir, semdedup_nlist, pool)
     finally:
         pool.shutdown(wait=False, cancel_futures=True)
 
@@ -546,7 +470,6 @@ def _stages(
 def _build_stages(
     spark: SparkSession,
     sf_dir: str,
-    barrier: str,
     checkpoint_dir: str | None,
     semdedup_nlist: int,
     pool,
@@ -562,12 +485,13 @@ def _build_stages(
     # the reclaim ON: at unknown scale the safe failure mode is a
     # short GC pause, not a filled disk.
     _in_bytes = input_dir_bytes(sf_dir)
-    _bar = _barrier_fn(
-        spark,
-        barrier,
-        checkpoint_dir,
-        reclaim_disk=_in_bytes == 0 or _in_bytes >= SMALL_INPUT_BYTES,
-    )
+    reclaim_disk = _in_bytes == 0 or _in_bytes >= SMALL_INPUT_BYTES
+
+    def _bar(df: DataFrame) -> DataFrame:
+        out = barrier(df, checkpoint_dir)
+        if reclaim_disk:
+            _reclaim_shuffle_disk(spark)
+        return out
 
     # Stage 8's SemDeDup branch, submitted EARLY from a driver thread
     # (guide §2.6 — overlap independent jobs): it reads a DIFFERENT
@@ -631,8 +555,8 @@ def _build_stages(
     # signature aggregations over shingles of it) and the plan/codegen
     # blows the driver heap — observed, not hypothetical. A real
     # pipeline materializes between phases for the same reason; at
-    # cluster scale this barrier is the inter-stage parquet write
-    # (barrier='parquet'|'checkpoint', _barrier_fn).
+    # cluster scale this barrier is a reliable checkpoint beneath
+    # ``checkpoint_dir``.
     #
     # The Gopher signals (same expressions as text_gopher_filter)
     # ride in this SAME materialization pass: the token array is
@@ -675,11 +599,8 @@ def _build_stages(
             fra.alias("__fra"),
             nst.alias("__nst"),
             dbf.alias("__dbf"),
-        ),
-        "feat",
+        )
     )
-    feat = feat_wide.select("doc_id", "lang", "text", "n_tokens", "h")
-    featn = feat_wide.select("doc_id", "lang", "n_tokens", "h")
 
     # NARROW DATAFLOW through the gates — the r14 ×1000 lesson. The
     # first ×1000 funnel run filled 79 GB of spill disk and died: the
@@ -778,9 +699,8 @@ def _build_stages(
     # driver-heap rationale was cutting recomputation of the
     # classifier chain per consumer — an id barrier gives the same
     # protection at ~1/1000 the block size)
-    kept_ids = _bar(kept_ids, "g2")
+    kept_ids = _bar(kept_ids)
     g2n = g1n.join(kept_ids, "doc_id")
-    g2 = g1.join(kept_ids, "doc_id")  # lazy text view (tests/audits)
 
     # 5: perplexity percentile gate; LM trains on surviving 'en' docs.
     # Same shared-token-pass fusion as the classifier gate above: ONE
@@ -873,18 +793,17 @@ def _build_stages(
         .crossJoin(F.broadcast(n_ppl))
         .select("doc_id", pr.alias("pr"))
         .filter(F.col("pr") <= _PPL_KEEP)
-        .select("doc_id"),
-        "g3",
+        .select("doc_id")
     )
     # both token-table consumers (classifier fit via kept_ids, LM fit
     # via keep_ids) are now materialized — the exploded cache is dead
     # weight from here; free its blocks before the dedup stages start
     # filling the same disk.
     # INVARIANT (ADVICE r14): this unpersist runs at PLAN-BUILD time
-    # and is correct only because every _barrier_fn mode is EAGER —
-    # the kept_ids and keep_ids barriers above have already consumed
-    # the cache by the time control reaches here. A lazy barrier mode
-    # would silently turn both gate stages into full re-tokenize
+    # and is correct only because every barrier is EAGER — the
+    # kept_ids and keep_ids barriers above have already consumed the
+    # cache by the time control reaches here. A lazy barrier would
+    # silently turn both gate stages into full re-tokenize
     # passes; refuse it here rather than degrade.
     assert exploded.storageLevel.useMemory or exploded.storageLevel.useDisk, (
         "exploded token cache was never persisted — the shared-token-"
@@ -892,7 +811,6 @@ def _build_stages(
     )
     exploded.unpersist()
     g3n = g2n.join(keep_ids, "doc_id")
-    g3 = g2.join(keep_ids, "doc_id")  # lazy text view
 
     # 6: exact dedup (min-id canonical) — a NARROW window over the
     # barrier-precomputed fingerprint (dedup_ops.exact_duplicates'
@@ -907,8 +825,7 @@ def _build_stages(
     g4n = _bar(
         g3n.withColumn("__keep", F.min("doc_id").over(wfp))
         .filter(F.col("doc_id") == F.col("__keep"))
-        .select("doc_id", "lang", "n_tokens", "h"),
-        "g4n",
+        .select("doc_id", "lang", "n_tokens", "h")
     )
     # TEXT JOIN #1 (of exactly two): the MinHash stage needs shingles,
     # so the surviving ids pull text from the g1 filter view over the
@@ -917,8 +834,7 @@ def _build_stages(
     g4 = _bar(
         g1.select("doc_id", "text").join(g4n, "doc_id").select(
             "doc_id", "lang", "text", "n_tokens", "h"
-        ),
-        "g4",
+        )
     )
 
     # 7: MinHash-LSH verified near-dups — drop the larger id
@@ -928,7 +844,6 @@ def _build_stages(
     )
     mh_ids = mh.select(F.col("id_b").alias("doc_id")).distinct()
     g5n = g4n.join(mh_ids, "doc_id", "left_anti")
-    g5 = g4.join(mh_ids, "doc_id", "left_anti")  # lazy text view
 
     # 8: SemDeDup verdicts from the embedding space, applied by id —
     # built concurrently with the barrier chain above (see the
@@ -939,7 +854,9 @@ def _build_stages(
         F.col("vec_id").alias("doc_id")
     )
     g6n = g5n.join(verd_ids, "doc_id", "left_anti")
-    g6 = g5.join(verd_ids, "doc_id", "left_anti")  # text view (DSIR)
+    g6 = g4.join(mh_ids, "doc_id", "left_anti").join(  # text view (DSIR)
+        verd_ids, "doc_id", "left_anti"
+    )
 
     # 9: mixture-weighted token-budget admission (md5 order, per lang).
     # NOT a per-lang window — that sorts each language's ENTIRE corpus
@@ -1031,11 +948,9 @@ def _build_stages(
         "doc_id", "n_tokens", "text", "gcum", "rn"
     )
     return {
-        "feat": feat, "featn": featn,
-        "g1": g1, "g1n": g1n, "g2": g2, "g2n": g2n,
-        "g3": g3, "g3n": g3n, "g4": g4, "g4n": g4n,
-        "g5": g5, "g5n": g5n, "g6": g6, "g6n": g6n,
-        "adm": adm, "packed": packed,
+        "feat": feat_wide.select("doc_id", "lang", "n_tokens", "h"),
+        "g1": g1n, "g2": g2n, "g3": g3n, "g4": g4n, "g5": g5n, "g6": g6n,
+        "adm": adm, "g1_text": g1, "g6_text": g6, "packed": packed,
     }
 
 
@@ -1050,7 +965,6 @@ def pipeline_curate_corpus(
     spark: SparkSession,
     sf_dir: str,
     *,
-    barrier: str = "local",
     checkpoint_dir: str | None = None,
     semdedup_nlist: int = 16,
 ) -> DataFrame:
@@ -1062,10 +976,10 @@ def pipeline_curate_corpus(
     divergence ANYWHERE upstream (fold table, redaction order, gate
     thresholds, dedup verdicts, admission cumsums) fails the hash.
     See the module docstring for the stage chain and scale notes;
-    ``barrier``/``checkpoint_dir`` select the cluster-safe phase
-    barrier (:func:`_barrier_fn`)."""
+    ``checkpoint_dir`` selects the cluster-safe (reliable) phase
+    barrier."""
     s = _stages(
-        spark, sf_dir, barrier=barrier, checkpoint_dir=checkpoint_dir,
+        spark, sf_dir, checkpoint_dir=checkpoint_dir,
         semdedup_nlist=semdedup_nlist,
     )
     packed = s["packed"]
@@ -1177,7 +1091,7 @@ def pipeline_curate_dsir_sample(
     dyadic λ, exact Σλ, and deterministic Gumbel keys."""
     from ..operators.dsir import dsir_log_weights, dsir_resample_topk
 
-    g6 = _stages(spark, sf_dir)["g6"]
+    g6 = _stages(spark, sf_dir)["g6_text"]
     weights = dsir_log_weights(g6, g6.filter(F.col("lang") == "en"))
     return dsir_resample_topk(weights, k=100)
 
@@ -1203,12 +1117,9 @@ def pipeline_curate_funnel(
     changed (the r10 verdict's token-double-counting concern)."""
     s = _stages(spark, sf_dir, semdedup_nlist=semdedup_nlist)
     rows = None
-    for name, key in _FUNNEL_STAGES:
-        # count the NARROW twin of each stage where one exists (the
-        # key doubles as the oracle's CTE name, so the mapping to the
-        # text-free dataflow happens here, not in _FUNNEL_STAGES)
+    for name, cte in _FUNNEL_STAGES:
         r = (
-            s.get(f"{key}n", s[key])
+            s[cte]
             .agg(
                 F.count("*").cast("long").alias("n_docs"),
                 F.coalesce(F.sum("n_tokens"), F.lit(0))

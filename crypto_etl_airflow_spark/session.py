@@ -170,17 +170,6 @@ def input_dir_bytes(*paths: str) -> int:
     return total
 
 
-def tune_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
-    """Set ``spark.sql.shuffle.partitions`` from the actual input size
-    (a runtime-settable session conf — it takes effect for every plan
-    compiled afterwards) and return the chosen count. The harnesses
-    call this per input directory, so the measured partition-scaling
-    fix is default engine behavior, not a manual config footnote."""
-    n = shuffle_partitions_for_bytes(input_dir_bytes(*paths))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
-
-
 def tune_execution(spark: SparkSession, *paths: str) -> dict:
     """Size-aware execution posture, set from the ACTUAL input size
     (both confs are runtime-settable; they affect every plan compiled

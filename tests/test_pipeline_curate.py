@@ -55,48 +55,22 @@ def test_every_stage_fires_and_funnel_matches_manifest(spark):
 
 
 def test_cluster_safe_barriers_are_value_identical(spark, tmp_path):
-    """The parquet and reliable-checkpoint phase barriers (the
-    cluster-safe forms of the default localCheckpoint, VERDICT r12)
-    produce a byte-identical shard manifest: the barrier changes
-    fault posture and IO, never values."""
+    """The reliable-checkpoint phase barrier (the cluster-safe form of
+    the default localCheckpoint, VERDICT r12) produces a
+    byte-identical shard manifest: the barrier changes fault posture
+    and IO, never values."""
     base = sorted(
         map(tuple, pipeline_curate_corpus(spark, SF).collect())
     )
-    via_parquet = sorted(
-        map(
-            tuple,
-            pipeline_curate_corpus(
-                spark,
-                SF,
-                barrier="parquet",
-                checkpoint_dir=str(tmp_path / "stages"),
-            ).collect(),
-        )
-    )
-    assert via_parquet == base
     via_ckpt = sorted(
         map(
             tuple,
             pipeline_curate_corpus(
-                spark,
-                SF,
-                barrier="checkpoint",
-                checkpoint_dir=str(tmp_path / "ckpt"),
+                spark, SF, checkpoint_dir=str(tmp_path / "ckpt")
             ).collect(),
         )
     )
     assert via_ckpt == base
-
-
-def test_barrier_mode_validation(spark):
-    import pytest
-
-    from crypto_etl_airflow_spark.plans.pipeline_curate import _barrier_fn
-
-    with pytest.raises(ValueError, match="requires checkpoint_dir"):
-        _barrier_fn(spark, "parquet", None)
-    with pytest.raises(ValueError, match="unknown barrier"):
-        _barrier_fn(spark, "nope", "/tmp/x")
 
 
 def test_trained_gate_drops_every_planted_junk_doc(spark):
@@ -108,7 +82,8 @@ def test_trained_gate_drops_every_planted_junk_doc(spark):
     from crypto_etl_airflow_spark.plans.pipeline_curate import _JUNK, _stages
 
     s = _stages(spark, SF)
-    g1, g2 = s["g1"], s["g2"]
+    g1 = s["g1_text"]
+    g2 = g1.join(s["g2"].select("doc_id"), "doc_id", "left_semi")
     junk = F.col("text").contains(_JUNK)
     assert g1.filter(junk).count() > 0  # the plant reaches the gate
     assert g2.filter(junk).count() == 0  # ...and the gate kills it

@@ -70,18 +70,17 @@ def main() -> None:
     scales = [a for a in args if not a.startswith("--")] or list(DIRS)
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crypto-etl-spark-ivf-recall")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    from crypto_etl_airflow_spark.session import get_spark
+
+    spark = get_spark(
+        "crypto-etl-spark-ivf-recall",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -45,18 +45,16 @@ def main() -> None:
     scales = sys.argv[1:] or ["x100", "x1000"]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crypto-etl-spark-ngram-attribution")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    from crypto_etl_airflow_spark.session import get_spark
+
+    spark = get_spark(
+        "crypto-etl-spark-ngram-attribution",
+        master=f"local[{cpus}]",
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

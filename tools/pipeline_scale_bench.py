@@ -139,68 +139,16 @@ def main() -> None:
         pipeline_curate_corpus,
         pipeline_curate_funnel,
     )
-    from crypto_etl_airflow_spark.session import (
-        REUSE_LEVEL_CONF,
-        SMALL_INPUT_BYTES,
-        input_dir_bytes,
-        reuse_level_for_bytes,
-        shuffle_partitions_for_bytes,
-    )
+    from crypto_etl_airflow_spark.session import tune_execution
 
     # each scale side runs under the engine's size-aware posture for
-    # THAT side (session.tune_execution's policy, applied per side
-    # because one session measures both): partitions proportional +
-    # AQE off in the tiny scheduling-bound regime, core-floored +
-    # AQE on at real scale. Physical strategy only — values and the
+    # THAT side: session.tune_execution, applied before each side
+    # because one session measures both (partitions proportional +
+    # AQE off in the tiny scheduling-bound regime, core-floored + AQE
+    # on at real scale). Physical strategy only — values and the
     # funnel stage counts are posture-independent.
-    # SPARK_GRAFT_REUSE_LEVEL forces one _reuse StorageLevel on BOTH
-    # sides — the A/B measurement knob behind the r16 reuse-posture
-    # numbers (a measurement override, never an engine semantics
-    # switch).
-    # Validated HERE: _reuse falls back to the default on unknown
-    # names, which would record one level in the posture JSON while
-    # silently measuring the other — the exact corruption an A/B
-    # knob must fail loudly on.
-    reuse_override = os.environ.get("SPARK_GRAFT_REUSE_LEVEL")
-    if reuse_override is not None:
-        from pyspark import StorageLevel
-
-        if not isinstance(
-            getattr(StorageLevel, reuse_override, None), StorageLevel
-        ):
-            raise SystemExit(
-                f"SPARK_GRAFT_REUSE_LEVEL={reuse_override!r} is not a "
-                "pyspark.StorageLevel name"
-            )
-
-    def _posture(*dirs: str) -> tuple[int, bool, str]:
-        n = input_dir_bytes(*dirs)
-        return (
-            shuffle_partitions_for_bytes(n, cpus=int(cpus)),
-            n >= SMALL_INPUT_BYTES,
-            # tune_execution's third knob (r16): disk-backed _reuse
-            # persists below the spill bound, MEMORY_ONLY at scale
-            reuse_override or reuse_level_for_bytes(n),
-        )
-
-    parts_1x, aqe_1x, reuse_1x = _posture(
-        f"{src}/documents.parquet", f"{src}/embeddings.parquet"
-    )
-    parts_kx, aqe_kx, reuse_kx = _posture(
-        f"{out}/documents.parquet", f"{out}/embeddings.parquet"
-    )
-
-    def _set_posture(parts: int, aqe: bool, reuse: str) -> None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
-        spark.conf.set(REUSE_LEVEL_CONF, reuse)
-
-    print(
-        f"# posture: 1x parts={parts_1x} aqe={aqe_1x} reuse={reuse_1x}; "
-        f"{factor}x parts={parts_kx} aqe={aqe_kx} reuse={reuse_kx}",
-        file=sys.stderr,
-        flush=True,
-    )
+    side_1x = (f"{src}/documents.parquet", f"{src}/embeddings.parquet")
+    side_kx = (f"{out}/documents.parquet", f"{out}/embeddings.parquet")
 
     # warm-up outside any timed window — page cache + parquet footers
     # on BOTH sides, so IO (linear anyway) doesn't ride the first
@@ -271,12 +219,17 @@ def main() -> None:
         # from the first run instead. corpus-first: same budget
         # rationale for the corpus leg.
         skip_k_steady = mode in ("funnel-first", "corpus-first")
-        _set_posture(parts_1x, aqe_1x, reuse_1x)
+        posture_1x = tune_execution(spark, *side_1x)
         if not skip_first:
             _clear_caches()
             row["t1_first"], _ = _timed(builder, src, 16)
         row["t1_steady"], cnt1 = _timed(builder, src, 16)
-        _set_posture(parts_kx, aqe_kx, reuse_kx)
+        posture_kx = tune_execution(spark, *side_kx)
+        print(
+            f"# posture: 1x {posture_1x}; {factor}x {posture_kx}",
+            file=sys.stderr,
+            flush=True,
+        )
         if not skip_first:
             _clear_caches()
             row["tK_first"], cntK_first = _timed(builder, out, 16 * factor)
@@ -335,18 +288,7 @@ def main() -> None:
                 # partition regimes, so plan_identical=False is
                 # EXPECTED when the postures differ — read plan_diff
                 # against this field
-                "posture": {
-                    "1x": {
-                        "parts": parts_1x,
-                        "aqe": aqe_1x,
-                        "reuse": reuse_1x,
-                    },
-                    f"{factor}x": {
-                        "parts": parts_kx,
-                        "aqe": aqe_kx,
-                        "reuse": reuse_kx,
-                    },
-                },
+                "posture": {"1x": posture_1x, f"{factor}x": posture_kx},
                 "queries": results,
                 "funnel_kx": funnel_k,
             }

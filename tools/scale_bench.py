@@ -284,18 +284,15 @@ def main() -> None:
     out = os.environ.get("SPARK_GRAFT_SCALE_DIR", f"/tmp/scale_bench_x{factor}")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from crypto_etl_airflow_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crypto-etl-spark-scale-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    spark = get_spark(
+        "crypto-etl-spark-scale-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -115,19 +115,16 @@ def main() -> None:
     only = set(sys.argv[1:])
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("crypto-etl-spark-store-scale")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    from crypto_etl_airflow_spark.session import get_spark
+
+    spark = get_spark(
+        "crypto-etl-spark-store-scale",
+        master=f"local[{cpus}]",
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
