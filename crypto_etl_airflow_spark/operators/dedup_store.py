@@ -607,7 +607,7 @@ def delete_from_shingle_store(
     rows that the next heal removes. Idempotent — a retried delete
     intersects the membership to nothing. Returns documents
     removed."""
-    from .barrier import barrier
+    from .barrier import barrier, counted_barrier
     from .compact import swap_directory
 
     _heal_shingle_store(spark, path)
@@ -615,12 +615,11 @@ def delete_from_shingle_store(
     if meta is None:
         return 0
     ids0, df0, n_rows0 = meta
-    victims = barrier(
+    victims, n_victims = counted_barrier(
         ids.select(id_col).distinct().join(
             ids0.select(id_col), id_col, "left_semi"
         ),
     )
-    n_victims = victims.count()
     if not n_victims:
         return 0
     rows_path = _rows_path(path)

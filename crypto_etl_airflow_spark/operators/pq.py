@@ -1,5 +1,5 @@
 """Persisted IVF-PQ ANN index — product quantization on top of the
-IVF inverted-list layout (operators/ann_index.py).
+shared IVF list store (operators/ivf_store.py).
 
 Why PQ at 100 TB: the IVF-flat index stores every corpus vector raw
 (a 64-dim double vector is 512 bytes; float32 in a real encoder, still
@@ -27,7 +27,7 @@ Index layout under ``path``:
   BY centroid_id: one co-located parquet partition per inverted list,
   so a query's nprobe pruning reads only its probed lists, exactly
   like the flat index — but each row is ~m + 8 bytes instead of a raw
-  vector.
+  vector. Add, delete, compact and rebalance are ivf_store's.
 
 Determinism (the whole pipeline is recomputable in ANSI SQL and
 certified value-for-value by the driver oracle,
@@ -60,96 +60,40 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot as _dot, norm as _norm
-from ..sources.local import local_frame
+from . import ivf_store
 from .similarity import (
     BROADCAST_PROBE_LIMIT,
     _nearest_centroid,
     bounded_broadcast,
     capped_probe_count,
-    ivf_centroids,
 )
 
-_PARAMS_SIDECAR = "_ivfpq_index_params.json"
+# the PQ rung's list rows: m one-byte residual codes and the true norm
+LAYOUT = ivf_store.Layout(
+    label="ivfpq",
+    sidecar="_ivfpq_index_params.json",
+    table="codes",
+    schema=(
+        "neighbor_id long, codes array<tinyint>, v_nrm double, centroid_id long"
+    ),
+)
 
 
-def _sidecar(path: str) -> str:
-    import os
-
-    return os.path.join(path, _PARAMS_SIDECAR)
-
-
-def _validate_params(path: str, params: dict) -> None:
-    """One quantizer regime per index: codes produced under a
-    different (nlist, m, ksub, dim) would silently corrupt every
-    ADC score."""
-    import json
-    import os
-
-    if os.path.exists(_sidecar(path)):
-        with open(_sidecar(path)) as f:
-            existing = json.load(f)
-        if existing != params:
-            raise ValueError(
-                f"ivfpq index {path} was built with {existing}; "
-                f"refusing to mix with {params}"
-            )
-
-
-def _read_params(path: str) -> dict:
-    import json
-
-    with open(_sidecar(path)) as f:
-        return json.load(f)
-
-
-def _require_residual(path: str, params: dict) -> None:
+def _require_residual(path: str) -> dict:
     """Encoding-regime gate for READ/APPEND paths (ADVICE r12): build
-    refuses to mix regimes via ``_validate_params``, but a
-    pre-existing raw-encoded store (an earlier build, or a stale
-    bench cache) would otherwise be queried with the residual
-    ``cdot`` term silently added — inflated adc_sim — or appended
-    with residual codes mixed into raw lists. Same refusal shape as
-    ``_validate_params``."""
+    refuses to mix regimes, but a pre-existing raw-encoded store (an
+    earlier build, or a stale bench cache) would otherwise be queried
+    with the residual ``cdot`` term silently added — inflated adc_sim
+    — or appended with residual codes mixed into raw lists. Returns
+    the sidecar params."""
+    params = ivf_store.read_params(LAYOUT, path) or {}
     if params.get("encoding") != "residual":
         raise ValueError(
             f"ivfpq index {path} was built with encoding="
             f"{params.get('encoding')!r}; this engine scores and "
             "appends under residual encoding — rebuild the index"
         )
-
-
-def _read_centroids(spark: SparkSession, path: str) -> DataFrame:
-    """Heal-before-read (ADVICE r12): rebalance's commit point swaps
-    the centroids table itself; recover a crashed swap's aside copy
-    before reading, as read_ivf_centroids does on the flat rung."""
-    from .compact import recover_directory
-
-    recover_directory(f"{path}/centroids")
-    return spark.read.parquet(f"{path}/centroids")
-
-
-def _first_dim(df: DataFrame, vec_col: str) -> int | None:
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return None if row is None else row.d
-
-
-def _check_dim(path: str, df: DataFrame, vec_col: str, what: str) -> None:
-    """Refuse vectors whose dimension differs from the training
-    regime (the ann_index.py discipline): a mismatched slice/zip
-    yields NULL products that would silently mis-encode."""
-    import os
-
-    if not os.path.exists(_sidecar(path)):
-        return
-    params = _read_params(path)
-    got = _first_dim(df, vec_col)
-    if got is None or params.get("dim") is None:
-        return
-    if params["dim"] != got:
-        raise ValueError(
-            f"ivfpq index {path} holds {params['dim']}-dim vectors; "
-            f"refusing to {what} {got}-dim vectors"
-        )
+    return params
 
 
 def _subvectors(
@@ -210,7 +154,7 @@ def train_pq_codebook(
 
     Returns (m_id, code, c_vec). No RNG; stable across runs and
     engines."""
-    dim = _first_dim(corpus, vec_col)
+    dim = ivf_store.first_dim(corpus, vec_col)
     if dim is None:
         raise ValueError("cannot train a PQ codebook on an empty corpus")
     if dim % m != 0:
@@ -330,6 +274,18 @@ def encode_pq(
     return codes.join(norms, id_col)
 
 
+def _code_rows(res: DataFrame, codebook: DataFrame, id_col: str) -> DataFrame:
+    """(neighbor_id, codes, v_nrm, centroid_id) list rows from
+    :func:`_with_residuals` output: the residual encoded, the RAW
+    vector's norm kept."""
+    encoded = encode_pq(res, codebook, id_col, "resid", norm_vec_col="__v")
+    return res.select(
+        F.col(id_col).alias("neighbor_id"), "centroid_id"
+    ).join(
+        encoded.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
+    ).select("neighbor_id", "codes", "v_nrm", "centroid_id")
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -353,63 +309,30 @@ def build_ivfpq_index(
     ``⟨probe, centroid⟩`` term back per probed list. The sidecar
     records ``encoding: residual`` — raw-encoded stores from earlier
     builds are a different regime and are refused on rebuild."""
-    import json
-
     params = {
         "nlist": nlist,
         "m": m,
         "ksub": ksub,
-        "dim": _first_dim(corpus, vec_col),
+        "dim": ivf_store.first_dim(corpus, vec_col),
         "encoding": "residual",
     }
-    _validate_params(path, params)
-    d = params["dim"]
-    dim = int(d) if d is not None and d > 0 else None
-    cents = ivf_centroids(corpus, id_col, vec_col, nlist, dim=dim)
-    cents.write.mode("error").parquet(f"{path}/centroids")
-    res = _with_residuals(corpus, cents, id_col, vec_col, dim=dim)
-    codebook = train_pq_codebook(res, id_col, "resid", m, ksub)
-    codebook.write.mode("error").parquet(f"{path}/codebook")
 
-    encoded = encode_pq(res, codebook, id_col, "resid", norm_vec_col="__v")
-    lists = res.select(
-        F.col(id_col).alias("neighbor_id"), "centroid_id"
-    ).join(
-        encoded.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
-    ).select("neighbor_id", "codes", "v_nrm", "centroid_id")
-    lists.write.mode("error").partitionBy("centroid_id").parquet(
-        f"{path}/codes"
-    )
-    with open(_sidecar(path), "w") as f:
-        json.dump(params, f)
+    def encode(vecs, cents, id_col, vec_col, dim):
+        res = _with_residuals(vecs, cents, id_col, vec_col, dim=dim)
+        codebook = train_pq_codebook(res, id_col, "resid", m, ksub)
+        codebook.write.mode("error").parquet(f"{path}/codebook")
+        return _code_rows(res, codebook, id_col)
+
+    ivf_store.build(LAYOUT, corpus, path, id_col, vec_col, params, encode)
 
 
 def read_pq_codebook(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(f"{path}/codebook")
 
 
-_CODES_SCHEMA = (
-    "neighbor_id long, codes array<tinyint>, v_nrm double, centroid_id long"
-)
-
-
 def read_ivfpq_codes(spark: SparkSession, path: str) -> DataFrame:
-    """Read the coded inverted lists; partition-column type inference
-    normalized to long (the ann_index.py lesson); an empty partitioned
-    write degrades to the canonical zero-row schema."""
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    codes_path = f"{path}/codes"
-    try:
-        return spark.read.parquet(codes_path).withColumn(
-            "centroid_id", F.col("centroid_id").cast("long")
-        )
-    except AnalysisException:
-        if os.path.isdir(codes_path):
-            return local_frame(spark, [], _CODES_SCHEMA)
-        raise
+    """The coded lists; an empty-corpus build reads as zero rows."""
+    return ivf_store.read_lists(LAYOUT, spark, path)
 
 
 def add_to_ivfpq_index(
@@ -419,93 +342,25 @@ def add_to_ivfpq_index(
     vec_col: str = "embedding",
 ) -> int:
     """Encode an ingest batch with the FROZEN coarse quantizer and
-    codebook and append to its lists, idempotently per id — identical
-    contract to ``add_to_ivf_index`` (retrain = rebuild). Returns
-    vectors appended."""
-    from .barrier import counted_barrier
+    codebook and append to its lists, idempotently per id — the
+    ivf_store add (retrain = rebuild): assign, subtract the centroid,
+    encode the residual, keep the RAW norm. Returns vectors
+    appended."""
+    _require_residual(path)
+    codebook = read_pq_codebook(new_vecs.sparkSession, path)
 
-    spark = new_vecs.sparkSession
-    _check_dim(path, new_vecs, vec_col, "add")
-    _require_residual(path, _read_params(path))
-    cents = _read_centroids(spark, path)
-    codebook = read_pq_codebook(spark, path)
-    existing = read_ivfpq_codes(spark, path).select(
-        F.col("neighbor_id").alias(id_col)
-    )
-    fresh = new_vecs.join(existing, id_col, "left_anti")
-    # frozen-quantizer residual encoding: assign, subtract the
-    # centroid, encode the residual, keep the RAW norm
-    d = _read_params(path).get("dim")
-    res = _with_residuals(
-        fresh, cents, id_col, vec_col,
-        dim=int(d) if d is not None and d > 0 else None,
-    )
-    encoded = encode_pq(res, codebook, id_col, "resid", norm_vec_col="__v")
-    lists = res.select(
-        F.col(id_col).alias("neighbor_id"), "centroid_id"
-    ).join(
-        encoded.withColumnRenamed(id_col, "neighbor_id"), "neighbor_id"
-    ).select("neighbor_id", "codes", "v_nrm", "centroid_id")
-    lists, n = counted_barrier(lists)
-    if n:
-        lists.write.mode("append").partitionBy("centroid_id").parquet(
-            f"{path}/codes"
-        )
-    return n
+    def encode(vecs, cents, id_col, vec_col, dim):
+        res = _with_residuals(vecs, cents, id_col, vec_col, dim=dim)
+        return _code_rows(res, codebook, id_col)
+
+    return ivf_store.add(LAYOUT, new_vecs, path, id_col, vec_col, encode)
 
 
 def compact_ivfpq_codes(spark: SparkSession, path: str) -> int:
-    """Rewrite the ``codes`` table into one file per inverted list,
-    PRESERVING the centroid_id partition layout (the
-    ``compact_ivf_lists`` move for the compressed index): every
-    ``add_to_ivfpq_index`` appends one small file per touched
-    partition, and with ~16-byte rows the per-file task overhead
-    dominates even sooner than on the flat index. Crash-safe via the
-    staging-dir swap. Returns the new parquet file count."""
-    from .compact import parquet_file_count, recover_tree, swap_directory
-
-    codes_path = f"{path.rstrip('/')}/codes"
-    recover_tree(codes_path)
-    df = spark.read.parquet(codes_path)
-    staging = codes_path + ".__compact_tmp"
-    (
-        df.repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(staging)
-    )
-    swap_directory(staging, codes_path)
-    return parquet_file_count(codes_path)
-
-
-def _clean_orphan_pq_partitions(spark: SparkSession, path: str) -> int:
-    """Remove codes partitions whose centroid_id is absent from the
-    centroids table — rebalance crash leftovers (query-invisible,
-    swept so full-table reads never double-count)."""
-    import os
-    import shutil
-
-    codes_path = f"{path.rstrip('/')}/codes"
-    if not os.path.isdir(codes_path):
-        return 0
-    live = {
-        int(r.centroid_id)
-        for r in _read_centroids(spark, path)
-        .select("centroid_id")
-        .collect()
-    }
-    removed = 0
-    for entry in sorted(os.listdir(codes_path)):
-        if not entry.startswith("centroid_id="):
-            continue
-        try:
-            cid = int(entry.split("=", 1)[1])
-        except ValueError:
-            continue
-        if cid not in live:
-            shutil.rmtree(os.path.join(codes_path, entry))
-            removed += 1
-    return removed
+    """One file per inverted list, layout preserved (ivf_store) — with
+    ~16-byte rows the per-file task overhead dominates even sooner
+    than on the flat index. Returns the new parquet file count."""
+    return ivf_store.compact(LAYOUT, spark, path)
 
 
 def rebalance_ivfpq_index(
@@ -516,52 +371,25 @@ def rebalance_ivfpq_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """The compressed rung's nlist re-dial: split every coded
-    inverted list above the cap (median of cosine-to-lowest-id over
-    RAW vectors) and RE-ENCODE the moved rows' residuals against
-    their new centroid under the FROZEN codebook — residual codes are
-    relative to the centroid they were encoded with, so unlike the
-    flat/SQ8 rungs the stored rows cannot simply move lists; the raw
-    vectors must be fetched from ``corpus`` (exactly why FAISS's
-    equivalent is a rebuild — this touches only the hot lists).
-    Vectors of hot lists missing from ``corpus`` are an error (a
-    silent drop would corrupt recall). Same crash ordering as the
-    flat form: re-encoded halves land in final dirs unreferenced, the
-    centroids swap commits, superseded partitions become
-    query-invisible orphans swept by the next rebalance. Returns
-    lists split."""
-    import json
-    import os
+    """The compressed rung's nlist re-dial: ivf_store's median split
+    of every coded list above the cap, ranked over RAW vectors, with
+    the moved rows' residuals RE-ENCODED against their new centroid
+    under the FROZEN codebook — residual codes are relative to the
+    centroid they were encoded with, so unlike the flat/SQ8 rungs the
+    stored rows cannot simply move lists; the raw vectors must be
+    fetched from ``corpus`` (exactly why FAISS's equivalent is a
+    rebuild — this touches only the hot lists). Vectors of hot lists
+    missing from ``corpus`` are an error (a silent drop would corrupt
+    recall). Returns lists split."""
+    from .barrier import counted_barrier
 
-    from .barrier import barrier, counted_barrier
-    from .compact import recover_tree, swap_directory
-
-    codes_path = f"{path.rstrip('/')}/codes"
-    recover_tree(codes_path)
-    _clean_orphan_pq_partitions(spark, path)
     codebook = read_pq_codebook(spark, path)
-    sizes = (
-        read_ivfpq_codes(spark, path)
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    size_by_cid = {int(r.centroid_id): int(r.n) for r in sizes}
-    hot = sorted(c for c, n in size_by_cid.items() if n > max_list_size)
-    if not hot:
-        return 0
-    cents = _read_centroids(spark, path)
-    next_id = int(cents.agg(F.max("centroid_id")).first()[0]) + 1
     raw = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     )
-    new_rows: list[tuple[int, list[float], float]] = []
-    split_cids: list[int] = []
-    for cid in hot:
-        part_dir = f"{codes_path}/centroid_id={cid}"
-        part = spark.read.parquet(part_dir)
-        n_part = size_by_cid[cid]
+
+    def fetch(part: DataFrame, cid: int, n_part: int) -> DataFrame:
         joined = part.select("neighbor_id", "v_nrm").join(raw, "neighbor_id")
         joined, n_joined = counted_barrier(joined)
         if n_joined != n_part:
@@ -570,70 +398,24 @@ def rebalance_ivfpq_index(
                 f"vectors for list centroid_id={cid}; residual codes "
                 "cannot be re-encoded without them"
             )
-        seed = joined.orderBy("neighbor_id").limit(1).collect()[0]
-        sv = F.array(*[F.lit(float(x)) for x in seed["__v"]])
-        sim1 = _dot(F.col("__v"), sv)
-        mid = (n_part + 1) // 2
-        wr = W.orderBy(F.desc("__s1"), F.asc("neighbor_id"))
-        half = barrier(
-            joined.withColumn("__s1", sim1)
-            .withColumn("__rn", F.row_number().over(wr))
-            .withColumn(
-                "__h",
-                F.when(F.col("__rn") <= mid, F.lit(0)).otherwise(F.lit(1)),
-            )
-            .drop("__s1", "__rn"),
+        return joined
+
+    def write_half(rows: DataFrame, c_vec: list[float], out_dir: str) -> None:
+        cvec = F.array(*[F.lit(float(x)) for x in c_vec])
+        sub = rows.select(
+            "neighbor_id",
+            "__v",
+            F.zip_with("__v", cvec, lambda x, y: x - y).alias("resid"),
         )
-        comp = (
-            half.select("__h", F.posexplode("__v").alias("pos", "x"))
-            .groupBy("__h", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("m"))
-            .groupBy("__h")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "__h",
-                F.transform("pm", lambda s: s.getField("m")).alias("c_vec"),
-            )
-            .collect()
-        )
-        by_h = {int(r["__h"]): list(r.c_vec) for r in comp}
-        ids = (next_id, next_id + 1)
-        next_id += 2
-        for h in (0, 1):
-            vec = by_h[h]
-            nrm = sum(x * x for x in vec) ** 0.5
-            new_rows.append((ids[h], vec, nrm))
-            cvec = F.array(*[F.lit(float(x)) for x in vec])
-            sub = half.filter(F.col("__h") == h).select(
-                "neighbor_id",
-                "__v",
-                F.zip_with("__v", cvec, lambda x, y: x - y).alias("resid"),
-            )
-            encoded = encode_pq(
-                sub, codebook, "neighbor_id", "resid", norm_vec_col="__v"
-            ).select("neighbor_id", "codes", "v_nrm")
-            encoded.write.mode("overwrite").parquet(
-                f"{codes_path}/centroid_id={ids[h]}"
-            )
-        split_cids.append(cid)
-    kept_cents = cents.filter(~F.col("centroid_id").isin(split_cids))
-    added = local_frame(
-        spark, new_rows, "centroid_id long, c_vec array<double>, c_norm double"
+        encode_pq(
+            sub, codebook, "neighbor_id", "resid", norm_vec_col="__v"
+        ).select("neighbor_id", "codes", "v_nrm").write.mode(
+            "overwrite"
+        ).parquet(out_dir)
+
+    return ivf_store.rebalance(
+        LAYOUT, spark, path, max_list_size, F.col("__v"), fetch, write_half
     )
-    staging = f"{path}/centroids.__rebal_tmp"
-    kept_cents.unionByName(added).coalesce(1).write.mode("overwrite").parquet(
-        staging
-    )
-    swap_directory(staging, f"{path}/centroids")
-    _clean_orphan_pq_partitions(spark, path)
-    sc_path = _sidecar(path)
-    if os.path.exists(sc_path):
-        with open(sc_path) as f:
-            params = json.load(f)
-        params["nlist"] = int(params.get("nlist", 0)) + len(split_cids)
-        with open(sc_path, "w") as f:
-            json.dump(params, f)
-    return len(split_cids)
 
 
 def delete_from_ivfpq_index(
@@ -642,33 +424,10 @@ def delete_from_ivfpq_index(
     ids: DataFrame,
     id_col: str = "vec_id",
 ) -> int:
-    """Remove vectors by id, rewriting ONLY the inverted-list
-    partitions that contain them (the ``delete_from_ivf_index``
-    partition-targeted shape; quantizers untouched). Idempotent.
-    Returns vectors removed."""
-    from .compact import recover_tree, swap_directory
-
-    codes_path = f"{path.rstrip('/')}/codes"
-    recover_tree(codes_path)
-    ids_only = ids.select(F.col(id_col).alias("neighbor_id")).distinct()
-    hit = (
-        read_ivfpq_codes(spark, path)
-        .join(F.broadcast(ids_only), "neighbor_id", "left_semi")
-        .groupBy("centroid_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    removed = 0
-    for row in hit:
-        part_dir = f"{codes_path}/centroid_id={row.centroid_id}"
-        kept = spark.read.parquet(part_dir).join(
-            F.broadcast(ids_only), "neighbor_id", "left_anti"
-        )
-        staging = part_dir + ".__delete_tmp"
-        kept.write.mode("overwrite").parquet(staging)
-        swap_directory(staging, part_dir)
-        removed += row.n
-    return removed
+    """Remove vectors by id, rewriting ONLY the list partitions that
+    hold them (ivf_store; quantizers untouched). Idempotent. Returns
+    vectors removed."""
+    return ivf_store.delete(LAYOUT, spark, path, ids, id_col)
 
 
 def query_ivfpq_index(
@@ -698,19 +457,14 @@ def query_ivfpq_index(
     dropped and AQE shuffles instead of risking a driver OOM;
     ``None`` disables the guard."""
     spark = probes.sparkSession
-    _check_dim(path, probes, vec_col, "query with")
-    params = _read_params(path)
-    _require_residual(path, params)
+    ivf_store.check_dim(LAYOUT, path, probes, vec_col, "query with")
+    params = _require_residual(path)
     m, ds = params["m"], params["dim"] // params["m"]
     ksub = params["ksub"]
-    cents = _read_centroids(spark, path)
+    cents = ivf_store.read_centroids(spark, path)
     codebook = read_pq_codebook(spark, path)
     codes = read_ivfpq_codes(spark, path)
-
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("p_v"),
-    ).withColumn("p_nrm", _norm(F.col("p_v")))
+    p = ivf_store.probe_frame(probes, id_col, vec_col)
 
     # per-probe ADC lookup table: lut[m][code] = round(<p_m, cw>, 6),
     # dense by construction (train_pq_codebook keeps empty codes)
@@ -746,18 +500,6 @@ def query_ivfpq_index(
         )
     )
 
-    p_scored = (
-        p.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "__sim", _dot(F.col("p_v"), F.col("c_vec")) / F.col("c_norm")
-        )
-        # residual encoding: the exact <probe, centroid> term added
-        # back to every candidate of this probed list (rounded 6 so
-        # the oracle derives the identical double)
-        .withColumn(
-            "cdot", F.round(_dot(F.col("p_v"), F.col("c_vec")), 6)
-        )
-    )
     n_probes = (
         _n_probes
         if _n_probes is not None
@@ -768,19 +510,17 @@ def query_ivfpq_index(
     # broadcast bound was calibrated for (ADVICE r12), so the bound is
     # tightened by the width ratio before hinting the lut side
     lut_row_weight = max(1, (m * ksub) // max(1, params["dim"]))
-    wp = W.partitionBy("probe_id").orderBy(F.desc("__sim"), F.asc("centroid_id"))
-    p_lists = (
-        p_scored.withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("probe_id", "p_nrm", "centroid_id", "cdot")
+    p_lists = ivf_store.nearest_lists(
+        p, cents, nprobe, ["probe_id", "p_nrm", "centroid_id", "cdot"],
+        # residual encoding: the exact <probe, centroid> term added
+        # back to every candidate of this probed list (rounded 6 so
+        # the oracle derives the identical double)
+        cdot=F.round(_dot(F.col("p_v"), F.col("c_vec")), 6),
+    ).join(
         # both sides are probe-cardinality-bounded BY CONTRACT; the
         # hint keeps AQE from sorting them into an SMJ (r10 lesson)
-        .join(
-            bounded_broadcast(
-                lut, n_probes, lut_row_weight, max_broadcast_probes
-            ),
-            "probe_id",
-        )
+        bounded_broadcast(lut, n_probes, lut_row_weight, max_broadcast_probes),
+        "probe_id",
     )
 
     adc = F.aggregate(
@@ -809,10 +549,7 @@ def query_ivfpq_index(
             ).alias("adc_sim"),
         )
     )
-    w = W.partitionBy("probe_id").orderBy(F.desc("adc_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return ivf_store.top_k(scored, "adc_sim", k)
 
 
 def query_ivfpq_index_refined(
@@ -851,10 +588,7 @@ def query_ivfpq_index_refined(
     ``max_broadcast_probes`` like every probe-side contract hint;
     the corpus fetch is a broadcast semi-join, never a corpus
     shuffle."""
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("p_v"),
-    ).withColumn("p_nrm", _norm(F.col("p_v")))
+    p = ivf_store.probe_frame(probes, id_col, vec_col)
     # ONE capped count job decides every probe-side hint below AND
     # inside the ADC shortlist call (shared via _n_probes)
     n_probes = capped_probe_count(p, max_broadcast_probes)
@@ -893,9 +627,4 @@ def query_ivfpq_index_refined(
             ).alias("cosine_sim"),
         )
     )
-    w = W.partitionBy("probe_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return ivf_store.top_k(cand, "cosine_sim", k)

@@ -490,12 +490,13 @@ def incremental_semantic_pairs(
     scan; candidate volume is Σ_c |store_c|·|batch_c| — linear in the
     store for a fixed batch. The failure mode is the same as batch
     SemDeDup: a skewed giant cluster (grow nlist; rebuild)."""
-    from .ann_index import _stored_dim, read_ivf_centroids, read_ivf_lists
+    from .ann_index import LAYOUT, read_ivf_centroids, read_ivf_lists
     from .dedup import _reuse
+    from .ivf_store import stored_dim
 
     spark = new_vecs.sparkSession
     cents = read_ivf_centroids(spark, path)
-    sdim = _stored_dim(path)
+    sdim = stored_dim(LAYOUT, path)
     batch = _reuse(
         _nearest_centroid(
             new_vecs.select(

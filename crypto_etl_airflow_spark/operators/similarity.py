@@ -1098,33 +1098,19 @@ def cosine_topk_ivf(
     nprobe (vs num_tables/planes for the LSH variant).
 
     Same output schema as the brute-force baseline."""
+    from .ivf_store import assign, nearest_lists, probe_frame, top_k
+
     corpus = _widen(corpus)
     dim = _probe_dim(corpus, vec_col)
     cents = ivf_centroids(corpus, id_col, vec_col, nlist, dim=dim)
 
-    c_lists = _nearest_centroid(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("c_v"),
-        ),
-        cents,
-        "neighbor_id",
-        "c_v",
-        dim=dim,
-    ).withColumn("c_nrm", _norm(F.col("c_v")))
-
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("p_v"),
-    ).withColumn("p_nrm", _norm(F.col("p_v")))
-    p_scored = p.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", _dot(F.col("p_v"), F.col("c_vec")) / F.col("c_norm")
+    c_lists = assign(corpus, cents, id_col, vec_col, dim).withColumn(
+        "c_nrm", _norm(F.col("c_v"))
     )
-    wp = W.partitionBy("probe_id").orderBy(F.desc("__sim"), F.asc("centroid_id"))
-    p_lists = (
-        p_scored.withColumn("__rn", F.row_number().over(wp))
-        .filter(F.col("__rn") <= nprobe)
-        .select("probe_id", "p_v", "p_nrm", "centroid_id")
+
+    p = probe_frame(probes, id_col, vec_col)
+    p_lists = nearest_lists(
+        p, cents, nprobe, ["probe_id", "p_v", "p_nrm", "centroid_id"]
     )
 
     scored = (
@@ -1141,7 +1127,4 @@ def cosine_topk_ivf(
             ).alias("cosine_sim"),
         )
     )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return top_k(scored, "cosine_sim", k)

@@ -2420,8 +2420,8 @@ def similarity_topk_ivf_rebalanced(
     """The nlist re-dial in the certified path (VERDICT r10 item 3):
     build at a deliberately coarse nlist=4 (hot lists by
     construction), split every list above corpus/6 with
-    ``rebalance_ivf_index`` (deterministic two-seed split, staged
-    crash-ordered commit — operators/ann_index.py), then FULL-PROBE
+    ``rebalance_ivf_index`` (deterministic median split, staged
+    crash-ordered commit — operators/ivf_store.py), then FULL-PROBE
     query the rebalanced index. Certified against the brute-force
     oracle: full-probe answers are invariant under rebalance, which
     pins that no vector was lost, duplicated, or orphaned by the
@@ -2460,7 +2460,7 @@ def similarity_topk_ivf_maintained(
     lifecycle inside one certified path: build on the store slice
     (vec_id % 4 != 0), add the batch frozen, then
     ``delete_from_ivf_index`` the vec_id % 20 == 0 subset (targeted
-    partition rewrites — operators/ann_index.py) before answering
+    partition rewrites — operators/ivf_store.py) before answering
     probes. The oracle recomputes the frozen quantizer and restricts
     the inverted lists to the surviving ids, so a green row certifies
     delete semantics value-for-value, not just by unit test."""
@@ -3041,7 +3041,7 @@ def similarity_topk_ivfpq_maintained(
     lifecycle in one certified path: build on the store slice, add
     the batch frozen, ``delete_from_ivfpq_index`` the vec_id % 20 == 0
     subset (targeted partition rewrites of the coded lists — the
-    ann_index.py delete shape over ~16-byte rows), then answer
+    ivf_store.py delete over ~16-byte rows), then answer
     probes. The oracle restricts the coded lists to surviving ids
     under the same frozen quantizers, so delete semantics are
     value-certified, not just unit-tested. The post-lifecycle index

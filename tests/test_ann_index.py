@@ -372,53 +372,3 @@ def test_rebalance_splits_hot_lists_full_probe_invariant(spark, emb, tmp_path):
     assert after == brute
     # a threshold nothing exceeds is a no-op
     assert ann_index.rebalance_ivf_index(spark, path, max_list_size=10**9) == 0
-
-
-def test_rebalance_orphan_cleanup_and_partial_probe(spark, emb, tmp_path):
-    """Crash-window leftovers (a lists partition no centroid
-    references) are query-invisible and swept by the next rebalance;
-    partial-probe queries on the rebalanced index stay well-formed."""
-    import shutil as _sh
-
-    path = str(tmp_path / "idx")
-    ann_index.build_ivf_index(emb, path, nlist=4)
-    probes = emb.filter(F.col("vec_id") < 10)
-    total = emb.count()
-    ann_index.rebalance_ivf_index(spark, path, max_list_size=max(1, total // 6))
-    # plant an orphan: copy a live partition under a fake centroid id
-    parts = glob.glob(f"{path}/lists/centroid_id=*")
-    _sh.copytree(parts[0], f"{path}/lists/centroid_id=999999")
-    before = sorted(
-        tuple(r)
-        for r in ann_index.query_ivf_index(probes, path, k=3, nprobe=2).collect()
-    )
-    assert before  # orphan never probed: query well-formed
-    removed = ann_index._clean_orphan_partitions(spark, path)
-    assert removed == 1
-    assert not os.path.isdir(f"{path}/lists/centroid_id=999999")
-    after = sorted(
-        tuple(r)
-        for r in ann_index.query_ivf_index(probes, path, k=3, nprobe=2).collect()
-    )
-    assert after == before
-
-
-def test_centroids_swap_crash_heals_on_read(spark, emb, tmp_path):
-    """ADVICE r12: the rebalance commit point swaps the centroids
-    table; a crash between its two renames must heal on the next
-    centroid read (read_ivf_centroids), keeping query/add/rebalance
-    alive without manual repair."""
-    path = str(tmp_path / "ivf_crash")
-    ann_index.build_ivf_index(emb, path, nlist=8)
-    probes = emb.limit(3)
-    before = sorted(
-        (r.probe_id, r.neighbor_id)
-        for r in ann_index.query_ivf_index(probes, path, k=3).collect()
-    )
-    os.rename(f"{path}/centroids", f"{path}/.__aside.centroids")
-    after = sorted(
-        (r.probe_id, r.neighbor_id)
-        for r in ann_index.query_ivf_index(probes, path, k=3).collect()
-    )
-    assert after == before
-    assert os.path.isdir(f"{path}/centroids")

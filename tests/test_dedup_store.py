@@ -509,6 +509,28 @@ def test_shingle_crash_between_append_and_commit_heals(spark, tmp_path):
     assert seen_ids == {10, 11, 12, 13}
 
 
+def test_shingle_delete_counts_on_its_barrier_job(spark, tmp_path):
+    """The shingle-store delete takes its victim count from the
+    barrier's own job (``counted_barrier``), not from a second
+    ``count()`` over the checkpoint: a delete runs 29 jobs and its
+    no-op retry 8, where a separate count made them 31 and 9."""
+    path = str(tmp_path / "shingles")
+    docs = _df(spark, CONT_DOCS)
+    dedup_store.write_shingle_store(docs, path, n=3)
+    victims = docs.filter(docs.doc_id.isin(11, 13)).select("doc_id")
+    sc = spark.sparkContext
+    got = []
+    for i in range(2):
+        group = f"shingle-delete-{i}"
+        sc.setJobGroup(group, "shingle delete")
+        try:
+            n = dedup_store.delete_from_shingle_store(spark, path, victims)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got.append((n, len(sc.statusTracker().getJobIdsForGroup(group))))
+    assert got == [(2, 29), (0, 8)], got
+
+
 def test_shingle_delete_decrements_df_and_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "shingles")
     docs = _df(spark, CONT_DOCS)

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crypto_etl_airflow_spark.operators import pq
+from crypto_etl_airflow_spark.operators import ivf_store, pq
 from crypto_etl_airflow_spark.operators.similarity import (
     cosine_topk_bruteforce,
 )
@@ -343,7 +343,7 @@ def test_raw_encoded_store_refused_on_query_and_add(spark, emb, tmp_path):
 
     path = str(tmp_path / "pq_raw")
     pq.build_ivfpq_index(emb, path, nlist=8, m=8, ksub=16)
-    sc = pq._sidecar(path)
+    sc = ivf_store.sidecar_path(pq.LAYOUT, path)
     params = json.load(open(sc))
     params.pop("encoding")  # simulate a pre-r12 raw-encoded build
     json.dump(params, open(sc, "w"))
@@ -352,19 +352,3 @@ def test_raw_encoded_store_refused_on_query_and_add(spark, emb, tmp_path):
         pq.query_ivfpq_index(probes, path).collect()
     with pytest.raises(ValueError, match="residual"):
         pq.add_to_ivfpq_index(probes, path)
-
-
-def test_centroids_swap_crash_heals_on_read(spark, emb, tmp_path):
-    """ADVICE r12: a crash inside the rebalance commit point (between
-    rename-aside and rename-in of the centroids table) must heal on
-    the next centroid read, not fail every query until manual
-    repair."""
-    path = str(tmp_path / "pq_crash")
-    pq.build_ivfpq_index(emb, path, nlist=8, m=8, ksub=16)
-    probes = emb.limit(3)
-    before = _pairs(pq.query_ivfpq_index(probes, path, k=3))
-    # simulate the crash window: live centroids renamed aside only
-    os.rename(f"{path}/centroids", f"{path}/.__aside.centroids")
-    after = _pairs(pq.query_ivfpq_index(probes, path, k=3))
-    assert after == before
-    assert os.path.isdir(f"{path}/centroids")

@@ -21,7 +21,22 @@ BUCKET = "txlog-test"
 
 
 @pytest.fixture()
-def s3():
+def s3(monkeypatch):
+    # moto checks ``If-None-Match`` and stores the key in two separate
+    # steps of S3Response.put_object, so two racing threads can both
+    # pass the check; real S3 makes the conditional put atomic. One
+    # lock around moto's put restores that, so the race tests check
+    # the claim backend rather than the mock.
+    from moto.s3.responses import S3Response
+
+    lock = threading.Lock()
+    put_object = S3Response.put_object
+
+    def atomic_put_object(self):
+        with lock:
+            return put_object(self)
+
+    monkeypatch.setattr(S3Response, "put_object", atomic_put_object)
     with mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
         client.create_bucket(Bucket=BUCKET)

@@ -131,7 +131,9 @@ def main() -> None:
     from crypto_etl_airflow_spark.operators import (
         ann_index,
         dedup_store,
+        ivf_store,
         postings_store,
+        pq,
     )
     from crypto_etl_airflow_spark.operators.dedup import release_reuse_caches
     from crypto_etl_airflow_spark.session import (
@@ -170,17 +172,8 @@ def main() -> None:
         path = os.path.join(CACHE_ROOT, f"{op}_{scale}")
         ready = os.path.exists(os.path.join(path, "_READY"))
         if ready and op == "ivfpq":
-            import json
-
-            sidecar = os.path.join(path, "_ivfpq_index_params.json")
-            try:
-                with open(sidecar) as f:
-                    enc = json.load(f).get("encoding")
-            except OSError:
-                enc = None
-            if enc != "residual":
-                import shutil
-
+            params = ivf_store.read_params(pq.LAYOUT, path) or {}
+            if params.get("encoding") != "residual":
                 shutil.rmtree(path, ignore_errors=True)
                 ready = False
         return path, ready
@@ -378,8 +371,6 @@ def main() -> None:
     # refined query's exact stage stays fixed-size (kprime rows per
     # probe) while only the ADC scan grows with the store.
     if not only or "ivfpq" in only:
-        from crypto_etl_airflow_spark.operators import pq as pq_ops
-
         for scale in SCALES:
             tune(scale)
             emb = spark.read.parquet(f"{SCALES[scale]}/embeddings.parquet")
@@ -395,33 +386,33 @@ def main() -> None:
                 if os.path.isdir(path):
                     shutil.rmtree(path)  # half-built: rebuild
                 sec, _ = _timed(
-                    lambda: pq_ops.build_ivfpq_index(
+                    lambda: pq.build_ivfpq_index(
                         emb, path, nlist=16, m=8, ksub=16
                     )
                 )
                 record("ivfpq", scale, "build", sec)
                 mark_ready(path)
-            sec, n = _timed(lambda: pq_ops.add_to_ivfpq_index(add_batch, path))
+            sec, n = _timed(lambda: pq.add_to_ivfpq_index(add_batch, path))
             record("ivfpq", scale, "add" if n else "add_retry", sec)
             sec, _ = _timed(
-                lambda: pq_ops.delete_from_ivfpq_index(spark, path, doomed)
+                lambda: pq.delete_from_ivfpq_index(spark, path, doomed)
             )
             record("ivfpq", scale, "delete", sec)
-            out = pq_ops.query_ivfpq_index(probes, path, k=5, nprobe=4)
+            out = pq.query_ivfpq_index(probes, path, k=5, nprobe=4)
             sec, sig = _timed_count_sig(out)
             record("ivfpq", scale, "query_adc", sec)
             results["ivfpq"].setdefault("plan", {})[scale] = sig
-            outr = pq_ops.query_ivfpq_index_refined(
+            outr = pq.query_ivfpq_index_refined(
                 probes, path, emb, k=5, kprime=50, nprobe=4
             )
             sec, sig = _timed_count_sig(outr)
             record("ivfpq", scale, "query_refined", sec)
             results["ivfpq"].setdefault("plan_refined", {})[scale] = sig
             # restore the cached index to its pristine build state
-            pq_ops.delete_from_ivfpq_index(
+            pq.delete_from_ivfpq_index(
                 spark, path, add_batch.select("vec_id")
             )
-            pq_ops.add_to_ivfpq_index(
+            pq.add_to_ivfpq_index(
                 emb.join(doomed, "vec_id", "left_semi"), path
             )
             release_reuse_caches()
