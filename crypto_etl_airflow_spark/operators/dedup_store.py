@@ -60,16 +60,29 @@ def write_minhash_store(
     skipped — the ``upsert_append`` anti-join discipline, so ingest
     retries and overlapping batches cannot double-register a doc).
     Creates the store if absent. Returns rows appended."""
+    return _append_signatures(
+        minhash_signatures(docs, id_col, text_col, n, num_hashes, portable),
+        path, id_col, {"n": n, "num_hashes": num_hashes, "portable": portable},
+    )
+
+
+def _append_signatures(
+    sigs: DataFrame, path: str, id_col: str, params: dict | None,
+    sidecar: str = "_minhash_store_params.json",
+) -> int:
+    """Append ``sigs`` idempotently per id, creating the store on an
+    empty first batch, under the ``params`` its sidecar pins (None:
+    no tunables, no sidecar). Returns rows appended."""
     from .upsert import upsert_append
 
-    params = {"n": n, "num_hashes": num_hashes, "portable": portable}
-    _validate_store_params(path, params)
-    sigs = minhash_signatures(docs, id_col, text_col, n, num_hashes, portable)
+    if params is not None:
+        _validate_store_params(path, params, sidecar)
     written = upsert_append(
-        docs.sparkSession, sigs, path, keys=[id_col], allow_empty=True
+        sigs.sparkSession, sigs, path, keys=[id_col], allow_empty=True
     )
     _ensure_store_exists(sigs, path)
-    _record_store_params(path, params)
+    if params is not None:
+        _record_store_params(path, params, sidecar)
     return written
 
 
@@ -237,16 +250,11 @@ def write_fingerprint_store(
     steady state keeps NO text around for exact dedup. No parameter
     sidecar: the fingerprint definition has no tunables."""
     from ..functions.text import fingerprint
-    from .upsert import upsert_append
 
     fps = docs.select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint")
     )
-    written = upsert_append(
-        docs.sparkSession, fps, path, keys=[id_col], allow_empty=True
-    )
-    _ensure_store_exists(fps, path)
-    return written
+    return _append_signatures(fps, path, id_col, None)
 
 
 def read_fingerprint_store(spark: SparkSession, path: str) -> DataFrame:
@@ -312,17 +320,8 @@ def write_simhash_store(
     mixed-family stores would turn Hamming distances into noise, the
     same guard :func:`write_minhash_store` applies to (n, num_hashes,
     portable)."""
-    from .upsert import upsert_append
-
-    params = {"bits": bits}
-    _validate_store_params(path, params, _SIMHASH_SIDECAR)
     sims = (simhash64 if bits == 64 else simhash32)(docs, id_col, text_col)
-    written = upsert_append(
-        docs.sparkSession, sims, path, keys=[id_col], allow_empty=True
-    )
-    _ensure_store_exists(sims, path)
-    _record_store_params(path, params, _SIMHASH_SIDECAR)
-    return written
+    return _append_signatures(sims, path, id_col, {"bits": bits}, _SIMHASH_SIDECAR)
 
 
 def read_simhash_store(spark: SparkSession, path: str) -> DataFrame:

@@ -36,6 +36,7 @@ from ..sources.local import local_frame
 from ..sources.tables import load_table
 from .extensions import _STOPS as _EXT_STOPS
 from .extensions import _TOKS as _EXT_TOKS
+from .extensions import _coarse_quantizer_ctes, _cosine, _nearest_centroids
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -1501,56 +1502,17 @@ def filter_quality_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantic dedup (SemDeDup-style)
 # ---------------------------------------------------------------------------
 
-# DuckDB mirror of the deterministic IVF clustering through nearest-
-# centroid assignment (same CTE chain as _ivf_oracle in extensions.py);
-# train_where restricts quantizer TRAINING (seeds + refinement) while
-# assignment covers every vector — the frozen-quantizer store contract
 def _semdedup_clusters_sql(train_where: str | None = None) -> str:
-    train = f"WHERE {train_where}" if train_where else ""
-    train_and = f"WHERE v.{train_where}" if train_where else ""
-    return f"""
-    v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    seeds AS (
-        SELECT vec_id AS centroid_id, e AS c_vec
-        FROM v {train} ORDER BY vec_id LIMIT 16
-    ),
-    assign0 AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, s.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, s.c_vec)
-                                / sqrt(list_dot_product(s.c_vec, s.c_vec)) DESC,
-                                s.centroid_id) AS rn
-            FROM v, seeds s {train_and}
-        ) WHERE rn = 1
-    ),
-    comp AS (
-        SELECT a.centroid_id, j - 1 AS pos, round(avg(v.e[j]), 6) AS m
-        FROM assign0 a
-        JOIN v USING (vec_id), unnest(generate_series(1, len(v.e))) AS u(j)
-        GROUP BY 1, 2
-    ),
-    cents AS (
-        SELECT centroid_id, list(m ORDER BY pos) AS c_vec
-        FROM comp GROUP BY centroid_id
-    ),
-    clusters AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c
-        ) WHERE rn = 1
-    ),
+    """DuckDB mirror of operators/semdedup.py's clustering: the coarse
+    quantizer trained on the vectors passing ``train_where`` (the
+    frozen-quantizer store contract), ``clusters`` (vec_id,
+    centroid_id) assigning every vector, and the within-cluster
+    ``pairs`` (centroid_id, id_a, id_b, cosine_sim)."""
+    return f"""{_coarse_quantizer_ctes(train_where)},
+    clusters AS ({_nearest_centroids("cents")}),
     pairs AS (
         SELECT a.centroid_id, a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_dot_product(va.e, vb.e)
-                     / (sqrt(list_dot_product(va.e, va.e))
-                        * sqrt(list_dot_product(vb.e, vb.e))), 6) AS cosine_sim
+               {_cosine("va.e", "vb.e")} AS cosine_sim
         FROM clusters a
         JOIN clusters b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
         JOIN v va ON va.vec_id = a.vec_id

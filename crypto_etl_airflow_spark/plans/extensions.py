@@ -682,6 +682,145 @@ def _minhash_band_ctes(
     return ctes, key_eq
 
 
+# DuckDB fragments of the vector-family oracles: every flat, SQ8, PQ,
+# LSH and SemDeDup mirror is assembled from these, so the coarse
+# quantizer, the nearest-centroid rule, the cosine and the top-k tie
+# order each have one SQL form for every Spark operator they certify.
+
+#: Embeddings as DOUBLE lists ``v(vec_id, e)``.
+_V_CTE = "v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)"
+#: The training slice of the persisted indexes; the rest is the
+#: ingest batch, added under the frozen quantizer.
+_STORE_SLICE = "vec_id % 4 != 0"
+
+
+def _cosine(a: str, b: str, norm_b: str | None = None, rounded: bool = True) -> str:
+    """The fp64 cosine of the lists ``a`` and ``b`` in the operation
+    order of functions/vector.py::cosine; ``norm_b`` replaces b's
+    computed norm where a stored one is scored (the SQ8 lists).
+    Rounded to the 6 decimals both engines emit unless ``rounded`` is
+    False (the unrounded form gates thresholds)."""
+    norm_b = norm_b or f"sqrt(list_dot_product({b}, {b}))"
+    cos = (f"list_dot_product({a}, {b})"
+           f" / (sqrt(list_dot_product({a}, {a})) * {norm_b})")
+    return f"round({cos}, 6)" if rounded else cos
+
+
+def _topk(scored: str, score: str, k: int) -> str:
+    """The per-probe top-``k`` of ``scored`` (probe_id, neighbor_id,
+    ``score``): higher score first, ties to the lower neighbor_id, an
+    INT rank — the output contract of every Spark top-k operator."""
+    return f"""
+    SELECT probe_id, neighbor_id, {score}, CAST(rank AS INT) AS rank FROM (
+        SELECT *, row_number() OVER (PARTITION BY probe_id
+                                     ORDER BY {score} DESC, neighbor_id) AS rank
+        FROM {scored}
+    ) WHERE rank <= {k}"""
+
+
+def _nearest_centroids(cents: str, where: str = "", top: int = 1) -> str:
+    """(vec_id, centroid_id) of the ``top`` nearest centroids of
+    ``cents`` (centroid_id, c_vec) for each vector of ``v`` passing
+    ``where``: the argmax of <x, c>/|c| with the lowest-centroid
+    tiebreak of operators/similarity.py::_nearest_centroid."""
+    return f"""
+        SELECT vec_id, centroid_id FROM (
+            SELECT v.vec_id, c.centroid_id,
+                   row_number() OVER (
+                       PARTITION BY v.vec_id
+                       ORDER BY list_dot_product(v.e, c.c_vec)
+                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
+                                c.centroid_id) AS rn
+            FROM v, {cents} c {where}
+        ) WHERE rn <= {top}
+    """
+
+
+def _coarse_quantizer_ctes(train_where: str | None = None, nlist: int = 16) -> str:
+    """``v``, then the deterministic coarse quantizer of
+    operators/similarity.py::ivf_centroids as ``cents``
+    (centroid_id, c_vec): the lowest-id ``nlist`` vectors passing
+    ``train_where`` seed it, one k-means refinement over the same
+    vectors rounds every component mean to 6 decimals (identical
+    doubles in both engines from then on)."""
+    train = f"WHERE {train_where}" if train_where else ""
+    train_v = f"WHERE v.{train_where}" if train_where else ""
+    return f"""
+    {_V_CTE},
+    seeds AS (
+        SELECT vec_id AS centroid_id, e AS c_vec
+        FROM v {train} ORDER BY vec_id LIMIT {nlist}
+    ),
+    assign0 AS ({_nearest_centroids("seeds", train_v)}),
+    comp AS (
+        SELECT a.centroid_id, j - 1 AS pos, round(avg(v.e[j]), 6) AS m
+        FROM assign0 a
+        JOIN v USING (vec_id), unnest(generate_series(1, len(v.e))) AS u(j)
+        GROUP BY 1, 2
+    ),
+    cents AS (
+        SELECT centroid_id, list(m ORDER BY pos) AS c_vec
+        FROM comp GROUP BY centroid_id
+    )"""
+
+
+def _ivf_lists_ctes(
+    nlist: int, nprobe: int, train_where: str | None, lists_where: str | None
+) -> str:
+    """The coarse quantizer plus the probe structure every IVF rung
+    shares: ``clists`` (vec_id, centroid_id) holds the vectors passing
+    ``lists_where`` (deletes leave the lists, the quantizer stays
+    frozen) in their nearest list, ``plists`` the ``nprobe`` nearest
+    lists of each probe (vec_id < 50)."""
+    lists = f"WHERE v.{lists_where}" if lists_where else ""
+    return f"""{_coarse_quantizer_ctes(train_where, nlist)},
+    clists AS ({_nearest_centroids("cents", lists)}),
+    plists AS ({_nearest_centroids("cents", "WHERE v.vec_id < 50", nprobe)})"""
+
+
+#: SQ8 codes of operators/quantize.py as DuckDB expressions over a
+#: relation with the list ``e``: the per-vector range, and the
+#: reconstruction of component ``x`` (floor(x+0.5) and the clamp give
+#: identical IEEE doubles in both engines).
+_SQ8_RANGE = """list_min(e) AS mn,
+                   CASE WHEN list_max(e) > list_min(e)
+                        THEN (list_max(e) - list_min(e)) / 255.0
+                        ELSE 1.0 END AS scale"""
+_SQ8_RECON = "mn + LEAST(255, GREATEST(0, floor((x - mn) / scale + 0.5))) * scale"
+#: ``q`` (vec_id, recon, v_nrm): each vector's SQ8 reconstruction and
+#: its TRUE norm, as the SQ8 lists store them.
+_SQ8_Q_CTE = f"""
+    q AS (
+        SELECT vec_id, list_transform(e, x -> {_SQ8_RECON}) AS recon,
+               sqrt(list_dot_product(e, e)) AS v_nrm
+        FROM (SELECT vec_id, e, {_SQ8_RANGE} FROM v)
+    )"""
+
+
+def _rhp_bucket_ctes(num_planes: int, num_tables: int) -> str:
+    """``planes`` and ``buckets`` (vec_id, t, bucket) of
+    operators/similarity.py::rhp_bucket_rows over ``v``: the md5
+    dyadic-rational hyperplanes of ``hyperplane_components`` re-derived
+    in SQL (bit-identical doubles), one sign bit per plane."""
+    return f"""
+    planes AS (
+        SELECT t, i,
+               list((CAST(CONCAT('0x', substr(md5('rhp-' || t || '-' || i
+                                               || '-' || j), 1, 12)) AS BIGINT)
+                     % 2049 - 1024) / 1024.0 ORDER BY j) AS pw
+        FROM generate_series(0, {num_tables - 1}) tt(t),
+             generate_series(0, {num_planes - 1}) ii(i),
+             generate_series(0, 63) jj(j)
+        GROUP BY t, i
+    ),
+    buckets AS (
+        SELECT v.vec_id, pl.t,
+               sum(CASE WHEN list_dot_product(v.e, pl.pw) >= 0
+                        THEN (1 << pl.i) ELSE 0 END) AS bucket
+        FROM v, planes pl GROUP BY 1, 2
+    )"""
+
+
 def _minhash_oracle(
     n: int = 3, threshold: float = 0.8, num_hashes: int = 32, bands: int = 8
 ) -> str:
@@ -1181,28 +1320,17 @@ def dedup_incremental_simhash_maintained(
     )
 
 
-_COSINE_ORACLE_BASE = """
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-"""
-
-
 @register(
     "similarity_topk_bruteforce",
-    oracle=_COSINE_ORACLE_BASE
-    + """
-    , p AS (SELECT vec_id AS probe_id, e AS pe FROM v WHERE vec_id < 50),
+    oracle=f"""
+    WITH {_V_CTE},
     scored AS (
-        SELECT probe_id, c.vec_id AS neighbor_id,
-               round(list_dot_product(pe, c.e)
-                     / (sqrt(list_dot_product(pe, pe))
-                        * sqrt(list_dot_product(c.e, c.e))), 6) AS cosine_sim
-        FROM p JOIN v c ON c.vec_id != p.probe_id
+        SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+               {_cosine("p.e", "c.e")} AS cosine_sim
+        FROM v p JOIN v c ON c.vec_id != p.vec_id
+        WHERE p.vec_id < 50
     )
-    SELECT probe_id, neighbor_id, cosine_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY cosine_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
+    {_topk("scored", "cosine_sim", 5)}
     """,
     tags=("similarity", "extension"),
     bench=True,
@@ -1217,16 +1345,11 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_neardup_pairs",
-    oracle=_COSINE_ORACLE_BASE
-    + """
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e))
-                    * sqrt(list_dot_product(b.e, b.e))), 6) AS cosine_sim
+    oracle=f"""
+    WITH {_V_CTE}
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cosine("a.e", "b.e")} AS cosine_sim
     FROM v a JOIN v b ON a.vec_id < b.vec_id
-    WHERE list_dot_product(a.e, b.e)
-          / (sqrt(list_dot_product(a.e, a.e))
-             * sqrt(list_dot_product(b.e, b.e))) >= 0.45
+    WHERE {_cosine("a.e", "b.e", rounded=False)} >= 0.45
     """,
     tags=("similarity", "dedup", "extension"),
 )
@@ -1246,42 +1369,19 @@ def _lsh_oracle(k: int = 5, num_planes: int = 4, num_tables: int = 8) -> str:
     planes — then bucketing, multi-table candidate union, scoring and
     ranking are recomputed value-for-value."""
     return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    planes AS (
-        SELECT t, i,
-               list((CAST(CONCAT('0x', substr(md5('rhp-' || t || '-' || i
-                                               || '-' || j), 1, 12)) AS BIGINT)
-                     % 2049 - 1024) / 1024.0 ORDER BY j) AS pw
-        FROM generate_series(0, {num_tables - 1}) tt(t),
-             generate_series(0, {num_planes - 1}) ii(i),
-             generate_series(0, 63) jj(j)
-        GROUP BY t, i
-    ),
-    buckets AS (
-        SELECT v.vec_id, pl.t,
-               sum(CASE WHEN list_dot_product(v.e, pl.pw) >= 0
-                        THEN (1 << pl.i) ELSE 0 END) AS bucket
-        FROM v, planes pl GROUP BY 1, 2
-    ),
+    WITH {_V_CTE},{_rhp_bucket_ctes(num_planes, num_tables)},
     cand AS (
         SELECT DISTINCT p.vec_id AS probe_id, c.vec_id AS neighbor_id
         FROM buckets p JOIN buckets c ON p.t = c.t AND p.bucket = c.bucket
         WHERE p.vec_id < 50 AND p.vec_id != c.vec_id
     ),
     scored AS (
-        SELECT probe_id, neighbor_id,
-               round(list_dot_product(pe.e, ce.e)
-                     / (sqrt(list_dot_product(pe.e, pe.e))
-                        * sqrt(list_dot_product(ce.e, ce.e))), 6) AS cosine_sim
+        SELECT probe_id, neighbor_id, {_cosine("pe.e", "ce.e")} AS cosine_sim
         FROM cand
         JOIN v pe ON pe.vec_id = probe_id
         JOIN v ce ON ce.vec_id = neighbor_id
     )
-    SELECT probe_id, neighbor_id, cosine_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY cosine_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= {k}
+    {_topk("scored", "cosine_sim", k)}
     """
 
 
@@ -1297,48 +1397,27 @@ def _neardup_lsh_oracle(
     every component +0.05 → cosine ≈0.93) of the first 25 vectors —
     exact double arithmetic mirrored by the Spark builder, so the
     approximate pipeline certifies on NONZERO output."""
-    v_cte = "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings"
+    v = _V_CTE
     if planted:
-        v_cte = f"""
-        WITH base AS ({v_cte})
-        SELECT * FROM base
+        v = f"""v AS (
+        WITH {_V_CTE}
+        SELECT * FROM v
         UNION ALL
         SELECT vec_id + 100000, list_transform(e, x -> x + 0.05)
-        FROM base WHERE vec_id < 25
-        """
+        FROM v WHERE vec_id < 25
+    )"""
     return f"""
-    WITH v AS ({v_cte}),
-    planes AS (
-        SELECT t, i,
-               list((CAST(CONCAT('0x', substr(md5('rhp-' || t || '-' || i
-                                               || '-' || j), 1, 12)) AS BIGINT)
-                     % 2049 - 1024) / 1024.0 ORDER BY j) AS pw
-        FROM generate_series(0, {num_tables - 1}) tt(t),
-             generate_series(0, {num_planes - 1}) ii(i),
-             generate_series(0, 63) jj(j)
-        GROUP BY t, i
-    ),
-    buckets AS (
-        SELECT v.vec_id, pl.t,
-               sum(CASE WHEN list_dot_product(v.e, pl.pw) >= 0
-                        THEN (1 << pl.i) ELSE 0 END) AS bucket
-        FROM v, planes pl GROUP BY 1, 2
-    ),
+    WITH {v},{_rhp_bucket_ctes(num_planes, num_tables)},
     cand AS (
         SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
         FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket
         WHERE a.vec_id < b.vec_id
     )
-    SELECT id_a, id_b,
-           round(list_dot_product(va.e, vb.e)
-                 / (sqrt(list_dot_product(va.e, va.e))
-                    * sqrt(list_dot_product(vb.e, vb.e))), 6) AS cosine_sim
+    SELECT id_a, id_b, {_cosine("va.e", "vb.e")} AS cosine_sim
     FROM cand
     JOIN v va ON va.vec_id = id_a
     JOIN v vb ON vb.vec_id = id_b
-    WHERE list_dot_product(va.e, vb.e)
-          / (sqrt(list_dot_product(va.e, va.e))
-             * sqrt(list_dot_product(vb.e, vb.e))) >= {threshold}
+    WHERE {_cosine("va.e", "vb.e", rounded=False)} >= {threshold}
     """
 
 
@@ -2244,7 +2323,6 @@ def embedding_centroids_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_oracle(
     k: int = 5, nlist: int = 16, nprobe: int = 4,
-    train_mod: int | None = None,
     train_where: str | None = None,
     lists_where: str | None = None,
 ) -> str:
@@ -2253,89 +2331,27 @@ def _ivf_oracle(
     centroids, one k-means refinement whose per-component means are
     rounded to 6 decimals in BOTH engines (identical doubles from
     then on), nearest-list assignment with lowest-centroid tiebreak,
-    nprobe search, scoring, ranking — value-for-value. ``train_mod``
-    restricts quantizer TRAINING to vec_id % train_mod != 0 while
-    assignment covers every vector — the frozen-quantizer
-    build+add contract of the persisted index
-    (operators/ann_index.py); ``train_where`` takes an arbitrary
-    training predicate instead (e.g. the first arrival wave of the
-    streaming ingest form). ``lists_where`` restricts which vectors
-    remain IN the inverted lists (the delete-maintenance contract:
-    deleted ids leave the lists, the quantizer stays frozen, probes
-    still search everything)."""
-    pred = None
-    if train_mod is not None:
-        pred = f"vec_id % {train_mod} != 0"
-    if train_where is not None:
-        pred = train_where
-    train = f"WHERE {pred}" if pred else ""
-    train_and = f"WHERE v.{pred}" if pred else ""
-    lists_and = f"WHERE v.{lists_where}" if lists_where else ""
+    nprobe search, scoring, ranking — value-for-value.
+    ``train_where`` restricts quantizer TRAINING to the vectors it
+    passes while assignment covers every vector — the frozen-quantizer
+    build+add contract of the persisted index (operators/ann_index.py;
+    ``vec_id % 4 != 0`` is the store slice, ``vec_id % 3 = 0`` the
+    first arrival wave of the streaming ingest form). ``lists_where``
+    restricts which vectors remain IN the inverted lists (the
+    delete-maintenance contract: deleted ids leave the lists, the
+    quantizer stays frozen, probes still search everything)."""
     return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    seeds AS (
-        SELECT vec_id AS centroid_id, e AS c_vec
-        FROM v {train} ORDER BY vec_id LIMIT {nlist}
-    ),
-    assign0 AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, s.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, s.c_vec)
-                                / sqrt(list_dot_product(s.c_vec, s.c_vec)) DESC,
-                                s.centroid_id) AS rn
-            FROM v, seeds s {train_and}
-        ) WHERE rn = 1
-    ),
-    comp AS (
-        SELECT a.centroid_id, j - 1 AS pos, round(avg(v.e[j]), 6) AS m
-        FROM assign0 a
-        JOIN v USING (vec_id), unnest(generate_series(1, len(v.e))) AS u(j)
-        GROUP BY 1, 2
-    ),
-    cents AS (
-        SELECT centroid_id, list(m ORDER BY pos) AS c_vec
-        FROM comp GROUP BY centroid_id
-    ),
-    clists AS (
-        SELECT vec_id AS neighbor_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c {lists_and}
-        ) WHERE rn = 1
-    ),
-    plists AS (
-        SELECT vec_id AS probe_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c WHERE v.vec_id < 50
-        ) WHERE rn <= {nprobe}
-    ),
+    WITH {_ivf_lists_ctes(nlist, nprobe, train_where, lists_where)},
     scored AS (
-        SELECT p.probe_id, c.neighbor_id,
-               round(list_dot_product(pv.e, cv.e)
-                     / (sqrt(list_dot_product(pv.e, pv.e))
-                        * sqrt(list_dot_product(cv.e, cv.e))), 6) AS cosine_sim
+        SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+               {_cosine("pv.e", "cv.e")} AS cosine_sim
         FROM plists p
         JOIN clists c USING (centroid_id)
-        JOIN v pv ON pv.vec_id = p.probe_id
-        JOIN v cv ON cv.vec_id = c.neighbor_id
-        WHERE p.probe_id != c.neighbor_id
+        JOIN v pv ON pv.vec_id = p.vec_id
+        JOIN v cv ON cv.vec_id = c.vec_id
+        WHERE p.vec_id != c.vec_id
     )
-    SELECT probe_id, neighbor_id, cosine_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY cosine_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= {k}
+    {_topk("scored", "cosine_sim", k)}
     """
 
 
@@ -2358,7 +2374,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_topk_ivf_indexed",
-    oracle=_ivf_oracle(train_mod=4),
+    oracle=_ivf_oracle(train_where=_STORE_SLICE),
     tags=("similarity", "extension", "approx", "incremental"),
 )
 def similarity_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2396,21 +2412,15 @@ def similarity_topk_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the oracle is the plain brute-force top-k, with no knowledge
     # of the split geometry. A rebalance that lost, duplicated, or
     # mis-assigned one vector fails this hash.
-    oracle=_COSINE_ORACLE_BASE
-    + """
-    , p AS (SELECT vec_id AS probe_id, e AS pe FROM v WHERE vec_id < 20),
+    oracle=f"""
+    WITH {_V_CTE},
     scored AS (
-        SELECT probe_id, c.vec_id AS neighbor_id,
-               round(list_dot_product(pe, c.e)
-                     / (sqrt(list_dot_product(pe, pe))
-                        * sqrt(list_dot_product(c.e, c.e))), 6) AS cosine_sim
-        FROM p JOIN v c ON c.vec_id != p.probe_id
+        SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+               {_cosine("p.e", "c.e")} AS cosine_sim
+        FROM v p JOIN v c ON c.vec_id != p.vec_id
+        WHERE p.vec_id < 20
     )
-    SELECT probe_id, neighbor_id, cosine_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY cosine_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
+    {_topk("scored", "cosine_sim", 5)}
     """,
     tags=("similarity", "extension", "approx", "incremental"),
 )
@@ -2450,7 +2460,7 @@ def similarity_topk_ivf_rebalanced(
     # full lifecycle: train on the store slice, add the batch frozen,
     # DELETE a subset, query — the oracle assigns everything under the
     # frozen quantizer but keeps only non-deleted ids in the lists
-    oracle=_ivf_oracle(train_mod=4, lists_where="vec_id % 20 != 0"),
+    oracle=_ivf_oracle(train_where=_STORE_SLICE, lists_where="vec_id % 20 != 0"),
     tags=("similarity", "extension", "approx", "incremental"),
 )
 def similarity_topk_ivf_maintained(
@@ -2491,15 +2501,13 @@ def _ivfpq_oracle(
     m: int = 8,
     ksub: int = 16,
     ds: int = 8,
-    train_mod: int = 4,
-    train_where: str | None = None,
+    train_where: str = _STORE_SLICE,
     lists_where: str | None = None,
     refined_kprime: int | None = None,
 ) -> str:
     """DuckDB mirror of the FULL deterministic IVF-PQ pipeline
-    (operators/pq.py): the shared coarse quantizer CTEs (lowest-id
-    seeds, one rounded refinement — identical to ``_ivf_oracle``),
-    then RESIDUAL encoding (r12, the FAISS IVFPQ default): every
+    (operators/pq.py): the shared coarse quantizer and lists, then
+    RESIDUAL encoding (r12, the FAISS IVFPQ default): every
     vector's residual to its assigned coarse centroid is what the
     per-subspace codebooks train on and the codes quantize (lowest-id
     seed residual subvectors, code = seed-id rank, L2 assignment via
@@ -2511,13 +2519,9 @@ def _ivfpq_oracle(
     normalized by true RAW norms. ``refined_kprime``
     switches the output to the shortlist + exact re-rank form
     (``query_ivfpq_index_refined``): the top-kprime ADC shortlist
-    re-scored with exact cosine. ``train_where`` overrides the
-    train_mod predicate (e.g. the first arrival wave of the
-    streaming ingest form)."""
-    pred = train_where or f"vec_id % {train_mod} != 0"
-    train = f"WHERE {pred}"
-    train_and = f"WHERE v.{pred}"
-    lists_and = f"WHERE v.{lists_where}" if lists_where else ""
+    re-scored with exact cosine. ``train_where`` restricts coarse and
+    codebook TRAINING (the store slice by default; the first arrival
+    wave of the streaming ingest form)."""
     code_joins = "\n        ".join(
         f"JOIN codes cd{mm} ON cd{mm}.vec_id = c.neighbor_id"
         f" AND cd{mm}.m = {mm}\n        "
@@ -2528,97 +2532,35 @@ def _ivfpq_oracle(
     chain = "cd.cdot + (0.0 + " + " + ".join(
         f"l{mm}.ip" for mm in range(m)
     ) + ")"
-    final = f"""
-    SELECT probe_id, neighbor_id, adc_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY adc_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= {k}
+
+    def nearest_code(book: str, where: str = "") -> str:
+        # (vec_id, m, code): the L2-nearest code of each subvector
+        return f"""
+        SELECT vec_id, m, code FROM (
+            SELECT sv.vec_id, sv.m, b.code,
+                   row_number() OVER (
+                       PARTITION BY sv.vec_id, sv.m
+                       ORDER BY list_dot_product(b.c_vec, b.c_vec)
+                                - 2 * list_dot_product(sv.sv, b.c_vec),
+                                b.code) AS rn
+            FROM subv sv JOIN {book} b ON b.m = sv.m {where}
+        ) WHERE rn = 1
     """
+
+    final = _topk("scored", "adc_sim", k)
     if refined_kprime is not None:
         final = f"""
-    , short AS (
-        SELECT probe_id, neighbor_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY probe_id
-                                         ORDER BY adc_sim DESC, neighbor_id) AS rnk
-            FROM scored
-        ) WHERE rnk <= {refined_kprime}
-    ),
+    , short AS ({_topk("scored", "adc_sim", refined_kprime)}),
     rescored AS (
-        SELECT s.probe_id, s.neighbor_id,
-               round(list_dot_product(pv.e, nv.e)
-                     / (sqrt(list_dot_product(pv.e, pv.e))
-                        * sqrt(list_dot_product(nv.e, nv.e))), 6) AS cosine_sim
+        SELECT s.probe_id, s.neighbor_id, {_cosine("pv.e", "nv.e")} AS cosine_sim
         FROM short s
         JOIN v pv ON pv.vec_id = s.probe_id
         JOIN v nv ON nv.vec_id = s.neighbor_id
     )
-    SELECT probe_id, neighbor_id, cosine_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY cosine_sim DESC, neighbor_id) AS rank
-        FROM rescored
-    ) WHERE rank <= {k}
-    """
+    {_topk("rescored", "cosine_sim", k)}"""
     return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    seeds AS (
-        SELECT vec_id AS centroid_id, e AS c_vec
-        FROM v {train} ORDER BY vec_id LIMIT {nlist}
-    ),
-    assign0 AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, s.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, s.c_vec)
-                                / sqrt(list_dot_product(s.c_vec, s.c_vec)) DESC,
-                                s.centroid_id) AS rn
-            FROM v, seeds s {train_and}
-        ) WHERE rn = 1
-    ),
-    comp AS (
-        SELECT a.centroid_id, j - 1 AS pos, round(avg(v.e[j]), 6) AS mval
-        FROM assign0 a
-        JOIN v USING (vec_id), unnest(generate_series(1, len(v.e))) AS u(j)
-        GROUP BY 1, 2
-    ),
-    cents AS (
-        SELECT centroid_id, list(mval ORDER BY pos) AS c_vec
-        FROM comp GROUP BY centroid_id
-    ),
-    clists AS (
-        SELECT vec_id AS neighbor_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c {lists_and}
-        ) WHERE rn = 1
-    ),
-    plists AS (
-        SELECT vec_id AS probe_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c WHERE v.vec_id < 50
-        ) WHERE rn <= {nprobe}
-    ),
-    rassign AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c
-        ) WHERE rn = 1
-    ),
+    WITH {_ivf_lists_ctes(nlist, nprobe, train_where, lists_where)},
+    rassign AS ({_nearest_centroids("cents")}),
     resid AS (
         SELECT a.vec_id,
                list_transform(generate_series(1, len(v.e)),
@@ -2635,24 +2577,13 @@ def _ivfpq_oracle(
     pq_seed_ids AS (
         SELECT vec_id,
                CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-        FROM (SELECT vec_id FROM v {train} ORDER BY vec_id LIMIT {ksub})
+        FROM (SELECT vec_id FROM v WHERE {train_where} ORDER BY vec_id LIMIT {ksub})
     ),
     pq_seeds AS (
         SELECT s.m, p.code, s.sv AS c_vec
         FROM subv s JOIN pq_seed_ids p USING (vec_id)
     ),
-    passign AS (
-        SELECT vec_id, m, code FROM (
-            SELECT sv.vec_id, sv.m, ps.code,
-                   row_number() OVER (
-                       PARTITION BY sv.vec_id, sv.m
-                       ORDER BY list_dot_product(ps.c_vec, ps.c_vec)
-                                - 2 * list_dot_product(sv.sv, ps.c_vec),
-                                ps.code) AS rn
-            FROM subv sv JOIN pq_seeds ps ON ps.m = sv.m
-            WHERE sv.{pred}
-        ) WHERE rn = 1
-    ),
+    passign AS ({nearest_code("pq_seeds", f"WHERE sv.{train_where}")}),
     pcomp AS (
         SELECT a.m, a.code, j - 1 AS pos, round(avg(sv.sv[j]), 6) AS mval
         FROM passign a
@@ -2669,17 +2600,7 @@ def _ivfpq_oracle(
         FROM pq_seeds s
         LEFT JOIN pmeans r ON r.m = s.m AND r.code = s.code
     ),
-    codes AS (
-        SELECT vec_id, m, code FROM (
-            SELECT sv.vec_id, sv.m, cb.code,
-                   row_number() OVER (
-                       PARTITION BY sv.vec_id, sv.m
-                       ORDER BY list_dot_product(cb.c_vec, cb.c_vec)
-                                - 2 * list_dot_product(sv.sv, cb.c_vec),
-                                cb.code) AS rn
-            FROM subv sv JOIN codebook cb ON cb.m = sv.m
-        ) WHERE rn = 1
-    ),
+    codes AS ({nearest_code("codebook")}),
     vnorm AS (SELECT vec_id, sqrt(list_dot_product(e, e)) AS v_nrm FROM v),
     lut AS (
         SELECT p.vec_id AS probe_id, cb.m, cb.code,
@@ -2689,15 +2610,15 @@ def _ivfpq_oracle(
         FROM v p JOIN codebook cb ON p.vec_id < 50
     ),
     cand AS (
-        SELECT pl.probe_id, cl.neighbor_id, cl.centroid_id
+        SELECT pl.vec_id AS probe_id, cl.vec_id AS neighbor_id, cl.centroid_id
         FROM plists pl JOIN clists cl USING (centroid_id)
-        WHERE pl.probe_id != cl.neighbor_id
+        WHERE pl.vec_id != cl.vec_id
     ),
     cdots AS (
-        SELECT pl.probe_id, pl.centroid_id,
+        SELECT pl.vec_id AS probe_id, pl.centroid_id,
                round(list_dot_product(pv.e, ct.c_vec), 6) AS cdot
         FROM plists pl
-        JOIN v pv ON pv.vec_id = pl.probe_id
+        JOIN v pv ON pv.vec_id = pl.vec_id
         JOIN cents ct USING (centroid_id)
     ),
     scored AS (
@@ -2718,97 +2639,27 @@ def _ivfsq_oracle(
     k: int = 5,
     nlist: int = 16,
     nprobe: int = 4,
-    train_mod: int = 4,
     lists_where: str | None = None,
 ) -> str:
-    """DuckDB mirror of the IVF-SQ8 pipeline (operators/sq_index.py):
-    the shared coarse CTEs (identical to ``_ivf_oracle`` — coarse
-    assignment uses RAW vectors, quantization is storage-only), then
-    scoring against the int8 reconstruction ``mn + code·scale`` with
-    the TRUE stored norm. The quantization formula is the
-    already-certified operators/quantize.py arithmetic
+    """DuckDB mirror of the IVF-SQ8 pipeline (operators/sq_index.py),
+    trained on the store slice: the shared coarse quantizer and lists
+    (coarse assignment uses RAW vectors, quantization is
+    storage-only), then scoring against the int8 reconstruction
+    ``mn + code·scale`` with the TRUE stored norm. The quantization
+    formula is the already-certified operators/quantize.py arithmetic
     (floor(x+0.5), clamp, identical IEEE doubles in both engines)."""
-    train = f"WHERE vec_id % {train_mod} != 0"
-    train_and = f"WHERE v.vec_id % {train_mod} != 0"
-    lists_and = f"WHERE v.{lists_where}" if lists_where else ""
     return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    seeds AS (
-        SELECT vec_id AS centroid_id, e AS c_vec
-        FROM v {train} ORDER BY vec_id LIMIT {nlist}
-    ),
-    assign0 AS (
-        SELECT vec_id, centroid_id FROM (
-            SELECT v.vec_id, s.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, s.c_vec)
-                                / sqrt(list_dot_product(s.c_vec, s.c_vec)) DESC,
-                                s.centroid_id) AS rn
-            FROM v, seeds s {train_and}
-        ) WHERE rn = 1
-    ),
-    comp AS (
-        SELECT a.centroid_id, j - 1 AS pos, round(avg(v.e[j]), 6) AS mval
-        FROM assign0 a
-        JOIN v USING (vec_id), unnest(generate_series(1, len(v.e))) AS u(j)
-        GROUP BY 1, 2
-    ),
-    cents AS (
-        SELECT centroid_id, list(mval ORDER BY pos) AS c_vec
-        FROM comp GROUP BY centroid_id
-    ),
-    clists AS (
-        SELECT vec_id AS neighbor_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c {lists_and}
-        ) WHERE rn = 1
-    ),
-    plists AS (
-        SELECT vec_id AS probe_id, centroid_id FROM (
-            SELECT v.vec_id, c.centroid_id,
-                   row_number() OVER (
-                       PARTITION BY v.vec_id
-                       ORDER BY list_dot_product(v.e, c.c_vec)
-                                / sqrt(list_dot_product(c.c_vec, c.c_vec)) DESC,
-                                c.centroid_id) AS rn
-            FROM v, cents c WHERE v.vec_id < 50
-        ) WHERE rn <= {nprobe}
-    ),
-    q AS (
-        SELECT vec_id,
-               list_transform(e, x -> mn + LEAST(255, GREATEST(0,
-                   floor((x - mn) / scale + 0.5))) * scale) AS recon,
-               sqrt(list_dot_product(e, e)) AS v_nrm
-        FROM (
-            SELECT vec_id, e, list_min(e) AS mn,
-                   CASE WHEN list_max(e) > list_min(e)
-                        THEN (list_max(e) - list_min(e)) / 255.0
-                        ELSE 1.0 END AS scale
-            FROM v
-        )
-    ),
+    WITH {_ivf_lists_ctes(nlist, nprobe, _STORE_SLICE, lists_where)},{_SQ8_Q_CTE},
     scored AS (
-        SELECT p.probe_id, c.neighbor_id,
-               round(list_dot_product(pv.e, q.recon)
-                     / (sqrt(list_dot_product(pv.e, pv.e)) * q.v_nrm), 6)
-                   AS sq_sim
+        SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
+               {_cosine("pv.e", "q.recon", "q.v_nrm")} AS sq_sim
         FROM plists p
         JOIN clists c USING (centroid_id)
-        JOIN v pv ON pv.vec_id = p.probe_id
-        JOIN q ON q.vec_id = c.neighbor_id
-        WHERE p.probe_id != c.neighbor_id
+        JOIN v pv ON pv.vec_id = p.vec_id
+        JOIN q ON q.vec_id = c.vec_id
+        WHERE p.vec_id != c.vec_id
     )
-    SELECT probe_id, neighbor_id, sq_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY sq_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= {k}
+    {_topk("scored", "sq_sim", k)}
     """
 
 
@@ -2819,34 +2670,15 @@ def _ivfsq_oracle(
     # quantization is centroid-independent, so the oracle needs no
     # knowledge of the split geometry, and a row lost, duplicated,
     # or orphaned by the split fails the hash.
-    oracle="""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-    q AS (
-        SELECT vec_id,
-               list_transform(e, x -> mn + LEAST(255, GREATEST(0,
-                   floor((x - mn) / scale + 0.5))) * scale) AS recon,
-               sqrt(list_dot_product(e, e)) AS v_nrm
-        FROM (
-            SELECT vec_id, e, list_min(e) AS mn,
-                   CASE WHEN list_max(e) > list_min(e)
-                        THEN (list_max(e) - list_min(e)) / 255.0
-                        ELSE 1.0 END AS scale
-            FROM v
-        )
-    ),
+    oracle=f"""
+    WITH {_V_CTE},{_SQ8_Q_CTE},
     scored AS (
         SELECT p.vec_id AS probe_id, q.vec_id AS neighbor_id,
-               round(list_dot_product(p.e, q.recon)
-                     / (sqrt(list_dot_product(p.e, p.e)) * q.v_nrm), 6)
-                   AS sq_sim
+               {_cosine("p.e", "q.recon", "q.v_nrm")} AS sq_sim
         FROM v p JOIN q ON q.vec_id != p.vec_id
         WHERE p.vec_id < 20
     )
-    SELECT probe_id, neighbor_id, sq_sim, CAST(rank AS INT) AS rank FROM (
-        SELECT *, row_number() OVER (PARTITION BY probe_id
-                                     ORDER BY sq_sim DESC, neighbor_id) AS rank
-        FROM scored
-    ) WHERE rank <= 5
+    {_topk("scored", "sq_sim", 5)}
     """,
     tags=("similarity", "extension", "approx", "incremental"),
 )
@@ -2861,7 +2693,7 @@ def similarity_topk_ivfsq_rebalanced(
     reconstruction brute force exactly. The companion pytest pins
     before == after; this row pins after == ground truth under the
     driver's hash."""
-    from ..operators import sq_index
+    from ..operators import ivf_store, sq_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 20)
@@ -2874,7 +2706,7 @@ def similarity_topk_ivfsq_rebalanced(
         )
 
     path = _cached_store("sq_rebal", sf_dir, _build)
-    nl = spark.read.parquet(f"{path}/centroids").count()
+    nl = ivf_store.read_centroids(spark, path).count()
     return sq_index.query_ivfsq_index(probes, path, k=5, nprobe=nl)
 
 
@@ -3245,18 +3077,13 @@ def text_winnow_shared_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_quantize_error_by_label",
-    oracle="""
-    WITH v AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e
-               FROM embeddings),
-    p AS (SELECT vec_id, label, e, list_min(e) AS mn,
-                 CASE WHEN list_max(e) > list_min(e)
-                      THEN (list_max(e) - list_min(e)) / 255.0
-                      ELSE 1.0 END AS scale
-          FROM v),
+    oracle=f"""
+    WITH p AS (
+        SELECT label, e, {_SQ8_RANGE}
+        FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+    ),
     comp AS (
-        SELECT label, scale,
-               abs(x - (mn + LEAST(255, GREATEST(0,
-                            floor((x - mn) / scale + 0.5))) * scale)) AS err
+        SELECT label, scale, abs(x - ({_SQ8_RECON})) AS err
         FROM p, unnest(e) AS u(x)
     )
     SELECT label, CAST(count(*) AS BIGINT) AS n_components,

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.substrings import remove_repeated_spans, repeated_window_spans
 from ..sources.local import local_frame
 from ..sources.tables import load_table
+from .extensions import _V_CTE, _cosine
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -362,15 +363,10 @@ _BM25_CTE = f"""
             FROM bm
         ) WHERE rn <= {HYBRID_N}
     ),
-    v AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
+    {_V_CTE},
     p AS (SELECT e AS pe FROM v WHERE vec_id = {HYBRID_PROBE_ID}),
     dscored AS (
-        SELECT c.vec_id AS doc_id,
-               round(list_dot_product(pe, c.e)
-                     / (sqrt(list_dot_product(pe, pe))
-                        * sqrt(list_dot_product(c.e, c.e))), 6) AS cosine_sim
+        SELECT c.vec_id AS doc_id, {_cosine("pe", "c.e")} AS cosine_sim
         FROM v c CROSS JOIN p WHERE c.vec_id != {HYBRID_PROBE_ID}
     ),
     dense AS (
