@@ -72,38 +72,21 @@ def _reuse(df: DataFrame) -> DataFrame:
     """Mark a multi-consumer intermediate (the shingle set feeds the
     doc-freq cap, per-doc sizes, and both self-join sides) for reuse.
 
-    ``persist(MEMORY_AND_DISK)`` rather than ``localCheckpoint``:
-    a localCheckpoint TRUNCATES lineage and stores its blocks on
-    executor storage, so one executor lost mid-query fails the whole
-    job at 1000-executor scale (nothing left to recompute from).
-    Persisted blocks keep their lineage — a lost block is recomputed
-    from the parquet scan, the job survives. Single-node cost is
-    identical (same blocks, same memory).
-
-    The LEVEL is posture, not policy: ``session.tune_execution``
-    publishes it per input size through ``REUSE_LEVEL_CONF`` —
-    MEMORY_AND_DISK in the tiny regime (spill-read is cheap,
-    cache-assist dominates), MEMORY_ONLY at or above
-    ``SMALL_INPUT_BYTES`` or at unknown scale, where the persisted
-    intermediates exceed storage memory by construction. The r16
-    ×100 A/B measured the disk tier as pure cost there: identical
-    tK legs level-vs-level on a fresh session (re-reading spill runs
-    no faster than recomputing the Arrow-kernel lineage), and in a
-    long session the accumulated spill made cached re-runs SLOWER
-    than uncached (corpus steady 178.8 s vs first 131.9 s).
-    MEMORY_ONLY caches the fitting fraction and recomputes the rest —
-    partition-granular, no executor-disk footprint.
+    ``persist`` rather than ``localCheckpoint``: a localCheckpoint
+    TRUNCATES lineage and stores its blocks on executor storage, so
+    one executor lost mid-query fails the whole job at 1000-executor
+    scale (nothing left to recompute from). Persisted blocks keep
+    their lineage — a lost block is recomputed from the parquet scan,
+    the job survives.
 
     The handle is tracked in ``_REUSE_HANDLES`` (locked, bounded —
     see above); callers that run many dedup queries in one session
     should still call :func:`release_reuse_caches` after each
     consuming action so blocks are freed promptly rather than at
     eviction."""
-    from crypto_etl_airflow_spark.session import REUSE_LEVEL_CONF
-
-    name = df.sparkSession.conf.get(REUSE_LEVEL_CONF, "MEMORY_AND_DISK")
-    level = getattr(StorageLevel, name, StorageLevel.MEMORY_AND_DISK)
-    df = df.persist(level)
+    # MEMORY_ONLY: the r16 ×100 A/B measured the disk tier as pure
+    # cost (re-reading spill ran no faster than recomputing lineage)
+    df = df.persist(StorageLevel.MEMORY_ONLY)
     with _REUSE_LOCK:
         _REUSE_HANDLES.append(df)
         evicted = _REUSE_HANDLES[:-_REUSE_MAX]
@@ -113,30 +96,14 @@ def _reuse(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Callables invoked by :func:`release_reuse_caches` — other modules
-#: register their own plan-reuse caches here (e.g. the assignment
-#: memo in operators/similarity.py) so ONE call releases every form
-#: of cross-call reuse the engine holds. Keeps the decade harness's
-#: "first regime" honest: clearing reuse clears ALL of it.
-_RELEASE_HOOKS: list = []
-
-
-def register_release_hook(fn) -> None:
-    if fn not in _RELEASE_HOOKS:
-        _RELEASE_HOOKS.append(fn)
-
-
 def release_reuse_caches() -> int:
     """Unpersist every intermediate cached by :func:`_reuse` since the
-    last call, and fire every registered release hook (plan-memo
-    caches in other modules). Safe to call any time AFTER the
-    consuming action (the returned DataFrames stay valid — they
-    recompute from lineage). Returns the number of handles released."""
+    last call. Safe to call any time AFTER the consuming action (the
+    returned DataFrames stay valid — they recompute from lineage).
+    Returns the number of handles released."""
     with _REUSE_LOCK:
         handles = _REUSE_HANDLES[:]
         _REUSE_HANDLES.clear()
-    for hook in _RELEASE_HOOKS:
-        hook()
     return sum(1 for df in handles if _safe_unpersist(df))
 
 # 31-bit Mersenne prime: (a*h + b) with a,h,b < 2^31 stays well inside

@@ -64,8 +64,8 @@ def assign_clusters(
 
     One guarded dimension probe serves BOTH assignment passes (seed
     assignment inside ivf_centroids + the final assignment), so the
-    Arrow kernels get their fixed dimension from a single (memoized)
-    head(1) job."""
+    Arrow kernels get their fixed dimension from a single head(1)
+    job."""
     from .similarity import _probe_dim
 
     if dim is None:

@@ -30,10 +30,6 @@ similar pair at angle θ is 1-(1-(1-θ/π)^planes)^tables).
 from __future__ import annotations
 
 import hashlib
-import itertools
-import threading
-import weakref
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
@@ -425,205 +421,10 @@ def _probe_dim(df: DataFrame, vec_col: str) -> int | None:
     The guard matters (ADVICE r14): ``F.size(NULL)`` is −1 under the
     legacy ``sizeOfNull``, and an unguarded ``int(-1)`` would unroll a
     ZERO-term dot product, silently scoring every vector 0.0 against
-    every centroid.
-
-    Memoized per (session, plan identity, vec_col) with the same key
-    machinery as the assignment memo — repeated same-session operator
-    calls over one corpus pay the head(1) job once, not per call
-    (VERDICT r15 noted the per-call probe; the memo's file-listing
-    component keeps a rewritten path from serving a stale answer)."""
-    sess = df.sparkSession
-    pk = _plan_key(df)
-    key = ("probe", pk, vec_col) if pk is not None else None
-    if key is not None:
-        with _MEMO_LOCK:
-            hit = _PROBE_MEMO.get(key)
-            if hit is not None and hit[0] is sess:
-                return hit[1]
+    every centroid."""
     head = df.select(F.size(F.col(vec_col)).alias("d")).head(1)
     d = head[0]["d"] if head else None
-    dim = int(d) if d is not None and d > 0 else None
-    if key is not None:
-        with _MEMO_LOCK:
-            _PROBE_MEMO[key] = (sess, dim)
-            while len(_PROBE_MEMO) > _PLAN_MEMO_MAX:
-                _PROBE_MEMO.popitem(last=False)
-    return dim
-
-
-# ---------------------------------------------------------------------
-# Cross-call reuse for kernel-bearing plans (VERDICT r15 item 2).
-#
-# Spark's CacheManager matches persisted plans by CANONICAL PLAN, and a
-# Python kernel (``mapInArrow``/``applyInArrow``) can never match across
-# builder calls: each call pickles a fresh closure, and PythonUDF
-# equality is function-instance equality. r15 measured the
-# consequence — every same-session re-run of a semdedup/IVF query
-# re-ran the whole assignment and every persisted
-# intermediate DOWNSTREAM of it (steady regime ×3.2→×5.6/decade
-# regressions). The fix is to memoize the assignment OUTPUT at the
-# Python layer: an identical logical request returns the SAME DataFrame
-# object, so the kernel subtree in every later consumer is the same JVM
-# function instance and downstream `_reuse` persists canonical-match
-# again.
-#
-# Key soundness: inputs are keyed by their CANONICALIZED analyzed plan
-# string (exprIds normalized — the same identity CacheManager uses,
-# with the same staleness semantics for externally-mutated files). A
-# canonical string that itself CONTAINS a Python-kernel node is
-# refused (None key → no memoization): two different closures print
-# identically there, so the string under-distinguishes — e.g.
-# assignment over the same corpus against nlist=16 vs nlist=32 seed
-# centroids yields the same MapInArrow canonical text. Memoized
-# OUTPUTS therefore carry a unique `_graft_plan_key` token that
-# downstream memo keys use INSTEAD of the canonical string, which is
-# what lets ivf_centroids → _nearest_centroid chains (whose cents plan
-# contains the seed-assignment kernel) stay memoizable without ever
-# trusting a kernel-bearing string.
-#
-# Entries are per-session (`is`-checked), bounded, and cleared by
-# dedup.release_reuse_caches() — so the decade harness's cache-cleared
-# "first regime" stays an honest single-pass measurement.
-_MEMO_LOCK = threading.Lock()
-#: serializes _plan_key's session-global maxToStringFields dance
-#: (own lock, not _MEMO_LOCK: non-reentrant, and the render is
-#: independent of memo-table access)
-_RENDER_LOCK = threading.Lock()
-_PLAN_MEMO: OrderedDict = OrderedDict()  # key -> (session, DataFrame)
-_PROBE_MEMO: OrderedDict = OrderedDict()  # key -> (session, dim|None)
-_PLAN_MEMO_MAX = 64
-_MEMO_SEQ = itertools.count()
-#: df object -> computed key ("" = refused); weak so the cache never
-#: pins a DataFrame past its natural lifetime
-_KEY_CACHE: "weakref.WeakKeyDictionary[DataFrame, str]" = (
-    weakref.WeakKeyDictionary()
-)
-_PY_PLAN_NODES = (
-    "MapInPandas",
-    "MapInArrow",
-    "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas",
-    "FlatMapGroupsInArrow",
-    "FlatMapCoGroupsInArrow",
-    "PythonUDF",
-    "ArrowEval",
-    "BatchEval",
-    # in-memory relations print SCHEMA but not DATA in canonical form
-    # — two different createDataFrame tables would collide
-    "LocalRelation",
-    "LogicalRDD",
-    "ExistingRDD",
-)
-
-
-def _plan_key(df: DataFrame) -> str | None:
-    """Stable identity for a memo-key component, or None (→ the
-    caller skips memoization).
-
-    The key is the canonicalized analyzed-plan string (structure,
-    filters, literals — exprIds normalized) PLUS a hash of
-    ``df.inputFiles()``: the canonical string alone does NOT name the
-    scanned location (``Relation [none#0L…] parquet`` — two tables
-    with one schema print identically), while the file listing names
-    the exact parquet parts. Because Spark writes unique part names,
-    a store path the engine REWRITES (index add/delete/compact)
-    produces a different listing and the stale entry silently misses
-    — the same freshness semantics as CacheManager-with-refresh. The
-    caveat that remains is an external writer overwriting a file IN
-    PLACE under the same name, which CacheManager misses too.
-
-    Tokens stamped by :func:`_memo_put` short-circuit everything: an
-    input that IS a memoized output is identified by its token, never
-    by its (kernel-bearing, under-distinguishing) plan string.
-
-    The computed key is cached per DataFrame OBJECT (weakly — the
-    parallel.py probe discipline): operators call this on the same
-    corpus df several times per build, and each canonical-string +
-    file-listing fetch is a py4j roundtrip (the r15 plan-build-latency
-    lesson)."""
-    token = getattr(df, "_graft_plan_key", None)
-    if token is not None:
-        return token
-    cached = _KEY_CACHE.get(df)
-    if cached is not None:
-        return cached or None  # "" sentinel = previously refused
-    try:
-        # tree rendering truncates long field lists at
-        # spark.sql.debug.maxToStringFields (default 25): two plans
-        # differing only inside a wide projection would both print
-        # "... N more fields" and COLLIDE. Raise the cap for the
-        # rendering (restored in finally — it only affects string
-        # rendering, never execution), and fold the full output
-        # schema json in as a second line of defense.
-        # the set/render/restore is a session-GLOBAL conf mutation:
-        # unlocked, two driver threads could interleave (one restores
-        # while the other renders → truncated string cached forever,
-        # or the raised cap leaks for the session). _RENDER_LOCK
-        # serializes the whole dance — driver-side and cheap.
-        conf = df.sparkSession.conf
-        _FIELDS_KEY = "spark.sql.debug.maxToStringFields"
-        with _RENDER_LOCK:
-            old = conf.get(_FIELDS_KEY, None)
-            conf.set(_FIELDS_KEY, "100000")
-            try:
-                s = (
-                    df._jdf.queryExecution()
-                    .analyzed()
-                    .canonicalized()
-                    .toString()
-                )
-            finally:
-                if old is None:
-                    conf.unset(_FIELDS_KEY)
-                else:
-                    conf.set(_FIELDS_KEY, old)
-        if any(m in s for m in _PY_PLAN_NODES):
-            _KEY_CACHE[df] = ""
-            return None
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        _KEY_CACHE[df] = ""
-        return None  # no identifiable storage behind the plan
-    h = hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
-    key = f"{h}:{df.schema.json()}:{s}"
-    _KEY_CACHE[df] = key
-    return key
-
-
-def _memo_get(key: tuple, session) -> DataFrame | None:
-    with _MEMO_LOCK:
-        hit = _PLAN_MEMO.get(key)
-        if hit is None:
-            return None
-        sess, df = hit
-        if sess is not session:  # stale entry from a replaced session
-            del _PLAN_MEMO[key]
-            return None
-        _PLAN_MEMO.move_to_end(key)
-        return df
-
-
-def _memo_put(key: tuple, session, df: DataFrame) -> DataFrame:
-    df._graft_plan_key = f"__graft_memo_{next(_MEMO_SEQ)}"
-    with _MEMO_LOCK:
-        _PLAN_MEMO[key] = (session, df)
-        _PLAN_MEMO.move_to_end(key)
-        while len(_PLAN_MEMO) > _PLAN_MEMO_MAX:
-            _PLAN_MEMO.popitem(last=False)
-    return df
-
-
-def _clear_plan_memo() -> None:
-    with _MEMO_LOCK:
-        _PLAN_MEMO.clear()
-        _PROBE_MEMO.clear()
-
-
-from .dedup import register_release_hook as _register_release_hook  # noqa: E402
-
-_register_release_hook(_clear_plan_memo)
+    return int(d) if d is not None and d > 0 else None
 
 
 def _nearest_centroid_expr(
@@ -760,18 +561,6 @@ def _nearest_centroid(
     if dim is None:
         return _nearest_centroid_expr(vecs, cents, id_col, vec_col)
 
-    # cross-call reuse (VERDICT r15 item 2): an identical logical
-    # request returns the SAME DataFrame object, restoring canonical-
-    # plan cache matching for everything downstream of the kernel
-    sess = vecs.sparkSession
-    memo_key = None
-    kv, kc = _plan_key(vecs), _plan_key(cents)
-    if kv is not None and kc is not None:
-        memo_key = ("assign", kv, kc, id_col, vec_col, int(dim))
-        hit = _memo_get(memo_key, sess)
-        if hit is not None:
-            return hit
-
     from pyspark.sql.types import StructField, StructType
 
     crows = cents.select("centroid_id", "c_vec", "c_norm").collect()
@@ -783,18 +572,14 @@ def _nearest_centroid(
     if not crows:
         # empty quantizer (empty-corpus build): assignment is empty,
         # exactly as the old inner join against an empty best table
-        empty = local_frame(sess, [], out_schema)
-        return (
-            _memo_put(memo_key, sess, empty) if memo_key else empty
-        )
+        return local_frame(vecs.sparkSession, [], out_schema)
     import numpy as _np
 
-    # driver-side numpy packing, NOT Python lists: a memoized
-    # assignment closure lives as long as the memo entry, and a
-    # list-of-lists form pins ~nlist·dim BOXED floats on the driver
-    # heap (~30+ MB at the decade point vs ~8 MB packed); the kernel
-    # also skips a per-task list→array conversion. A NULL/short
-    # centroid vector is a zeroed row flagged dead (scores −inf).
+    # driver-side numpy packing, NOT Python lists: for as long as the
+    # plan lives, its closure pins ~8 MB of packed doubles at the
+    # decade point rather than ~30+ MB of boxed floats, and the kernel
+    # skips a per-task list→array conversion. A NULL/short centroid
+    # vector is a zeroed row flagged dead (scores −inf).
     _nc = len(crows)
     C_arr = _np.zeros((_nc, dim), dtype=_np.float64)
     c_dead_arr = _np.zeros(_nc, dtype=bool)
@@ -996,8 +781,7 @@ def _nearest_centroid(
                 names=list(batch.schema.names) + ["centroid_id"],
             )
 
-    result = vecs.mapInArrow(assign, schema=out_schema)
-    return _memo_put(memo_key, sess, result) if memo_key else result
+    return vecs.mapInArrow(assign, schema=out_schema)
 
 
 def ivf_centroids(
@@ -1014,26 +798,9 @@ def ivf_centroids(
     Returns (centroid_id, c_vec, c_norm). Fully deterministic — no
     RNG, stable across runs/engines. ``dim``: see
     :func:`_nearest_centroid` — pass it when known so the seed
-    assignment runs with zero extra driver actions.
-
-    Memoized per (corpus plan, params, session): the result plan
-    contains the seed-assignment KERNEL, whose canonical form two
-    builder calls can never share — same-object reuse is what keeps
-    the persisted nlist-row table (and every downstream consumer's
-    cached blocks) matchable across calls in one session."""
+    assignment runs with zero extra driver actions."""
     if dim is None:
         dim = _probe_dim(corpus, vec_col)
-    sess = corpus.sparkSession
-    memo_key = None
-    kc = _plan_key(corpus)
-    if kc is not None:
-        memo_key = (
-            "ivfc", kc, id_col, vec_col, int(nlist),
-            -1 if dim is None else int(dim),
-        )
-        hit = _memo_get(memo_key, sess)
-        if hit is not None:
-            return hit
     seeds = (
         corpus.orderBy(F.asc(id_col))
         .limit(nlist)
@@ -1073,13 +840,11 @@ def ivf_centroids(
     # whole subplan (seed assignment + refinement = several corpus
     # scans), which r15 measured as ~half of SemDeDup's wall-clock.
     # The table is nlist × dim doubles (~8 MB at the decade point
-    # under nlist ∝ corpus), so the persist is free at EITHER posture
-    # level (always fits memory) and lineage survives block loss (the
-    # _reuse discipline).
+    # under nlist ∝ corpus), so the persist always fits memory and
+    # lineage survives block loss (the _reuse discipline).
     from .dedup import _reuse
 
-    out = _reuse(means)
-    return _memo_put(memo_key, sess, out) if memo_key else out
+    return _reuse(means)
 
 
 def cosine_topk_ivf(

@@ -742,7 +742,11 @@ def _coarse_quantizer_ctes(train_where: str | None = None, nlist: int = 16) -> s
     (centroid_id, c_vec): the lowest-id ``nlist`` vectors passing
     ``train_where`` seed it, one k-means refinement over the same
     vectors rounds every component mean to 6 decimals (identical
-    doubles in both engines from then on)."""
+    doubles in both engines from then on). ``cents`` is MATERIALIZED,
+    as are the lists and PQ tables built on it: each is read several
+    times, and DuckDB re-runs an inlined CTE per reference (the PQ
+    oracles took 12–18 s at sf0.001/sf0.01 inlined, 0.5–0.7 s
+    materialized)."""
     train = f"WHERE {train_where}" if train_where else ""
     train_v = f"WHERE v.{train_where}" if train_where else ""
     return f"""
@@ -758,7 +762,7 @@ def _coarse_quantizer_ctes(train_where: str | None = None, nlist: int = 16) -> s
         JOIN v USING (vec_id), unnest(generate_series(1, len(v.e))) AS u(j)
         GROUP BY 1, 2
     ),
-    cents AS (
+    cents AS MATERIALIZED (
         SELECT centroid_id, list(m ORDER BY pos) AS c_vec
         FROM comp GROUP BY centroid_id
     )"""
@@ -774,8 +778,8 @@ def _ivf_lists_ctes(
     lists of each probe (vec_id < 50)."""
     lists = f"WHERE v.{lists_where}" if lists_where else ""
     return f"""{_coarse_quantizer_ctes(train_where, nlist)},
-    clists AS ({_nearest_centroids("cents", lists)}),
-    plists AS ({_nearest_centroids("cents", "WHERE v.vec_id < 50", nprobe)})"""
+    clists AS MATERIALIZED ({_nearest_centroids("cents", lists)}),
+    plists AS MATERIALIZED ({_nearest_centroids("cents", "WHERE v.vec_id < 50", nprobe)})"""
 
 
 #: SQ8 codes of operators/quantize.py as DuckDB expressions over a
@@ -2569,7 +2573,7 @@ def _ivfpq_oracle(
         JOIN v USING (vec_id)
         JOIN cents ct USING (centroid_id)
     ),
-    subv AS (
+    subv AS MATERIALIZED (
         SELECT vec_id, mm AS m,
                list_slice(re, mm * {ds} + 1, (mm + 1) * {ds}) AS sv
         FROM resid, unnest(generate_series(0, {m - 1})) AS tt(mm)
@@ -2595,14 +2599,14 @@ def _ivfpq_oracle(
         SELECT m, code, list(mval ORDER BY pos) AS c_vec
         FROM pcomp GROUP BY m, code
     ),
-    codebook AS (
+    codebook AS MATERIALIZED (
         SELECT s.m, s.code, coalesce(r.c_vec, s.c_vec) AS c_vec
         FROM pq_seeds s
         LEFT JOIN pmeans r ON r.m = s.m AND r.code = s.code
     ),
-    codes AS ({nearest_code("codebook")}),
+    codes AS MATERIALIZED ({nearest_code("codebook")}),
     vnorm AS (SELECT vec_id, sqrt(list_dot_product(e, e)) AS v_nrm FROM v),
-    lut AS (
+    lut AS MATERIALIZED (
         SELECT p.vec_id AS probe_id, cb.m, cb.code,
                round(list_dot_product(
                    list_slice(p.e, cb.m * {ds} + 1, (cb.m + 1) * {ds}),

@@ -508,9 +508,9 @@ def _build_stages(
     # input. A single driver thread submits the branch up front and
     # the barrier jobs' straggler tails back-fill with embedding-side
     # work. Results are identical — the same DataFrame comes back,
-    # and the similarity/dedup memo layers are lock-guarded. r17
-    # measured this overlap 0.5 s faster than the inline build in two
-    # interleaved A/Bs, so it is the only path.
+    # and _reuse's handle list is lock-guarded. r17 measured this
+    # overlap 0.5 s faster than the inline build in two interleaved
+    # A/Bs, so it is the only path.
 
     def _semdedup_verdicts() -> DataFrame:
         return semdedup_keep(

@@ -54,36 +54,6 @@ MAX_SHUFFLE_PARTITIONS = 65536
 #: wins and is essential at 100 TB.
 SMALL_INPUT_BYTES = 64 * 1024 * 1024
 
-#: Session conf naming the StorageLevel ``operators/dedup._reuse``
-#: persists multi-consumer intermediates at (an engine conf key —
-#: Spark carries arbitrary session confs). Part of the size-aware
-#: posture because the right level flips with scale (see
-#: :func:`tune_execution`).
-REUSE_LEVEL_CONF = "spark.crypto_etl.reuse.storageLevel"
-
-#: At or above this input size (or unknown = 0), ``_reuse`` persists
-#: MEMORY_ONLY instead of MEMORY_AND_DISK — the SAME boundary as the
-#: AQE/partition regimes (``SMALL_INPUT_BYTES``), so the posture has
-#: exactly two regimes. The persisted intermediates (exploded
-#: shingle/token tables, semdedup assignments) run ~10–50× the
-#: compressed input, so past the tiny regime they exceed executor
-#: storage memory BY CONSTRUCTION and MEMORY_AND_DISK writes nearly
-#: the whole intermediate to executor disk. Measured r16 at ×100
-#: (112 MB compressed input, isolated A/B, fresh session per level):
-#: the disk tier buys NOTHING — tK_first 191.1 vs 192.5 s, tK_steady
-#: 134.0 vs 132.5 s (inside noise) — because re-reading spilled
-#: blocks runs at the same speed as recomputing the Arrow-kernel
-#: lineage. What the disk tier DOES do is accumulate: the r16
-#: full-session decade run (funnel's ×100 persists still spilled
-#: when the corpus query ran) measured corpus tK_steady 178.8 s vs
-#: tK_first 131.9 s — cache reads SLOWER than the uncached run.
-#: MEMORY_ONLY keeps the cache-assist for whatever fits, silently
-#: recomputes the rest, and never owns executor disk — the
-#: scale-safe default; the disk-backed level stays for tiny inputs
-#: where spill-read is cheap and cache-assist dominates
-#: repeated-analytics latency.
-REUSE_SPILL_INPUT_BYTES = SMALL_INPUT_BYTES
-
 #: Entries in Spark's LRU cache of compiled generated classes
 #: (``spark.sql.codegen.cache.maxEntries``, default 100). Sized to the
 #: engine's working sets, counted with :func:`codegen_stats` on 4
@@ -110,16 +80,6 @@ def codegen_stats(spark: SparkSession) -> tuple[int, float] | None:
     n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
     ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return int(n), ns / 1e6
-
-
-def reuse_level_for_bytes(n_bytes: int) -> str:
-    """The ``_reuse`` StorageLevel name for an input size — ONE
-    definition shared by :func:`tune_execution` and the decade bench
-    (a harness that re-derived it could silently measure a different
-    posture than production applies)."""
-    if 0 < n_bytes < REUSE_SPILL_INPUT_BYTES:
-        return "MEMORY_AND_DISK"
-    return "MEMORY_ONLY"  # large or unknown: drop, don't spill
 
 
 def shuffle_partitions_for_bytes(
@@ -186,9 +146,6 @@ def tune_execution(spark: SparkSession, *paths: str) -> dict:
       construction on a few-MB input). ON at or above the bound,
       where runtime re-planning (BHJ flips, skew splits, partition
       coalescing) is the thing that keeps 100 TB plans honest.
-    - ``REUSE_LEVEL_CONF`` — the StorageLevel for ``_reuse``
-      persists: disk-backed below ``REUSE_SPILL_INPUT_BYTES``,
-      MEMORY_ONLY at scale (see the constant's rationale).
 
     An input that stats as 0 bytes is UNKNOWN scale (remote FS /
     unreadable path — see :func:`shuffle_partitions_for_bytes`):
@@ -201,16 +158,9 @@ def tune_execution(spark: SparkSession, *paths: str) -> dict:
     n_bytes = input_dir_bytes(*paths)
     n = shuffle_partitions_for_bytes(n_bytes)
     adaptive = n_bytes == 0 or n_bytes >= SMALL_INPUT_BYTES
-    reuse_level = reuse_level_for_bytes(n_bytes)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     spark.conf.set("spark.sql.adaptive.enabled", str(adaptive).lower())
-    spark.conf.set(REUSE_LEVEL_CONF, reuse_level)
-    return {
-        "input_bytes": n_bytes,
-        "shuffle_partitions": n,
-        "adaptive": adaptive,
-        "reuse_level": reuse_level,
-    }
+    return {"input_bytes": n_bytes, "shuffle_partitions": n, "adaptive": adaptive}
 
 
 def get_spark(

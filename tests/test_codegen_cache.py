@@ -6,7 +6,6 @@ from crypto_etl_airflow_spark.operators.dedup import release_reuse_caches
 from crypto_etl_airflow_spark.plans.registry import all_specs
 from crypto_etl_airflow_spark.session import (
     CODEGEN_CACHE_ENTRIES,
-    REUSE_LEVEL_CONF,
     codegen_stats,
     tune_execution,
 )
@@ -44,11 +43,7 @@ def test_rerun_of_a_large_working_set_compiles_nothing(spark):
     names, and sometimes a plan (q20's), differ between runs, and those
     classes compile whatever the cache size."""
     specs = all_specs()
-    keys = (
-        "spark.sql.shuffle.partitions",
-        "spark.sql.adaptive.enabled",
-        REUSE_LEVEL_CONF,
-    )
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     saved = {k: spark.conf.get(k, None) for k in keys}
 
     def one_pass():

@@ -46,23 +46,8 @@ def test_tune_execution_small_local_input(spark):
     posture = tune_execution(spark, "/root/testdata/sf0.001")
     assert 0 < posture["input_bytes"] < SMALL_INPUT_BYTES
     assert posture["adaptive"] is False
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-
-
-def test_reuse_level_is_part_of_the_posture(spark):
-    from crypto_etl_airflow_spark.session import REUSE_LEVEL_CONF
-
-    # small local input: disk-backed persist (cache-assist regime)
-    p = tune_execution(spark, "/root/testdata/sf0.001")
-    assert p["reuse_level"] == "MEMORY_AND_DISK"
-    assert spark.conf.get(REUSE_LEVEL_CONF) == "MEMORY_AND_DISK"
-    # unknown scale: never spill — a 100 TB remote input must not
-    # round-trip its intermediates through one node's disk
-    p = tune_execution(spark, "/nonexistent/remote/table.parquet")
-    assert p["reuse_level"] == "MEMORY_ONLY"
-    assert spark.conf.get(REUSE_LEVEL_CONF) == "MEMORY_ONLY"
-    spark.conf.set(REUSE_LEVEL_CONF, "MEMORY_AND_DISK")
+    # only Spark's own two confs: no engine key rides in the session
+    assert not [k for k in spark.conf.getAll if k.startswith("spark.crypto_etl.")]
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
 
@@ -92,31 +77,15 @@ def test_query_map_writes_no_session_conf(spark):
         spark.conf.set("spark.sql.shuffle.partitions", "32")
 
 
-def test_reuse_respects_posture_level(spark):
+def test_reuse_persists_memory_only(spark):
     from pyspark import StorageLevel
 
     from crypto_etl_airflow_spark.operators.dedup import (
         _reuse,
         release_reuse_caches,
     )
-    from crypto_etl_airflow_spark.session import REUSE_LEVEL_CONF
 
-    df = spark.range(10)
     try:
-        spark.conf.set(REUSE_LEVEL_CONF, "MEMORY_ONLY")
-        assert _reuse(df).storageLevel == StorageLevel.MEMORY_ONLY
-        release_reuse_caches()
-        spark.conf.set(REUSE_LEVEL_CONF, "MEMORY_AND_DISK")
-        assert (
-            _reuse(spark.range(11)).storageLevel
-            == StorageLevel.MEMORY_AND_DISK
-        )
-        # an unrecognized name falls back to the disk-backed default
-        spark.conf.set(REUSE_LEVEL_CONF, "NO_SUCH_LEVEL")
-        assert (
-            _reuse(spark.range(12)).storageLevel
-            == StorageLevel.MEMORY_AND_DISK
-        )
+        assert _reuse(spark.range(10)).storageLevel == StorageLevel.MEMORY_ONLY
     finally:
         release_reuse_caches()
-        spark.conf.set(REUSE_LEVEL_CONF, "MEMORY_AND_DISK")

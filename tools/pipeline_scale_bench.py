@@ -159,14 +159,14 @@ def main() -> None:
     spark.read.parquet(f"{out}/embeddings.parquet").count()
 
     # REGIME-SPLIT protocol (r14). The pipeline's _reuse persists hit
-    # Spark's CacheManager BY CANONICAL PLAN, so the first builder
-    # call at a scale pays the true cost of the big intermediates
-    # (exploded token tables, semdedup assignment) and every later
-    # same-plan call silently reuses the cached blocks — measured at
-    # ×100: whichever query ran FIRST cost 606 s, every subsequent
-    # run (even the bigger corpus query) ~120 s. r13's single-regime
-    # numbers mixed the two. Each (builder, scale) cell is therefore
-    # measured twice from a declared cache state:
+    # Spark's CacheManager BY CANONICAL PLAN, so a later same-plan
+    # builder call can reuse blocks the first call cached. A persist
+    # downstream of a Python kernel never matches across calls (each
+    # call pickles a fresh closure), so only the kernel-free
+    # intermediates can be served. r13's single-regime numbers mixed
+    # the two regimes (measured at ×100 then: the FIRST query cost
+    # 606 s, every later one ~120 s). Each (builder, scale) cell is
+    # therefore measured twice from a declared cache state:
     #   first  — caches cleared; the true single-pass cost (what one
     #            production run over the corpus pays);
     #   steady — immediately after, same plan; the cache-assisted
