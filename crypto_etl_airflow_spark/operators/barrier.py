@@ -11,6 +11,9 @@ survive an executor loss. A ``checkpoint_dir`` takes a RELIABLE
 checkpoint written beneath that directory (typically the cluster's
 shared filesystem), which does. Both cut lineage equally; they differ
 only in fault posture and IO cost, never in values.
+
+``DataFrame.unpersist`` cannot free a barrier's blocks: they belong to
+the checkpointed RDD, not to the CacheManager. :func:`release` can.
 """
 
 from __future__ import annotations
@@ -25,6 +28,16 @@ def barrier(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
         df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Free the stored blocks of the checkpointed RDD behind a
+    :func:`barrier` frame, without waiting for their removal. ``df``
+    must be no longer read afterwards. A frame without a JVM plan
+    (Spark Connect) is left as is."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is not None:
+        jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def counted_barrier(

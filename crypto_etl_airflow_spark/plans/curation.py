@@ -1221,9 +1221,9 @@ def layout_zorder_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_learn_ctes(n_merges: int = 4) -> list[str]:
     """The shared learning-loop CTE chain (vocab → s0, then per round
     pair counts p_r → winner b_r → merged s_{r+1}) — DuckDB mirror of
-    operators/bpe.py::_learn_rules: deterministic top-1, merge applied
-    via a list_reduce fold with the identical leftmost non-overlapping
-    semantics."""
+    operators/bpe.py::learn_bpe_rules_scalable: deterministic top-1,
+    merge applied via a list_reduce fold with the identical leftmost
+    non-overlapping semantics."""
     ctes = ["""
     vocab AS (
         SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
@@ -1281,8 +1281,8 @@ def _bpe_tokenize_oracle(n_merges: int = 4) -> str:
     for r in range(n_merges):
         # LEFT JOIN ON TRUE: an EMPTY rule (pairs exhausted before
         # n_merges rounds) must leave documents untouched — a plain
-        # cross join would annihilate every row (engine mirror:
-        # operators/bpe.py::_apply_rule)
+        # cross join would annihilate every row (the engine's learner
+        # returns fewer rules instead)
         ctes.append(f"""
     t{r + 1} AS (
         SELECT t.doc_id, t.word,
@@ -1331,10 +1331,11 @@ def vocab_bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First 4 BPE merge rules learned from the corpus — tokenizer
     fitting as dataflow (operators/bpe.py): pair counts aggregate the
     word VOCABULARY (corpus-size-independent after the first pass),
-    each round's winner broadcasts back as a 1-row rule, merges apply
-    via an array fold with exact leftmost BPE semantics. The oracle
-    re-learns all 4 rounds in SQL (list_reduce fold), so the learned
-    rules AND their counts hash-match."""
+    each round's winner is collected to the driver and applied to the
+    next round's checkpointed vocabulary via an array fold with exact
+    leftmost BPE semantics; the rules come back as a local relation.
+    The oracle re-learns all 4 rounds in SQL (list_reduce fold), so
+    the learned rules AND their counts hash-match."""
     from ..operators.bpe import bpe_merge_rules
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1349,25 +1350,20 @@ def vocab_bpe_merge_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bpe_token_counts_scaled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The SCALE-path BPE application: learn the rules with the
-    certified dataflow learner, COLLECT them (tokenizer metadata —
-    kilobytes), and tokenize every document in one Arrow-batched
-    ``mapInPandas`` stage with constant plan depth
-    (operators/bpe.py::apply_bpe_rules). The dataflow twin
-    (``text_bpe_token_counts``) chains one broadcast join per rule —
-    right at n_merges=4, impossible at a production vocabulary's 30k
-    merges. Same oracle as the twin, so the driver certifies the
-    Python tokenizer's output value-for-value against DuckDB's
-    list_reduce fold."""
-    from ..operators.bpe import apply_bpe_rules, bpe_merge_rules
+    """The SCALE-path BPE application: learn the rules (collected to
+    the driver as tokenizer metadata — kilobytes) and tokenize every
+    document in one Arrow-batched ``mapInPandas`` stage
+    (operators/bpe.py::apply_bpe_rules), which runs each distinct word
+    once per task where the JVM-only twin (``text_bpe_token_counts``)
+    folds every rule over every word row. Same oracle as the twin, so
+    the driver certifies the Python tokenizer's output value-for-value
+    against DuckDB's list_reduce fold."""
+    from ..operators.bpe import apply_bpe_rules, learn_bpe_rules_scalable
 
     docs = load_table(spark, sf_dir, "documents")
-    rules = (
-        bpe_merge_rules(docs, "text", n_merges=4)
-        .orderBy("merge_rank")
-        .collect()
+    return apply_bpe_rules(
+        docs, learn_bpe_rules_scalable(docs, "text", 4), "doc_id", "text"
     )
-    return apply_bpe_rules(docs, rules, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,11 @@ def _df(spark, texts):
     )
 
 
+def _plan_lines(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return len(plan.splitlines())
+
+
 def test_hand_computed_merge_sequence(spark):
     # vocab: aaab x2, ab x1
     # round 0: (a,a)=4 beats (a,b)=3 → merge  [a,a,a,b]→[aa,a,b]
@@ -84,9 +89,38 @@ def test_token_counts_survive_exhausted_rules(spark):
     assert (r.n_words, r.n_chars, r.n_bpe_tokens) == (3, 10, 3)
 
 
+def test_token_counts_plan_size_is_constant(spark):
+    """The learned rules fold over each word in one ``F.aggregate``
+    over a literal array, so the optimized plan of bpe_token_counts has
+    the same size at any merge count."""
+    from .conftest import SF_SMOKE
+    from crypto_etl_airflow_spark.operators.bpe import bpe_token_counts
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    assert _plan_lines(bpe_token_counts(docs, n_merges=4)) == _plan_lines(
+        bpe_token_counts(docs, n_merges=8)
+    )
+
+
+def test_learn_releases_every_round_snapshot(spark):
+    """Every round's vocabulary checkpoint is released: the stored-RDD
+    count does not grow across a 16-round learn."""
+    from crypto_etl_airflow_spark.operators.bpe import learn_bpe_rules_scalable
+
+    def stored():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = stored()
+    rules = learn_bpe_rules_scalable(
+        _df(spark, ["abcdefghijklmnopqrstuvwxyz"]), n_merges=16
+    )
+    assert len(rules) == 16
+    assert stored() <= before
+
+
 def test_collected_rules_path_equals_dataflow(spark):
     """apply_bpe_rules (collected rules + one mapInPandas stage) must
-    produce row-identical output to the chained-join dataflow path —
+    produce row-identical output to the JVM-fold dataflow path —
     the property that licenses swapping it in at real vocab sizes."""
     from crypto_etl_airflow_spark.operators.bpe import (
         apply_bpe_rules,
@@ -151,7 +185,6 @@ def test_scalable_learner_production_merge_count(spark):
     from .conftest import SF_SMOKE
     from crypto_etl_airflow_spark.operators.bpe import (
         apply_bpe_rules,
-        bpe_merge_rules,
         learn_bpe_rules_scalable,
     )
 
@@ -175,25 +208,14 @@ def test_scalable_learner_production_merge_count(spark):
     assert len(rules) == 256
     assert [r.merge_rank for r in rules] == list(range(256))
 
-    # parity: first 8 merges equal the chained dataflow learner's
-    small = bpe_merge_rules(docs, n_merges=8).orderBy("merge_rank").collect()
-    assert [(r.left_sym, r.right_sym, r.pair_count) for r in rules[:8]] == [
-        (r.left_sym, r.right_sym, r.pair_count) for r in small
-    ]
-
     # constant-depth apply: the optimized plan must not grow with the
     # rule count (rules live in the UDF closure, not the plan)
-    def plan_lines(df):
-        return len(
-            df._jdf.queryExecution().optimizedPlan().toString().splitlines()
-        )
-
     few, many = apply_bpe_rules(docs, rules[:4]), apply_bpe_rules(docs, rules)
-    assert plan_lines(many) == plan_lines(few)
+    assert _plan_lines(many) == _plan_lines(few)
 
     # constant per-round learner cost: the last rounds must not cost
-    # materially more than the first (3x bound absorbs host noise;
-    # the chained learner's growing analysis time would blow past it)
+    # materially more than the first (3x bound absorbs host noise; a
+    # plan that grew per round would blow past it)
     first, last = timings[:64], timings[-64:]
     assert sum(last) / len(last) < 3 * (sum(first) / len(first)), (
         sum(first) / 64, sum(last) / 64,
